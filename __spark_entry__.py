@@ -449,11 +449,11 @@ WHERE user_id IS NOT NULL
 
 
 def q_validate_multischema(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full two-pass multi-schema runner (the NON-fused path): customers
-    failing their own schema check never record PK keys
-    (ValidatedJSONSchema.java:360-392), so events referencing them FK-fail;
-    events failing pass 1 are masked out of pass 2
-    (FairGTrackValidatorCli.java:276-315)."""
+    """Multi-schema PK→FK lifecycle on the runner's single-plan kernel (flat
+    keys, one uniqueness constraint per schema): customers failing their
+    own schema check never record PK keys (ValidatedJSONSchema.java:360-392),
+    so events referencing them FK-fail; events failing pass 1 are masked out
+    of pass 2 (FairGTrackValidatorCli.java:276-315)."""
     cust = _t(spark, sf_dir, "customer").select(
         F.concat(F.lit("u"), F.col("c_custkey").cast("string")).alias("source"),
         F.col("c_custkey").alias("ord"), "c_custkey", "c_acctbal",

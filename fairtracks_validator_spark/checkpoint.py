@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .plans.schema_compile import ValidationPlan
-from .runner import validate_corpus
+from .runner import _anti_on_identity, validate_corpus
 
 LINEAGE_SCHEMA = (
     "part_id int, rows_scanned long, violations long, wall_time_s double, "
@@ -295,24 +295,6 @@ class CheckpointedValidation:
         violations.unpersist()
         res.release()  # outputs committed; drop this batch's caches
         return {"processed": todo, "skipped": sorted(done), "wall_time_s": wall}
-
-
-def _anti_on_identity(
-    left: DataFrame, viol: DataFrame, source_col: str, ord_col: str
-) -> DataFrame:
-    """left_anti on the (source, ord) identity, NULL-SAFE on source: a
-    null-source doc's own violation rows must still mask it out of dup/FK
-    probing — plain equi-joins never match the null and the doc stays a
-    "survivor" (code-review r4; same class as the verdict pairing below)."""
-    f = viol.select(
-        F.col("source").alias("_asrc"), F.col("ord").alias("_aord")
-    ).distinct()
-    return left.join(
-        f,
-        left[source_col].eqNullSafe(f["_asrc"])
-        & (left[ord_col].cast("long") == f["_aord"]),
-        "left_anti",
-    )
 
 
 def _row_checks_only(plan: ValidationPlan) -> ValidationPlan:

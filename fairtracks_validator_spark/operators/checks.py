@@ -993,7 +993,7 @@ def check_entries(
     checks: list[Check], join_flags: dict[str, str] | None = None
 ) -> list[Column]:
     """(check_id, ok, message) structs for every check — the raw material of
-    both apply_checks and the fused single-scan runner path.
+    both apply_checks and the runner's single-scan kernel.
 
     ``message`` is gated on ¬ok (r6): passing entries never format their
     violation string — consumers only read messages of failing entries, and

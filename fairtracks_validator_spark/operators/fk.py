@@ -19,16 +19,20 @@ Spark shape: the hash-map probe IS a hash join — we run
 size-gated: an explicit ``F.broadcast()`` hint overrides
 ``autoBroadcastJoinThreshold`` unconditionally, so hinting a registry of
 unknown size would force-broadcast billions of keys and OOM the driver.
-Callers that KNOW the registry is small (the runner counts it once while
-settling J3 emptiness) pass ``broadcast_pk=True``; the default (``None``)
-adds no hint and lets AQE pick broadcast at runtime from the registry's
-actual shuffle-map size.
+Callers that KNOW the registry is small (the runner's two-pass path counts
+it once while settling J3 emptiness) pass ``broadcast_pk=True``; the default
+(``None``) adds no hint and lets AQE pick broadcast at runtime from the
+registry's actual shuffle-map size. The runner's single-plan kernel probes
+with an in-plan left join instead and shares the row builder
+(``fk_violation``), so both paths emit identical violation rows.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..functions.keys import is_flat_members
 
 
 VIOLATION_COLS = ["source", "ord", "schema_id", "check_id", "key_str", "reason", "description"]
@@ -50,6 +54,40 @@ def fk_keys(
     from .uniqueness import _doc_keys
 
     return _doc_keys(df, "fk", members, source_col, ord_col)
+
+
+# reason → reference message (module docstring); fk_violation() fills the
+# slots with (key, source, target) for fk_missing, else (target, source)
+_FK_MESSAGES = {
+    "fk_missing": "Unmatching FK (%s) in %s to schema %s",
+    "fk_no_docs": "No available documents from %s schema, required by %s",
+    "fk_no_schema": "No available schema %s , required by %s",
+}
+
+
+def fk_violation(
+    reason: str,
+    check_id: str,
+    target_schema_id: str,
+    key_str: Column | None,
+    source: Column,
+) -> list[Column]:
+    """``check_id, key_str, reason, description`` columns of one FK
+    violation — shared by ``fk_check`` and the runner's in-plan probes so
+    both paths emit byte-identical rows. Only ``fk_missing`` names a key;
+    J2/J3 rows carry a null ``key_str``."""
+    target = F.lit(target_schema_id)
+    if reason == "fk_missing":
+        args = [key_str, source, target]
+    else:
+        key_str = F.lit(None).cast("string")
+        args = [target, source]
+    return [
+        F.lit(check_id).alias("check_id"),
+        key_str.alias("key_str"),
+        F.lit(reason).alias("reason"),
+        F.format_string(_FK_MESSAGES[reason], *args).alias("description"),
+    ]
 
 
 def fk_check(
@@ -79,48 +117,28 @@ def fk_check(
     """
     probes = fk_keys(df, members, source_col, ord_col)
 
+    def per_doc(reason: str) -> DataFrame:
+        # J2/J3: one violation per document with ≥1 key. Flat members give
+        # at most one key per row, so the probe rows already are the
+        # documents — only fan-out keys need the distinct (and its shuffle).
+        docs = probes.select("source", "ord")
+        if not is_flat_members(members):
+            docs = docs.distinct()
+        return docs.select(
+            "source", "ord", F.lit(schema_id).alias("schema_id"),
+            *fk_violation(reason, check_id, target_schema_id, None, F.col("source")),
+        )
+
     if pk is None:
         # J2: FK decl to an unregistered schema — every doc with ≥1 key fails.
-        return (
-            probes.select("source", "ord")
-            .distinct()
-            .select(
-                "source",
-                "ord",
-                F.lit(schema_id).alias("schema_id"),
-                F.lit(check_id).alias("check_id"),
-                F.lit(None).cast("string").alias("key_str"),
-                F.lit("fk_no_schema").alias("reason"),
-                F.format_string(
-                    "No available schema %s , required by %s",
-                    F.lit(target_schema_id),
-                    F.col("source"),
-                ).alias("description"),
-            )
-        )
+        return per_doc("fk_no_schema")
 
     if pk_known_empty is None:
         pk_known_empty = pk.limit(1).count() == 0
 
     if pk_known_empty:
         # J3: target loaded but produced no keys — per-doc constant violation.
-        return (
-            probes.select("source", "ord")
-            .distinct()
-            .select(
-                "source",
-                "ord",
-                F.lit(schema_id).alias("schema_id"),
-                F.lit(check_id).alias("check_id"),
-                F.lit(None).cast("string").alias("key_str"),
-                F.lit("fk_no_docs").alias("reason"),
-                F.format_string(
-                    "No available documents from %s schema, required by %s",
-                    F.lit(target_schema_id),
-                    F.col("source"),
-                ).alias("description"),
-            )
-        )
+        return per_doc("fk_no_docs")
 
     pk_side = pk.select("key_str").distinct()
     if broadcast_pk:
@@ -132,16 +150,9 @@ def fk_check(
     # pre-filters the probe side map-side, so only likely-missing keys pay
     # the shuffle — the bloom-prefilter pattern without hand-rolled sketches.
     return probes.join(pk_side, "key_str", "left_anti").select(
-        "source",
-        "ord",
-        F.lit(schema_id).alias("schema_id"),
-        F.lit(check_id).alias("check_id"),
-        "key_str",
-        F.lit("fk_missing").alias("reason"),
-        F.format_string(
-            "Unmatching FK (%s) in %s to schema %s",
-            F.col("key_str"),
-            F.col("source"),
-            F.lit(target_schema_id),
-        ).alias("description"),
+        "source", "ord", F.lit(schema_id).alias("schema_id"),
+        *fk_violation(
+            "fk_missing", check_id, target_schema_id,
+            F.col("key_str"), F.col("source"),
+        ),
     )

@@ -1,36 +1,49 @@
 """Validation lifecycle: scan → pass 1 → pass 2 → verdicts/violations.
 
-Mirrors the reference two-pass lifecycle (``FairGTrackValidatorCli.java:225-362``)
-as five DataFrame programs instead of a per-document interpreter:
+Mirrors the reference two-pass lifecycle (``FairGTrackValidatorCli.java:225-362``):
 
-- pass 1 = vectorized predicate columns (schema checks) + one uniqueness
-  aggregation per constraint (``Validator.java:111-126``);
+- pass 1 = vectorized predicate columns (schema checks) + uniqueness per
+  constraint (``Validator.java:111-126``);
 - documents failing pass 1 are masked out of pass 2
   (``FairGTrackValidatorCli.java:276-315``) — and, subtly, schema-check
   failures abort *before* PK recording (``ValidatedJSONSchema.java:360-392``),
   so their keys never enter the registry;
-- pass 2 = FK anti-joins against the pass-1 PK registries
-  (``Validator.java:128-179``). The registry is complete before any probe —
-  same global two-phase structure as the reference, but each phase is a
-  parallel shuffle instead of a file loop.
+- pass 2 = FK probes against the completed pass-1 PK registries
+  (``Validator.java:128-179``).
 
-Scale notes: corpora are validated per schema_id (the discriminator column ≙
-``ValidableDoc.getJsonSchemaId``); each uniqueness constraint is one hash
-shuffle on its key string; PK registries are cached + broadcast into the FK
-anti-joins when small. Docs are scanned ONCE (the reference reads every file
+Two physical shapes implement it, chosen from the compiled plans alone:
+
+- **Kernel** (``_validate_kernel``): every plan has no join checks, at most
+  one uniqueness constraint with flat members, and only flat-member FKs —
+  the web-scale shape, and every corpus ``validate_routed`` sees in
+  practice. Each schema is ONE narrow projection plus (with a uniqueness
+  constraint) ONE key-only window; each FK is a left join of the
+  referencing stage against the target registry's distinct keys inside the
+  same plan (AQE picks broadcast or shuffle at runtime), and registry
+  emptiness (J3) is a one-row aggregate cross-joined in-plan. Verdicts,
+  violations, the wide one-row-per-document relation and the registries
+  are lazy projections of one plan: nothing is persisted and nothing runs
+  before the caller's sink. The registry is complete before any probe by
+  construction — the probe side joins the fully aggregated key set.
+- **Two-pass** (``_validate_two_pass``): join checks, more than one
+  uniqueness constraint per schema, or nested / array fan-out keys. Each
+  phase is its own DataFrame program over persisted intermediates, and
+  registries probed by an FK are counted once (J3 + broadcast sizing).
+
+Both scan each document once per action (the reference reads every file
 twice, ``FairGTrackValidatorCli.java:265,328``).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import reduce
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .operators.checks import apply_checks, checks_pass_predicate
-from .operators.fk import fk_check
+from .operators.fk import fk_check, fk_violation
 from .operators.uniqueness import uniqueness_check
 from .functions.keys import flat_key_string, is_flat_members
 from .plans.schema_compile import ValidationPlan
@@ -52,11 +65,11 @@ _WIDE_VIOLATION_DDL = (
 # AQE's runtime broadcast/sort-merge selection.
 BROADCAST_MAX_PK_KEYS = 5_000_000
 
-# fused-path uniqueness: when the corpus has at most this many DUPLICATED
-# keys (not total keys — near-unique url corpora have very few), resolve
-# first-writer-wins with a broadcast of the duplicate keys' first holders
-# instead of shuffling + sorting the entire verdict stream (see
-# ``_dup_candidate_firsts``). ~2M keys ≈ 200 MB broadcast, well under
+# kernel uniqueness under dup_strategy "auto": when the corpus has at most
+# this many DUPLICATED keys (not total keys — near-unique url corpora have
+# very few), resolve first-writer-wins with a broadcast of the duplicate
+# keys' first holders instead of shuffling + sorting the entire verdict
+# stream (see ``_dup_candidate_firsts``). ~2M keys ≈ 200 MB broadcast, well under
 # Spark's 8 GB broadcast-relation cap; beyond it the window path takes over.
 DUP_BROADCAST_MAX_KEYS = 2_000_000
 
@@ -67,9 +80,8 @@ class ValidationResult:
     violations: DataFrame  # VIOLATION_SCHEMA
     pk_registries: dict[tuple[str, str], DataFrame] = field(default_factory=dict)
     _persisted: list = field(default_factory=list, repr=False)
-    # one-row-per-doc verdict+nested-violations relation when the plan shape
-    # allowed building it without extra shuffles (fused single-schema path);
-    # None on the general multi-schema path (wide_verdicts() joins instead)
+    # one-row-per-doc verdict+nested-violations relation, built in-plan on
+    # the kernel path; None on the two-pass path (wide_verdicts() joins)
     wide: DataFrame | None = field(default=None, repr=False)
 
     def release(self) -> None:
@@ -132,9 +144,9 @@ class ValidationResult:
         (``sink_observed``). A 100 TB run materializes THIS relation once;
         the flat violations view is a lazy ``explode`` over it.
 
-        The fused single-schema path builds it inside the existing
-        scan+shuffle for free (``self.wide``). The general multi-schema
-        path reconstructs it from the two flat relations: group the
+        The kernel path builds it inside the existing scan+shuffle for free
+        (``self.wide``). The two-pass path reconstructs it from the two
+        flat relations: group the
         (output-sized) violations by document identity, left-join onto the
         verdicts — two extra output-sized shuffles, never a corpus rescan.
         """
@@ -377,7 +389,6 @@ def validate_corpus(
     source_col: str = "source",
     ord_col: str = "ord",
     seed_registries: dict[tuple[str, str], DataFrame] | None = None,
-    cache_narrow: bool = False,
     dup_strategy: str = "window",
 ) -> ValidationResult:
     """Validate a multi-schema corpus: ``{schema_id: (plan, df)}``.
@@ -389,51 +400,69 @@ def validate_corpus(
     (A4, root README.md:25-35 — ``sources.catalog.seed_pk_registry``), unioned
     into the corpus-derived registries before FK probing.
 
-    ``dup_strategy`` (fused single-schema path only): ``"window"`` (default)
-    resolves first-writer-wins with one hash shuffle + sort of the narrow
-    verdict stream; ``"auto"``/``"broadcast"`` probe the duplicate-key
-    population and, when it fits the broadcast gate, resolve map-only via a
-    candidate broadcast (``_dup_candidate_firsts``) with no corpus shuffle
-    at all. The window default is a MEASURED choice, not a shortcut: the
-    broadcast probe must re-scan the corpus once to ok-gate candidate
-    first-holders, and for document tables the verdict stream it would keep
-    off the wire is only ~1-2%% of the scanned bytes (40M-row pages table,
-    local[16]: probe scan 10.9 s vs the whole window reduce ≈ 10 s) — a
-    full re-read of a 100 TB table loses to shuffling 1-2 TB. Broadcast
-    wins when rows are narrow relative to the key (the shuffle approaches
-    scan size) or when shuffle capacity, not scan bandwidth, is the
-    cluster's binding constraint.
+    The plans alone pick the physical shape (module docstring): the
+    single-plan kernel when every plan has no join checks, at most one
+    uniqueness constraint with flat members, and only flat-member FKs;
+    otherwise the two-pass path.
+
+    ``dup_strategy`` (single-schema corpora on the kernel only):
+    ``"window"`` (default) resolves first-writer-wins with one hash shuffle
+    + sort of the narrow verdict stream; ``"auto"``/``"broadcast"`` probe
+    the duplicate-key population and, when it fits the broadcast gate,
+    resolve map-only via a candidate broadcast (``_dup_candidate_firsts``)
+    with no corpus shuffle at all. The window default is a MEASURED choice,
+    not a shortcut: the broadcast probe must re-scan the corpus once to
+    ok-gate candidate first-holders, and for document tables the verdict
+    stream it would keep off the wire is only ~1-2%% of the scanned bytes
+    (40M-row pages table, local[16]: probe scan 10.9 s vs the whole window
+    reduce ≈ 10 s) — a full re-read of a 100 TB table loses to shuffling
+    1-2 TB. Broadcast wins when rows are narrow relative to the key (the
+    shuffle approaches scan size) or when shuffle capacity, not scan
+    bandwidth, is the cluster's binding constraint.
     """
     if dup_strategy not in ("window", "auto", "broadcast"):
         raise ValueError(
             "dup_strategy must be 'window', 'auto' or 'broadcast', "
             f"got {dup_strategy!r}"
         )
-    spark = next(iter(corpus.values()))[1].sparkSession
-    empty_violations = spark.createDataFrame([], VIOLATION_SCHEMA)
-    persisted: list = []  # released by ValidationResult.release()
-
     # schema-drift alignment: plan-referenced paths must resolve (absent ⇒
     # typed null column ⇒ reference "property absent" semantics)
     corpus = {
         sid: (plan, align_to_plan(df, plan))
         for sid, (plan, df) in corpus.items()
     }
+    if all(_kernel_fits(plan) for plan, _ in corpus.values()):
+        return _validate_kernel(
+            corpus, source_col, ord_col, seed_registries or {},
+            dup_strategy if len(corpus) == 1 else "window",
+        )
+    return _validate_two_pass(corpus, source_col, ord_col, seed_registries)
 
-    # web-scale fast path: single schema, pure-Column checks, at most one
-    # flat-member uniqueness constraint, no FKs ⇒ ONE scan + ONE shuffle
-    if len(corpus) == 1 and not seed_registries:
-        schema_id, (plan, df) = next(iter(corpus.items()))
-        if (
-            not plan.join_checks
-            and not plan.fks
-            and len(plan.uniques) <= 1
-            and all(is_flat_members(u.members) for u in plan.uniques)
-        ):
-            return _validate_fused(
-                schema_id, plan, df, source_col, ord_col, empty_violations,
-                cache_narrow=cache_narrow, dup_strategy=dup_strategy,
-            )
+
+def _kernel_fits(plan: ValidationPlan) -> bool:
+    """The plan's checks, uniqueness and FK probes fit one narrow stage:
+    Column-only checks, ≤1 uniqueness constraint, one key per row."""
+    return (
+        not plan.join_checks
+        and len(plan.uniques) <= 1
+        and all(is_flat_members(u.members) for u in plan.uniques)
+        and all(is_flat_members(fk.members) for fk in plan.fks)
+    )
+
+
+def _validate_two_pass(
+    corpus: dict[str, tuple[ValidationPlan, DataFrame]],
+    source_col: str = "source",
+    ord_col: str = "ord",
+    seed_registries: dict[tuple[str, str], DataFrame] | None = None,
+) -> ValidationResult:
+    """The general lifecycle: pass 1 per schema over persisted violation
+    rows, then FK probes against counted, persisted registries. Serves join
+    checks, several uniqueness constraints per schema and nested / fan-out
+    keys (the cascade), and is the reference the kernel is tested against."""
+    spark = next(iter(corpus.values()))[1].sparkSession
+    empty_violations = spark.createDataFrame([], VIOLATION_SCHEMA)
+    persisted: list = []  # released by ValidationResult.release()
 
     all_p1_violations: list[DataFrame] = []
     pk_registries: dict[tuple[str, str], DataFrame] = {}
@@ -452,15 +481,9 @@ def validate_corpus(
             # pass-1 mask as a pure predicate — no anti-join, no shuffle
             survivors = df.where(checks_pass_predicate(plan.checks))
         else:
-            # violation rows are always aliased ("source", "ord") — rename
-            # BOTH back to the caller's column names before the anti-join
-            p1_failed = schema_viol.select(
-                F.col("source").alias(source_col), F.col("ord").alias(ord_col)
-            ).distinct()
-            survivors = df.join(p1_failed, [source_col, ord_col], "left_anti")
+            survivors = _anti_on_identity(df, schema_viol, source_col, ord_col)
 
         dup_violations: list[DataFrame] = [schema_viol]
-        dup_failed_docs: list[DataFrame] = []
         for uq in plan.uniques:
             res = uniqueness_check(
                 survivors, uq.check_id, uq.members, schema_id, source_col, ord_col
@@ -478,17 +501,13 @@ def validate_corpus(
                 pk = pk.unionByName(seed)  # SO2: seed ∪ corpus keys
             pk_registries[(schema_id, uq.check_id)] = pk
             dup_violations.append(res.violations)
-            dup_failed_docs.append(res.violations.select("source", "ord").distinct())
 
-        p1_viol = _union_all(dup_violations, empty_violations)
-        all_p1_violations.append(p1_viol)
-
-        # mask pass-1 failures out of pass 2 (schema failures AND dup failures)
+        all_p1_violations.append(_union_all(dup_violations))
+        # mask pass-1 failures out of pass 2 (schema failures AND dup
+        # failures), null-safe: a failed null-source doc must not probe
         masked = survivors
-        for d in dup_failed_docs:
-            rd = d.withColumnRenamed("ord", ord_col) if ord_col != "ord" else d
-            rd = rd.withColumnRenamed("source", source_col) if source_col != "source" else rd
-            masked = masked.join(rd, [source_col, ord_col], "left_anti")
+        for d in dup_violations[1:]:
+            masked = _anti_on_identity(masked, d, source_col, ord_col)
         pass2_docs[schema_id] = masked
 
     # seeds for registries with no corpus-side constraint (A4: the target
@@ -540,7 +559,7 @@ def validate_corpus(
     # corpus) and every downstream consumer (verdict join, counts, sinks)
     # would otherwise re-execute the full scan+shuffle pipeline per action.
     violations = _union_all(
-        all_p1_violations + all_p2_violations, empty_violations
+        [empty_violations, *all_p1_violations, *all_p2_violations]
     ).persist()
     persisted.append(violations)
 
@@ -585,6 +604,23 @@ def validate_corpus(
     )
 
 
+def _anti_on_identity(
+    left: DataFrame, viol: DataFrame, source_col: str, ord_col: str
+) -> DataFrame:
+    """``left`` minus the documents named by ``viol``'s (source, ord),
+    NULL-SAFE on both: plain equi-joins never match a null, so a failed
+    null-source doc would stay a "survivor" and be probed in pass 2."""
+    f = viol.select(
+        F.col("source").alias("_asrc"), F.col("ord").alias("_aord")
+    ).distinct()
+    return left.join(
+        f,
+        left[source_col].eqNullSafe(f["_asrc"])
+        & left[ord_col].cast("long").eqNullSafe(f["_aord"]),
+        "left_anti",
+    )
+
+
 def validate_routed(
     df: DataFrame,
     plans: dict[str, ValidationPlan],
@@ -592,7 +628,6 @@ def validate_routed(
     source_col: str = "source",
     ord_col: str = "ord",
     seed_registries: dict[tuple[str, str], DataFrame] | None = None,
-    cache_narrow: bool = False,
 ) -> ValidationResult:
     """Route a heterogeneous corpus by its discriminator column and validate.
 
@@ -601,67 +636,61 @@ def validate_routed(
     counts them in its run stats rather than dropping them
     (``FairGTrackValidatorCli.java:227-233``; skip semantics of
     ``ValidableDocUnmatchingSchemaException``, ``ValidatedJSONSchema.java:394-397``).
+    On the kernel path they are appended to the wide relation too, so the
+    observed sink writes it directly instead of regrouping violations.
     """
     from .sources.catalog import orphan_verdicts, route_corpus
 
     corpus, orphans = route_corpus(df, plans, schema_id_col)
-    res = validate_corpus(corpus, source_col, ord_col, seed_registries,
-                          cache_narrow=cache_narrow)
-    verdicts = res.verdicts.unionByName(orphan_verdicts(orphans))
-    violations = res.violations.unionByName(
-        orphans.select(*[c.split()[0] for c in VIOLATION_SCHEMA.split(", ")])
-    )
+    res = validate_corpus(corpus, source_col, ord_col, seed_registries)
+    orphan_v = orphan_verdicts(orphans)
+    wide = res.wide
+    if wide is not None:
+        wide = wide.unionByName(orphans.select(
+            "source", "ord", "schema_id",
+            F.lit(False).alias("validated"), F.lit("ignored").alias("status"),
+            F.array(
+                F.struct("check_id", "key_str", "reason", "description")
+            ).alias("violations"),
+        ))
     # carry the inner run's caches so release() on the routed result works
     # (code-review r4 — dropping them leaked every persisted relation)
     return ValidationResult(
-        verdicts=verdicts, violations=violations,
-        pk_registries=res.pk_registries, _persisted=res._persisted,
+        verdicts=res.verdicts.unionByName(orphan_v),
+        violations=res.violations.unionByName(
+            orphans.select(*[c.split()[0] for c in VIOLATION_SCHEMA.split(", ")])
+        ),
+        pk_registries=res.pk_registries, _persisted=res._persisted, wide=wide,
     )
 
 
-def _union_all(dfs: list[DataFrame], empty: DataFrame) -> DataFrame:
-    out = empty
-    for d in dfs:
-        out = out.unionByName(d)
-    return out
+def _union_all(dfs: list[DataFrame]) -> DataFrame:
+    return reduce(DataFrame.unionByName, dfs)
 
 
-def _validate_fused(
-    schema_id: str,
+def _schema_stage(
     plan: ValidationPlan,
     df: DataFrame,
     source_col: str,
     ord_col: str,
-    empty_violations: DataFrame,
-    cache_narrow: bool = False,
-    dup_strategy: str = "auto",
-) -> ValidationResult:
-    """Single-scan, single-shuffle validation (the 100 TB shape).
+    dup_strategy: str = "window",
+) -> tuple[DataFrame, list]:
+    """One schema's share of the kernel: a single narrow projection and, with
+    a uniqueness constraint, a single key-only window. Returns the stage and
+    any relations it persisted (``dup_strategy`` broadcast probes only).
 
-    One projection computes, per row: the all-ok verdict predicate, the
-    failed-check structs (built ONLY for failing rows), and the uniqueness
-    key (gated by all-ok — schema-failed docs never record keys,
-    ``ValidatedJSONSchema.java:360-392``). Rows without a key get a unique
-    surrogate so they ride the same shuffle without skewing a null bucket,
-    and first-writer-wins resolves in one window. The reference reads every
-    document twice (``FairGTrackValidatorCli.java:265,328``); this path scans
-    once — PER ACTION.
+    Stage columns, one row per document:
 
-    ``cache_narrow`` (code-review r4 — the old comment here wrongly claimed
-    shuffle-map reuse across sibling actions; each action builds its own
-    QueryExecution with fresh shuffle dependencies, so materializing
-    verdicts THEN violations re-executes the scan+shuffle): False (default)
-    leaves every output lazy. True persists the post-shuffle narrow
-    relation DISK_ONLY (~1% of input width) so each output reads the cache
-    instead of re-scanning the input; release via
-    ``ValidationResult.release()``. Measured trade at 4M pages rows on
-    local[8] (host-local parquet): lazy 7.96 s vs cached 9.62 s for
-    verdicts+violations — the cache WRITE costs more than recomputing a
-    cheap local scan, so the default stays False for single-node use. The
-    flag exists for the cluster shape it is named for: when the input is
-    remote object storage at 10^12 rows, scanning the full corpus once per
-    output dwarfs a 1%-width local spill, and callers materializing
-    several outputs should enable it.
+    - ``source``, ``ord``: the identity;
+    - ``_ok``: every row check passed;
+    - ``_fails``: the unfiltered (check_id, ok, message) entry array, null
+      for passing rows;
+    - ``_key``: the uniqueness key string, gated by ``_ok`` — schema-failed
+      docs never record keys (``ValidatedJSONSchema.java:360-392``) — null
+      without a constraint;
+    - ``_rn``: 1 for the first holder of its key (or a keyless row), 2 for
+      every later one; ``_first_source``: the first holder's source;
+    - ``_fk0`` … : each FK's key string, gated by ``_ok`` like ``_key``.
     """
     from pyspark.sql import Window
 
@@ -684,6 +713,7 @@ def _validate_fused(
         # at analysis (code-review r3) — no row checks means no fails
         fails = F.lit(None).cast(_entry_ddl)
     uq = plan.uniques[0] if plan.uniques else None
+    fk_names = [f"_fk{i}" for i in range(len(plan.fks))]
 
     cols = [
         F.col(source_col).alias("source"),
@@ -693,45 +723,20 @@ def _validate_fused(
     ]
     if uq is not None:
         cols.append(F.when(all_ok, flat_key_string(uq.members)).alias("_key"))
+    cols += [
+        F.when(all_ok, flat_key_string(fk.members)).alias(name)
+        for fk, name in zip(plan.fks, fk_names)
+    ]
     narrow = df.select(*cols)
-    persisted: list = []
-
-    # nested violation entries for the wide (single-sink) relation — same
-    # rows the flat `violations` view explodes to, kept on the document row
-    _empty_viol = F.array().cast(_WIDE_VIOLATION_DDL)
-    schema_fail_entries = F.coalesce(
-        F.transform(
-            F.filter(F.col("_fails"), lambda e: ~e.getField("ok")),
-            lambda e: F.struct(
-                e.getField("check_id").alias("check_id"),
-                F.lit(None).cast("string").alias("key_str"),
-                F.lit("schema").alias("reason"),
-                e.getField("message").alias("description"),
-            ),
-        ),
-        _empty_viol,
-    )
 
     if uq is None:
-        if cache_narrow:
-            narrow = narrow.persist(StorageLevel.DISK_ONLY)
-            persisted.append(narrow)
-        verdicts = narrow.select(
-            "source", "ord", F.lit(schema_id).alias("schema_id"),
-            F.col("_ok").alias("validated"),
-            F.when(F.col("_ok"), "ok").otherwise("failed").alias("status"),
-        )
-        violations = _explode_fails(narrow, schema_id)
-        wide = narrow.select(
-            "source", "ord", F.lit(schema_id).alias("schema_id"),
-            F.col("_ok").alias("validated"),
-            F.when(F.col("_ok"), "ok").otherwise("failed").alias("status"),
-            F.when(~F.col("_ok"), schema_fail_entries)
-            .otherwise(_empty_viol)
-            .alias("violations"),
-        )
-        return ValidationResult(verdicts=verdicts, violations=violations,
-                                _persisted=persisted, wide=wide)
+        return narrow.select(
+            "source", "ord", "_ok", "_fails",
+            F.lit(None).cast("string").alias("_key"),
+            F.lit(1).alias("_rn"),
+            F.lit(None).cast("string").alias("_first_source"),
+            *fk_names,
+        ), []
 
     # null-proof surrogate (code-review r4): F.concat null-propagates, so a
     # null source collapsed every no-key null-source row into ONE null
@@ -757,11 +762,10 @@ def _validate_fused(
             df, flat_key_string(uq.members), all_ok, source_col, ord_col
         )
     if firsts is not None:
-        persisted.append(firsts)
         row_os = F.struct(
             F.col("ord").cast("long").alias("o"), F.col("source").alias("s")
         )
-        shuffled = (
+        stage = (
             narrow.join(
                 F.broadcast(firsts), narrow["_key"] == firsts["_k"], "left"
             )
@@ -779,98 +783,219 @@ def _validate_fused(
                 F.coalesce(F.col("_first.s"), F.col("source")).alias(
                     "_first_source"
                 ),
+                *fk_names,
             )
         )
-    else:
-        # NOT persisted: caching a nested-array relation through the columnar
-        # cache builder is slower than recomputing, and Spark reuses the
-        # shuffle map outputs across actions on this lineage (skipped stages).
-        #
-        # Shape choices, both for the reduce stage's sort (the single most
-        # expensive step of the fused plan at 40M rows):
-        # - `_key` does not ride the shuffle: it equals `_k2` for keyed rows
-        #   and is only ever read for them (surrogate rows are rank 1 by
-        #   construction), so it is re-derived after the window from the
-        #   first byte (surrogates start with NUL, JSON key strings with
-        #   '[') — ~1/3 less shuffle volume.
-        # - rank via min(struct(ord, source)) over a KEY-ONLY window instead
-        #   of row_number over (key, ord, source): the sort key halves, and
-        #   rank no longer depends on intra-key sort stability (identical
-        #   (ord, source) identities tie as rank 1 instead of one of them
-        #   being arbitrarily blamed — same convention as the broadcast
-        #   path's comparison against the first holder).
-        w = Window.partitionBy("_k2")
-        row_os = F.struct(F.col("ord").alias("o"), F.col("source").alias("s"))
-        mn = F.min(row_os).over(w)
-        shuffled = (
-            narrow.withColumn("_k2", F.coalesce(F.col("_key"), surrogate))
-            .drop("_key")
-            .withColumn("_mn", mn)
-            .select(
-                "source", "ord", "_ok", "_fails",
-                F.when(
-                    F.substring("_k2", 1, 1) != "\x00", F.col("_k2")
-                ).alias("_key"),
-                F.when(row_os > F.col("_mn"), F.lit(2))
-                .otherwise(F.lit(1))
-                .alias("_rn"),
-                F.col("_mn.s").alias("_first_source"),
-            )
-        )
-    if cache_narrow:
-        shuffled = shuffled.persist(StorageLevel.DISK_ONLY)
-        persisted.append(shuffled)
+        return stage, [firsts]
 
-    verdicts = shuffled.select(
-        "source", "ord", F.lit(schema_id).alias("schema_id"),
-        (F.col("_ok") & (F.col("_rn") == 1)).alias("validated"),
-    ).withColumn("status", F.when(F.col("validated"), "ok").otherwise("failed"))
-    dup_viol = shuffled.where(F.col("_ok") & (F.col("_rn") > 1)).select(
-        "source", "ord",
-        F.lit(schema_id).alias("schema_id"),
-        F.lit(uq.check_id).alias("check_id"),
-        F.col("_key").alias("key_str"),
-        F.lit("dup_pk").alias("reason"),
-        F.format_string(
-            "Duplicate PK in %s and %s", F.col("_first_source"), F.col("source")
-        ).alias("description"),
+    # NOT persisted: caching a nested-array relation through the columnar
+    # cache builder is slower than recomputing, and Spark reuses the
+    # shuffle map outputs across actions on this lineage (skipped stages).
+    #
+    # Shape choices, both for the reduce stage's sort (the single most
+    # expensive step of the pages plan at 40M rows):
+    # - `_key` does not ride the shuffle: it equals `_k2` for keyed rows
+    #   and is only ever read for them (surrogate rows are rank 1 by
+    #   construction), so it is re-derived after the window from the
+    #   first byte (surrogates start with NUL, JSON key strings with
+    #   '[') — ~1/3 less shuffle volume.
+    # - rank via min(struct(ord, source)) over a KEY-ONLY window instead
+    #   of row_number over (key, ord, source): the sort key halves, and
+    #   rank no longer depends on intra-key sort stability (identical
+    #   (ord, source) identities tie as rank 1 instead of one of them
+    #   being arbitrarily blamed — same convention as the broadcast
+    #   path's comparison against the first holder).
+    w = Window.partitionBy("_k2")
+    row_os = F.struct(F.col("ord").alias("o"), F.col("source").alias("s"))
+    mn = F.min(row_os).over(w)
+    stage = (
+        narrow.withColumn("_k2", F.coalesce(F.col("_key"), surrogate))
+        .drop("_key")
+        .withColumn("_mn", mn)
+        .select(
+            "source", "ord", "_ok", "_fails",
+            F.when(
+                F.substring("_k2", 1, 1) != "\x00", F.col("_k2")
+            ).alias("_key"),
+            F.when(row_os > F.col("_mn"), F.lit(2))
+            .otherwise(F.lit(1))
+            .alias("_rn"),
+            F.col("_mn.s").alias("_first_source"),
+            *fk_names,
+        )
     )
-    violations = _explode_fails(shuffled, schema_id).unionByName(dup_viol)
-    dup_entry = F.array(
-        F.struct(
+    return stage, []
+
+
+def _validate_kernel(
+    corpus: dict[str, tuple[ValidationPlan, DataFrame]],
+    source_col: str,
+    ord_col: str,
+    seed_registries: dict[tuple[str, str], DataFrame],
+    dup_strategy: str,
+) -> ValidationResult:
+    """Every schema's stage, registry and FK probes in ONE lazy plan.
+
+    Registries are each stage's recorded rows (``_ok``, rank 1, keyed)
+    unioned with any seed. Each FK left-joins the referencing stage against
+    its target registry's distinct keys — the join consumes the fully
+    aggregated registry, so every probe sees the complete key set (the
+    reference's registry-before-probe order) — and AQE chooses broadcast or
+    shuffle from the registry's runtime size. J3 (empty registry) is a
+    one-row ``count > 0`` aggregate cross-joined in; J2 (target schema not
+    registered) and a target without that constraint are constants. Only
+    pass-2 documents (``_ok`` and rank 1) probe. Single schema, no FK, no
+    seed: exactly one scan and one shuffle — the web-scale pages plan. A
+    probed registry re-derives its schema's stage: column pruning narrows
+    it to the key, so its exchange is not shared with that schema's output.
+    """
+    persisted: list = []
+    stages: dict[str, DataFrame] = {}
+    registries: dict[tuple[str, str], DataFrame] = {}
+    for sid, (plan, df) in corpus.items():
+        stage, cached = _schema_stage(plan, df, source_col, ord_col, dup_strategy)
+        persisted += cached
+        stages[sid] = stage
+        if plan.uniques:
+            rkey = (sid, plan.uniques[0].check_id)
+            reg = stage.where(
+                F.col("_ok") & (F.col("_rn") == 1) & F.col("_key").isNotNull()
+            ).select(
+                F.lit(sid).alias("schema_id"),
+                F.lit(rkey[1]).alias("check_id"),
+                F.col("_key").alias("key_str"),
+                F.col("source").alias("first_source"),
+                F.col("ord").alias("first_ord"),
+            )
+            seed = seed_registries.get(rkey)
+            registries[rkey] = reg if seed is None else reg.unionByName(seed)
+    for rkey, seed in seed_registries.items():
+        registries.setdefault(rkey, seed)
+    registered = set(corpus) | {sid for sid, _ in seed_registries}
+
+    verdicts, violations, wide = [], [], []
+    for sid, (plan, _) in corpus.items():
+        probed, fk_entries = _probe_fks(stages[sid], plan, registries, registered)
+        v, x, w = _stage_outputs(probed, sid, plan, fk_entries)
+        verdicts.append(v)
+        violations.append(x)
+        wide.append(w)
+    return ValidationResult(
+        verdicts=_union_all(verdicts), violations=_union_all(violations),
+        pk_registries=registries, _persisted=persisted, wide=_union_all(wide),
+    )
+
+
+def _probe_fks(
+    stage: DataFrame,
+    plan: ValidationPlan,
+    registries: dict[tuple[str, str], DataFrame],
+    registered: set[str],
+) -> tuple[DataFrame, list]:
+    """Join each FK's target registry onto ``stage``; returns the joined
+    relation and one violation-entry Column per FK (null when the document
+    passes it)."""
+    pass2 = F.col("_ok") & (F.col("_rn") == 1)  # masked like the reference
+    entries = []
+    for i, fk in enumerate(plan.fks):
+        key = F.col(f"_fk{i}")
+        probe = pass2 & key.isNotNull()
+
+        def entry(reason: str, fk=fk, key=key):
+            return F.struct(*fk_violation(
+                reason, fk.check_id, fk.target_schema_id, key, F.col("source")
+            ))
+
+        rkey = (fk.target_schema_id, fk.target_check_id)
+        if fk.target_schema_id not in registered:
+            entries.append(F.when(probe, entry("fk_no_schema")))  # J2
+        elif rkey not in registries:
+            # registered target without that constraint records no keys (J3)
+            entries.append(F.when(probe, entry("fk_no_docs")))
+        else:
+            reg = registries[rkey]
+            hit, has = f"_hit{i}", f"_has{i}"
+            stage = stage.join(
+                reg.select(F.col("key_str").alias(hit)).distinct(),
+                key == F.col(hit), "left",
+            ).crossJoin(reg.agg((F.count(F.lit(1)) > 0).alias(has)))
+            entries.append(
+                F.when(probe & ~F.col(has), entry("fk_no_docs"))
+                .when(probe & F.col(hit).isNull(), entry("fk_missing"))
+            )
+    return stage, entries
+
+
+def _stage_outputs(
+    probed: DataFrame, schema_id: str, plan: ValidationPlan, fk_entries: list
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(verdicts, violations, wide) of one schema — projections of the
+    probed stage, plus the codegen explode of its check entries."""
+    uq = plan.uniques[0] if plan.uniques else None
+    fe = [f"_fe{i}" for i in range(len(fk_entries))]
+    probed = probed.select(
+        "source", "ord", "_ok", "_fails", "_key", "_rn", "_first_source",
+        *[e.alias(n) for e, n in zip(fk_entries, fe)],
+    )
+    validated = F.col("_ok") & (F.col("_rn") == 1)
+    for n in fe:
+        validated = validated & F.col(n).isNull()
+    status = F.when(validated, "ok").otherwise("failed")
+    sid = F.lit(schema_id).alias("schema_id")
+
+    verdicts = probed.select(
+        "source", "ord", sid, validated.alias("validated")
+    ).withColumn("status", F.when(F.col("validated"), "ok").otherwise("failed"))
+    dup_desc = F.format_string(
+        "Duplicate PK in %s and %s", F.col("_first_source"), F.col("source")
+    )
+    parts = [_explode_fails(probed, schema_id)]
+    if uq is not None:
+        parts.append(probed.where(F.col("_ok") & (F.col("_rn") > 1)).select(
+            "source", "ord", sid,
             F.lit(uq.check_id).alias("check_id"),
             F.col("_key").alias("key_str"),
             F.lit("dup_pk").alias("reason"),
-            F.format_string(
-                "Duplicate PK in %s and %s",
-                F.col("_first_source"), F.col("source"),
-            ).alias("description"),
-        )
+            dup_desc.alias("description"),
+        ))
+    parts += [
+        probed.where(F.col(n).isNotNull()).select("source", "ord", sid, f"{n}.*")
+        for n in fe
+    ]
+    violations = _union_all(parts)
+
+    # nested violation entries for the wide (single-sink) relation — same
+    # rows the flat `violations` view explodes to, kept on the document row
+    _empty_viol = F.array().cast(_WIDE_VIOLATION_DDL)
+    schema_fail_entries = F.coalesce(
+        F.transform(
+            F.filter(F.col("_fails"), lambda e: ~e.getField("ok")),
+            lambda e: F.struct(
+                e.getField("check_id").alias("check_id"),
+                F.lit(None).cast("string").alias("key_str"),
+                F.lit("schema").alias("reason"),
+                e.getField("message").alias("description"),
+            ),
+        ),
+        _empty_viol,
     )
-    wide = shuffled.select(
-        "source", "ord", F.lit(schema_id).alias("schema_id"),
-        (F.col("_ok") & (F.col("_rn") == 1)).alias("validated"),
-        F.when(F.col("_ok") & (F.col("_rn") == 1), "ok")
-        .otherwise("failed").alias("status"),
-        F.when(~F.col("_ok"), schema_fail_entries)
-        .when(F.col("_rn") > 1, dup_entry)
-        .otherwise(_empty_viol)
-        .alias("violations"),
+    nested = F.when(~F.col("_ok"), schema_fail_entries)
+    if uq is not None:
+        nested = nested.when(F.col("_rn") > 1, F.array(F.struct(
+            F.lit(uq.check_id).alias("check_id"),
+            F.col("_key").alias("key_str"),
+            F.lit("dup_pk").alias("reason"),
+            dup_desc.alias("description"),
+        )))
+    fk_arrays = [
+        F.when(F.col(n).isNotNull(), F.array(n)).otherwise(_empty_viol) for n in fe
+    ]
+    nested = nested.otherwise(F.concat(*fk_arrays) if fk_arrays else _empty_viol)
+    wide = probed.select(
+        "source", "ord", sid, validated.alias("validated"), status.alias("status"),
+        nested.alias("violations"),
     )
-    pk = shuffled.where(
-        F.col("_ok") & (F.col("_rn") == 1) & F.col("_key").isNotNull()
-    ).select(
-        F.lit(schema_id).alias("schema_id"),
-        F.lit(uq.check_id).alias("check_id"),
-        F.col("_key").alias("key_str"),
-        F.col("source").alias("first_source"),
-        F.col("ord").cast("long").alias("first_ord"),
-    )
-    return ValidationResult(
-        verdicts=verdicts, violations=violations,
-        pk_registries={(schema_id, uq.check_id): pk},
-        _persisted=persisted, wide=wide,
-    )
+    return verdicts, violations, wide
 
 
 def _dup_candidate_firsts(
@@ -881,7 +1006,7 @@ def _dup_candidate_firsts(
     ord_col: str,
     max_keys: int | None = None,
 ) -> DataFrame | None:
-    """Probe the duplicate-key population for the fused uniqueness check.
+    """Probe the duplicate-key population for the kernel's uniqueness check.
 
     Returns a PERSISTED ``(_k, _first)`` relation — one row per key string
     that has ≥2 check-passing holders, with the first holder's

@@ -114,8 +114,10 @@ def test_checkpoint_empty_partitions_complete(spark, tmp_path):
 
 
 def test_release_unpersists_caches(spark):
+    # a second uniqueness constraint keeps this on the two-pass path, the
+    # one that persists (the kernel caches nothing)
     plan = compile_schema(
-        {"$id": "r/1", "properties": {"v": {"type": "string"}},
+        {"$id": "r/1", "properties": {"v": {"type": "string", "unique": True}},
          "foreign_keys": [{"schema_id": "r/1", "members": ["v"]}],
          "primary_key": ["v"]}
     )
@@ -206,31 +208,6 @@ def test_streaming_colliding_doc_records_no_keys(spark, tmp_path):
     assert all(s != "C" for s, _ in rows), rows  # Y was never registered
 
 
-def test_cache_narrow_fused_outputs_and_release(spark):
-    """cache_narrow=True: fused-path outputs match the lazy path exactly
-    and the persisted narrow relation is released by release() (r4)."""
-    from fairtracks_validator_spark.plans.schema_compile import compile_schema
-    from fairtracks_validator_spark.runner import validate_corpus
-
-    df = spark.createDataFrame(
-        [("a", 1, "x"), ("b", 2, None), ("c", 3, "x"), ("c2", 4, "y")],
-        "source string, ord long, k string",
-    )
-    plan = compile_schema({
-        "$id": "cn/1", "required": ["k"], "primary_key": ["k"],
-        "properties": {"k": {"minLength": 1}},
-    })
-    lazy = validate_corpus({"cn/1": (plan, df)})
-    cached = validate_corpus({"cn/1": (plan, df)}, cache_narrow=True)
-    want_v = sorted(map(tuple, lazy.verdicts.collect()))
-    want_x = sorted(map(tuple, lazy.violations.collect()))
-    assert sorted(map(tuple, cached.verdicts.collect())) == want_v
-    assert sorted(map(tuple, cached.violations.collect())) == want_x
-    assert cached._persisted  # the narrow relation was cached...
-    cached.release()
-    assert not cached._persisted  # ...and release() dropped it
-
-
 def test_null_source_doc_fails_verdict_and_skips_probes(spark):
     """code-review r4: a null-source doc that fails a check must read
     validated=False (null-safe verdict join) — in both the generic and the
@@ -255,16 +232,19 @@ def test_null_source_doc_fails_verdict_and_skips_probes(spark):
     kinds = [r["check_id"] for r in res.violations.collect()]
     assert sorted(kinds) == ["required:k", "required:k"]  # no dup_pk rows
 
-    # generic path (FK forces it): same verdict expectation
-    plan2 = compile_schema({
-        "$id": "ns/2", "required": ["k"], "primary_key": ["k"],
-        "properties": {"k": {"minLength": 1}},
-        "foreign_keys": [{"schema_id": "ns/2", "members": ["k"]}],
-    })
-    res2 = validate_corpus({"ns/2": (plan2, df)})
-    v2 = {r["ord"]: r["validated"] for r in res2.verdicts.collect()}
-    assert v2[1] is False and v2[4] is False and v2[2] and v2[3]
-    res2.release()
+    # kernel with an in-plan FK probe, then the two-pass path (a second
+    # uniqueness constraint forces it): same verdict expectation
+    for extra in ({}, {"unique": True}):
+        plan2 = compile_schema({
+            "$id": "ns/2", "required": ["k"], "primary_key": ["k"],
+            "properties": {"k": {"minLength": 1, **extra}},
+            "foreign_keys": [{"schema_id": "ns/2", "members": ["k"]}],
+        })
+        res2 = validate_corpus({"ns/2": (plan2, df)})
+        assert (res2.wide is None) == bool(extra)  # the path under test
+        v2 = {r["ord"]: r["validated"] for r in res2.verdicts.collect()}
+        assert v2[1] is False and v2[4] is False and v2[2] and v2[3]
+        res2.release()
 
 
 def test_multischema_shared_identity_does_not_cross_flip(spark):
@@ -295,9 +275,10 @@ def test_routed_result_carries_persisted(spark):
         [("a", 1, "x/a", "k1"), ("b", 2, "x/a", "k1")],
         "source string, ord long, schema_id string, k string",
     )
+    # a second uniqueness constraint keeps this on the two-pass path
     plan = compile_schema({
         "$id": "x/a", "primary_key": ["k"],
-        "properties": {"k": {"minLength": 1}},
+        "properties": {"k": {"minLength": 1, "unique": True}},
         "foreign_keys": [{"schema_id": "x/a", "members": ["k"]}],
     })
     res = validate_routed(df, {"x/a": plan})
@@ -305,6 +286,59 @@ def test_routed_result_carries_persisted(spark):
     assert res._persisted  # FK-touched registry etc. are registered
     res.release()
     assert not res._persisted
+
+
+def test_routed_kernel_persists_nothing(spark):
+    """The flat-key FK corpus takes the single-plan kernel: nothing is
+    cached, release() is a no-op, and the outputs stay readable after it."""
+    from fairtracks_validator_spark.plans.schema_compile import compile_schema
+    from fairtracks_validator_spark.runner import validate_routed
+
+    df = spark.createDataFrame(
+        [("a", 1, "x/a", "k1"), ("b", 2, "x/a", "k1")],
+        "source string, ord long, schema_id string, k string",
+    )
+    plan = compile_schema({
+        "$id": "x/a", "primary_key": ["k"],
+        "properties": {"k": {"minLength": 1}},
+        "foreign_keys": [{"schema_id": "x/a", "members": ["k"]}],
+    })
+    res = validate_routed(df, {"x/a": plan})
+    assert res.wide is not None and res._persisted == []
+    before = sorted(map(tuple, res.violations.collect()))
+    res.release()
+    assert res._persisted == []
+    assert sorted(map(tuple, res.violations.collect())) == before
+    assert [r[5] for r in before] == ["dup_pk"]  # the reason column
+
+
+@pytest.mark.parametrize("two_pass", [False, True], ids=["kernel", "two_pass"])
+@pytest.mark.parametrize("dup_source", ["x2", None], ids=["source", "null_source"])
+def test_dup_failed_doc_skips_fk_probe(spark, two_pass, dup_source):
+    """A doc that fails pass 1 on a duplicate key is masked out of the FK
+    probes — also when its source is null (the two-pass masks used to be
+    plain equi-joins, which never match a null)."""
+    from fairtracks_validator_spark.plans.schema_compile import compile_schema
+    from fairtracks_validator_spark.runner import validate_corpus
+
+    users = spark.createDataFrame([("u1", 1, "a")], "source string, ord long, k string")
+    events = spark.createDataFrame(
+        [("x1", 2, "e", "a"), (dup_source, 3, "e", "dangling")],
+        "source string, ord long, eid string, uid string",
+    )
+    pu = compile_schema({"$id": "u/1", "primary_key": ["k"]})
+    pe = compile_schema({
+        "$id": "e/1", "primary_key": ["eid"],
+        "properties": {"uid": {"unique": True}} if two_pass else {},
+        "foreign_keys": [{"schema_id": "u/1", "members": ["uid"]}],
+    })
+    res = validate_corpus({"u/1": (pu, users), "e/1": (pe, events)})
+    assert (res.wide is None) == two_pass  # the path under test
+    got = sorted((r["ord"], r["check_id"], r["reason"]) for r in res.violations.collect())
+    assert got == [(3, "pk", "dup_pk")]
+    v = {r["ord"]: r["validated"] for r in res.verdicts.collect()}
+    assert v == {1: True, 2: True, 3: False}
+    res.release()
 
 
 def test_cascade_uniqueness_caches_released(spark):
@@ -320,7 +354,7 @@ def test_cascade_uniqueness_caches_released(spark):
     plan = compile_schema({
         "$id": "casc/1", "primary_key": ["ks[]"],  # [] = array fan-out keys
         "properties": {"ks": {"items": {"type": "string"}}},
-        # FK forces the generic (non-fused) path where the cascade runs
+        # the fan-out key forces the two-pass path, where the cascade runs
         "foreign_keys": [{"schema_id": "casc/1", "members": []}],
     })
     from fairtracks_validator_spark.functions.keys import has_array_fanout

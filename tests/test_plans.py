@@ -73,10 +73,13 @@ def test_fk_probe_broadcasts_small_pk(spark):
 
 
 def test_runner_gates_fk_broadcast_by_count(spark):
-    """validate_corpus counts each registry once and only then hints."""
+    """The two-pass path counts each registry once and only then hints; the
+    kernel hints nothing and AQE broadcasts the small registry at runtime."""
     import fairtracks_validator_spark.runner as R
 
-    schema_a = {"$id": "a/1", "primary_key": ["k"], "properties": {"k": {"type": "string"}}}
+    # a second uniqueness constraint on a/1 keeps this on the two-pass path
+    schema_a = {"$id": "a/1", "primary_key": ["k"], "unique": ["k"],
+                "properties": {"k": {"type": "string"}}}
     schema_b = {
         "$id": "b/1",
         "properties": {"r": {"type": "string"}},
@@ -97,6 +100,13 @@ def test_runner_gates_fk_broadcast_by_count(spark):
         res.violations.where(F.col("reason") == "fk_missing")
     )
     assert R.BROADCAST_MAX_PK_KEYS >= 10
+
+    del schema_a["unique"]
+    corpus["a/1"] = (compile_schema(schema_a), a)
+    probe = validate_corpus(corpus).violations.where(F.col("reason") == "fk_missing")
+    assert {r["key_str"] for r in probe.collect()} == {'["10"]', '["11"]'}
+    assert "isFinalPlan=true" in _plan_str(probe)  # AQE's runtime choice
+    assert "BroadcastHashJoin" in _plan_str(probe)
 
 
 def test_fused_path_single_shuffle(spark, pages_parquet):

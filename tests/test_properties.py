@@ -14,7 +14,7 @@ from __future__ import annotations
 import hashlib
 import json
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -76,3 +76,137 @@ def test_minhash_affine_no_overflow(x):
         prod = a * x + b
         assert prod < 2**63  # fits signed int64 in both Spark and DuckDB
         assert 0 <= prod % MINHASH_P < MINHASH_P
+
+
+# ---- kernel ⇔ two-pass parity on routed multi-schema corpora -------------
+#
+# Every plan below fits the single-plan kernel (≤1 flat uniqueness
+# constraint per schema, flat FK members), so validate_routed takes it; the
+# two-pass path called directly on the same routed corpus is the reference.
+# The events schema exercises a dangling FK, a self-FK, a foreignProperty
+# target, a seed-only target (probe, J3 when the seed is empty, J2 when it
+# is absent), an unregistered target (J2) and a registered target without
+# that constraint (J3); dropping every users row empties its registry (J3).
+_PARITY_SCHEMAS = [
+    {"$id": "users/1", "primary_key": ["user_key"],
+     "properties": {"balance": {"minimum": 0}}},
+    {"$id": "tags/1", "properties": {"handle": {"type": "string", "unique": True}}},
+    {"$id": "events/1", "primary_key": ["eid"],
+     "properties": {"value": {"maximum": 400},
+                    "tag": {"type": "string", "foreignProperty": "tags/1#handle"}},
+     "foreign_keys": [
+         {"schema_id": "users/1", "members": ["uid"]},
+         {"schema_id": "events/1", "members": ["parent"]},
+         {"schema_id": "ext/1", "members": ["ext"]},
+         {"schema_id": "ghost/1", "members": ["uid"]},
+         {"schema_id": "tags/1", "members": ["uid"]},
+     ]},
+]
+_PARITY_DDL = (
+    "source string, ord long, schema_id string, user_key string, "
+    "balance double, handle string, eid string, uid string, parent string, "
+    "tag string, ext string, value double"
+)
+_PKEY = st.sampled_from(["k1", "k2", "k3", None])
+_PROW = st.fixed_dictionaries({
+    "source": st.sampled_from(["a", "b", None]),
+    "ord": st.integers(0, 3),
+    "schema_id": st.sampled_from(["users/1", "events/1", "tags/1", "nope/1", None]),
+    "user_key": _PKEY, "balance": st.sampled_from([-1.0, 1.0, None]),
+    "handle": _PKEY, "eid": _PKEY,
+    "uid": st.sampled_from(["k1", "k2", "dangling", None]),
+    "parent": _PKEY, "tag": st.sampled_from(["k1", "k2", "nohandle", None]),
+    "ext": _PKEY, "value": st.sampled_from([1.0, 500.0, None]),
+})
+
+
+def _prow(source, ord_, schema_id, **cols) -> dict:
+    row = {c.split()[0]: None for c in _PARITY_DDL.split(", ")}
+    return {**row, "source": source, "ord": ord_, "schema_id": schema_id, **cols}
+
+
+# pinned corpus: a null-source dup user, a schema-failed user whose key is
+# never recorded, a dup event with a dangling FK (masked from every probe),
+# an event missing on every FK kind, a schema-failed event, a tied
+# identity (the repeated events row) and orphans with and without a schema id
+_PARITY_EXAMPLE = [
+    _prow("a", 0, "users/1", user_key="k1", balance=1.0),
+    _prow(None, 1, "users/1", user_key="k1", balance=1.0),
+    _prow("b", 2, "users/1", user_key="k2", balance=-1.0),
+    _prow("a", 3, "tags/1", handle="k1"),
+    _prow("a", 1, "events/1", eid="k1", uid="k1", parent="k1", tag="k1",
+          ext="k1", value=1.0),
+    _prow(None, 2, "events/1", eid="k1", uid="dangling", tag="nohandle",
+          ext="k2", value=1.0),
+    _prow("b", 3, "events/1", eid="k2", uid="k2", parent="k3", tag="nohandle",
+          ext="k2", value=1.0),
+    _prow("b", 3, "events/1"),
+    _prow("a", 4, "events/1", eid="k3", uid="dangling", value=500.0),
+    _prow("a", 9, "nope/1"),
+    _prow(None, 9, None),
+]
+
+
+def _parity_rows(rows: list[dict], drop_users: bool) -> list[tuple]:
+    """Rows sharing a (schema_id, source, ord) identity become exact copies
+    of the first one — tied identities are the same document read twice, so
+    per-row and per-identity semantics agree on them."""
+    first: dict = {}
+    out = []
+    for r in rows:
+        if drop_users and r["schema_id"] == "users/1":
+            continue
+        r = first.setdefault((r["schema_id"], r["source"], r["ord"]), r)
+        out.append(tuple(r[c.split()[0]] for c in _PARITY_DDL.split(", ")))
+    return out
+
+
+def _seed(spark, sid: str, keys: list[str]):
+    return spark.createDataFrame(
+        [(sid, "pk", f'["{k}"]', "seed", -1) for k in keys],
+        "schema_id string, check_id string, key_str string, "
+        "first_source string, first_ord long",
+    )
+
+
+@settings(max_examples=8, deadline=None)
+@given(
+    rows=st.lists(_PROW, min_size=0, max_size=14),
+    drop_users=st.booleans(),
+    user_seed=st.none() | st.lists(st.sampled_from(["k1", "k3"]), max_size=2),
+    ext_seed=st.none() | st.lists(st.sampled_from(["k1", "k2"]), max_size=2),
+)
+@example(rows=_PARITY_EXAMPLE, drop_users=False, user_seed=["k3"], ext_seed=["k1"])
+@example(rows=_PARITY_EXAMPLE, drop_users=True, user_seed=None, ext_seed=[])
+def test_routed_kernel_matches_two_pass(spark, rows, drop_users, user_seed, ext_seed):
+    from fairtracks_validator_spark.plans.schema_compile import compile_schema
+    from fairtracks_validator_spark.runner import (
+        VIOLATION_SCHEMA, _validate_two_pass, validate_routed,
+    )
+    from fairtracks_validator_spark.sources.catalog import (
+        orphan_verdicts, route_corpus,
+    )
+
+    plans = {s["$id"]: compile_schema(s) for s in _PARITY_SCHEMAS}
+    df = spark.createDataFrame(_parity_rows(rows, drop_users), _PARITY_DDL)
+    seeds = {}
+    if user_seed is not None:
+        seeds[("users/1", "pk")] = _seed(spark, "users/1", user_seed)
+    if ext_seed is not None:
+        seeds[("ext/1", "pk")] = _seed(spark, "ext/1", ext_seed)
+
+    kernel = validate_routed(df, plans, seed_registries=seeds)
+    assert kernel.wide is not None  # the kernel path is the one under test
+    corpus, orphans = route_corpus(df, plans)
+    ref = _validate_two_pass(corpus, seed_registries=seeds)
+    ref_verdicts = ref.verdicts.unionByName(orphan_verdicts(orphans))
+    ref_violations = ref.violations.unionByName(
+        orphans.select(*[c.split()[0] for c in VIOLATION_SCHEMA.split(", ")])
+    )
+
+    def rows_of(d):
+        return sorted(map(tuple, d.collect()), key=repr)
+
+    assert rows_of(kernel.verdicts) == rows_of(ref_verdicts)
+    assert rows_of(kernel.violations) == rows_of(ref_violations)
+    ref.release()

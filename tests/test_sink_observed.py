@@ -6,9 +6,8 @@ the fix for the N→4N serial-residue (5 jobs / 9 stages of separate count
 actions per run, BENCH/BASELINE.md r4). These tests pin:
 
 - wide ↔ flat parity: exploding ``wide_verdicts().violations`` reproduces
-  the flat violations relation exactly, on both the fused single-schema
-  path (wide built inside the existing shuffle) and the general
-  multi-schema path (join fallback);
+  the flat violations relation exactly, on both the kernel path (wide
+  built inside the existing plan) and the two-pass path (join fallback);
 - observed counts equal the per-output counts;
 - the parquet sink round-trips (explode of the written table = violations);
 - the job count of the observed sink stays at the AQE minimum.
@@ -83,12 +82,15 @@ def test_fused_wide_parity_and_counts(spark, tmp_path):
 
 
 def test_general_path_wide_join_fallback(spark):
-    """Multi-schema corpus exercises the non-fused path (wide is None →
-    group+join reconstruction)."""
+    """Multi-schema corpus exercises the two-pass path (wide is None →
+    group+join reconstruction); two uniqueness constraints on u/1.0 keep it
+    off the single-plan kernel."""
     plan_a = compile_schema(_DOCS_SCHEMA)
     plan_b = compile_schema(
         {
             "$id": "u/1.0",
+            "primary_key": ["v"],
+            "unique": ["ref"],
             "properties": {"v": {"type": "integer", "maximum": 10}},
             "foreign_keys": [
                 {"schema_id": "t/1.0", "members": ["ref"]}
@@ -125,6 +127,50 @@ def test_observed_sink_job_count(spark):
     tracker = sc.statusTracker()
     jobs = tracker.getJobIdsForGroup("sink-jobs")
     assert 1 <= len(jobs) <= 3, f"expected one observed action, saw {jobs}"
+
+
+def test_routed_kernel_job_shape(spark):
+    """A flat-key users/events corpus runs as one lazy plan: validate_routed
+    submits no Spark job at all (no eager registry count, no persist), the
+    sink writes the in-plan wide relation directly, and nothing stays
+    cached afterwards."""
+    from fairtracks_validator_spark.runner import validate_routed
+
+    users = compile_schema({
+        "$id": "users/1.0", "primary_key": ["user_key"],
+        "properties": {"balance": {"minimum": 0}},
+    })
+    events = compile_schema({
+        "$id": "events/1.0", "properties": {"value": {"maximum": 400}},
+        "foreign_keys": [{"schema_id": "users/1.0", "members": ["user_id"]}],
+    })
+    df = spark.createDataFrame(
+        [
+            ("u1", 1, "users/1.0", "a", 5.0, None, None),
+            ("u2", 2, "users/1.0", "a", 5.0, None, None),   # dup_pk
+            ("u3", 3, "users/1.0", "b", -1.0, None, None),  # minimum, no key
+            ("e1", 4, "events/1.0", None, None, "a", 1.0),
+            ("e2", 5, "events/1.0", None, None, "b", 1.0),  # fk_missing
+            ("e3", 6, "events/1.0", None, None, "a", 900.0),  # maximum
+            ("o1", 7, "ghost/1.0", None, None, None, None),  # orphan
+        ],
+        "source string, ord long, schema_id string, user_key string, "
+        "balance double, user_id string, value double",
+    )
+    sc = spark.sparkContext
+    cached = lambda: {r.id() for r in sc._jsc.sc().getRDDStorageInfo()}  # noqa: E731
+    before = cached()
+    sc.setJobGroup("routed-validate", "routed validate job-count probe")
+    try:
+        res = validate_routed(df, {"users/1.0": users, "events/1.0": events})
+    finally:
+        sc.setJobGroup(None, None)
+    assert list(sc.statusTracker().getJobIdsForGroup("routed-validate")) == []
+    assert res.wide is not None and res._persisted == []
+    m = sink_observed(res)
+    assert m == {"docs": 7, "failed_docs": 4, "ignored_docs": 1, "violations": 5}
+    assert cached() == before
+    assert rows_set(_explode_wide(res.wide_verdicts())) == rows_set(res.violations)
 
 
 def test_observed_counts_exclude_ignored_from_failed(spark):
