@@ -11,7 +11,11 @@ violations, wall-time per partition). Design:
 - **Stage checkpoint 1 — the PK registry**: uniqueness is a *global*
   aggregate; it is computed once over the full input and persisted
   (parquet + ``_SUCCESS``). Resumes reuse it instead of re-shuffling 100 TB.
-- **Stage checkpoint 2 — per-partition outputs**: verdicts + violations are
+- **Stage checkpoint 2 — per-partition outputs**: the todo partitions run
+  through ``validate_corpus`` with the frozen global registry as prior
+  holders, so a document is a duplicate exactly when the registry's first
+  holder of its key is another document — the fresh run's verdict. FK
+  probes run against frozen registries afterwards. Verdicts + violations are
   written partitioned by ``part_id`` with dynamic partition overwrite
   (idempotent per partition); a lineage row ``(part_id, rows_scanned,
   violations, wall_time_s, run_id, status)`` is appended only after the
@@ -26,9 +30,9 @@ layout maps 1:1 onto Iceberg tables (``writeTo(...).overwritePartitions()``)
 
 from __future__ import annotations
 
+import dataclasses
 import os
 import time
-from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,11 +46,18 @@ LINEAGE_SCHEMA = (
 )
 
 
-def _exists(path: str) -> bool:
-    return os.path.exists(os.path.join(path, "_SUCCESS"))
+def _exists(spark: SparkSession, path: str) -> bool:
+    """Whether ``path`` holds a committed write (its ``_SUCCESS`` marker),
+    asked of the path's Hadoop FileSystem: ``os.path`` sees only the
+    driver's local disk, so on a file://, hdfs:// or s3a:// out_dir every
+    checkpoint would read as missing and a resume would redo everything."""
+    jvm = spark.sparkContext._jvm
+    marker = jvm.org.apache.hadoop.fs.Path(path, "_SUCCESS")
+    fs = marker.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    return fs.exists(marker)
 
 
-@dataclass
+@dataclasses.dataclass
 class CheckpointedValidation:
     """Orchestrates a resumable single-table validation run."""
 
@@ -71,7 +82,7 @@ class CheckpointedValidation:
 
     # ------------------------------------------------------------------ api
     def completed_partitions(self, spark: SparkSession) -> list[int]:
-        if not _exists(self.lineage_dir):
+        if not _exists(spark, self.lineage_dir):
             return []
         rows = (
             spark.read.parquet(self.lineage_dir)
@@ -103,7 +114,7 @@ class CheckpointedValidation:
 
         # ---- stage 1: global registry checkpoint (uniqueness is global)
         corpus = {plan.schema_id: (plan, work)}
-        if plan.uniques and not _exists(self.registry_dir):
+        if plan.uniques and not _exists(spark, self.registry_dir):
             res = validate_corpus(corpus, source_col, ord_col)
             regs = []
             for (schema_id, check_id), pk in res.pk_registries.items():
@@ -125,25 +136,25 @@ class CheckpointedValidation:
         t0 = time.time()
         subset = work.where(F.col("part_id").isin(todo))
 
-        # per-partition-safe checks: schema checks are row-local; uniqueness
-        # violations are derived by joining THIS subset's keys against the
-        # frozen global registry (blame = registry's first holder); FK probes
-        # join the same registry. Semantics equal a fresh global run because
-        # the registry is global and frozen.
+        # per-partition-safe checks: schema checks are row-local, and every
+        # key's first holder is the frozen global registry's — a prior
+        # holder of THIS subset's run. Semantics equal a fresh global run
+        # because the registry is global and frozen.
+        prior = {}
+        if plan.uniques:
+            reg = spark.read.parquet(self.registry_dir)
+            prior = {
+                (plan.schema_id, uq.check_id): reg.where(
+                    (F.col("schema_id") == plan.schema_id)
+                    & (F.col("check_id") == uq.check_id)
+                )
+                for uq in plan.uniques
+            }
         res = validate_corpus(
-            {plan.schema_id: (_row_checks_only(plan), subset)}, source_col, ord_col
+            {plan.schema_id: (dataclasses.replace(plan, fks=[]), subset)},
+            source_col, ord_col, prior_registries=prior,
         )
         violations = res.violations
-        if plan.uniques and _exists(self.registry_dir):
-            reg = spark.read.parquet(self.registry_dir)
-            # schema-failed docs never record/probe keys
-            # (ValidatedJSONSchema.java:360-392)
-            survivors = _anti_on_identity(
-                subset, res.violations, source_col, ord_col
-            )
-            violations = violations.unionByName(
-                _dup_violations_vs_registry(survivors, plan, reg, source_col, ord_col)
-            )
 
         # FK probes against frozen external registries (dimension tables or
         # other tables' checkpointed registries) — partition-local, resumable
@@ -159,7 +170,7 @@ class CheckpointedValidation:
                     # table IS registered — probe its frozen registry, or an
                     # empty one when the plan declares no such constraint
                     # (J3), never "no available schema" (code-review r4)
-                    if _exists(self.registry_dir):
+                    if _exists(spark, self.registry_dir):
                         pk = spark.read.parquet(self.registry_dir).where(
                             (F.col("schema_id") == plan.schema_id)
                             & (F.col("check_id") == fk.target_check_id)
@@ -295,57 +306,3 @@ class CheckpointedValidation:
         violations.unpersist()
         res.release()  # outputs committed; drop this batch's caches
         return {"processed": todo, "skipped": sorted(done), "wall_time_s": wall}
-
-
-def _row_checks_only(plan: ValidationPlan) -> ValidationPlan:
-    """Partition-local slice of the plan: row checks only. Uniqueness runs
-    against the frozen registry; FK probes against frozen registries are a
-    cross-run concern handled by the caller (pages/1.0 declares none)."""
-    import copy
-
-    p = copy.copy(plan)
-    p.uniques = []
-    p.fks = []
-    return p
-
-
-def _dup_violations_vs_registry(
-    subset: DataFrame,
-    plan: ValidationPlan,
-    registry: DataFrame,
-    source_col: str,
-    ord_col: str,
-) -> DataFrame:
-    """Duplicate-key violations for a partition subset against the frozen
-    global registry (first-writer attribution comes from the registry)."""
-    from .operators.uniqueness import _doc_keys
-
-    out = None
-    for uq in plan.uniques:
-        keys = _doc_keys(subset, uq.check_id, uq.members, source_col, ord_col)
-        reg = registry.where(
-            (F.col("schema_id") == plan.schema_id) & (F.col("check_id") == uq.check_id)
-        ).select("key_str", "first_source", "first_ord")
-        # a duplicate is any holder that is NOT the registry's first holder —
-        # compared on the FULL identity (source, ord), not source alone:
-        # with source==url duplicates share their source value by construction
-        # (the reference flags same-file dups too, ValidatedJSONSchema.java:378-383)
-        v = (
-            keys.join(reg, "key_str", "inner")
-            .where(
-                (F.col("ord") != F.col("first_ord"))
-                | (F.col("source") != F.col("first_source"))
-            )
-            .select(
-                "source", "ord",
-                F.lit(plan.schema_id).alias("schema_id"),
-                F.lit(uq.check_id).alias("check_id"),
-                "key_str",
-                F.lit("dup_pk").alias("reason"),
-                F.format_string(
-                    "Duplicate PK in %s and %s", F.col("first_source"), F.col("source")
-                ).alias("description"),
-            )
-        )
-        out = v if out is None else out.unionByName(v)
-    return out

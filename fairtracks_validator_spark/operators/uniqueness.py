@@ -21,13 +21,23 @@ collision removes ALL keys of the colliding doc from the registry, which can
 transitively un-collide later docs; we reproduce that with a bounded
 alternating fixpoint (``cascade_rounds``) that converges in (chain depth)
 rounds — each round is one extra shuffle, so it only runs when fan-out exists.
+
+Prior holders: a registry frozen before this run (an earlier micro-batch's
+or a checkpointed global run's ``(key_str, first_source, first_ord)`` rows)
+holds its keys ahead of every document of this run — the reference's
+registry grows within a run, and a later run only sees an earlier run's keys.
+A keyed document whose key a prior holder records under a DIFFERENT
+``(source, ord)`` identity is blamed on that holder; a document re-delivered
+with the holder's own identity is neither blamed nor recorded again. Only
+total keys take part (a missing component records no key), so one null-key
+policy serves batch runs, stream batches and checkpoint resumes alike.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.keys import (
@@ -82,20 +92,24 @@ def uniqueness_check(
     source_col: str = "source",
     ord_col: str = "ord",
     cascade_rounds: int = 6,
+    prior: DataFrame | None = None,
 ) -> UniquenessResult:
     """Evaluate one uniqueness/PK constraint.
 
     Returns duplicate-key violations plus the recorded PK registry (keys of
     non-colliding docs) for downstream FK probing (``Validator.java:156-163``).
+    ``prior``: frozen ``(key_str, first_source, first_ord)`` holders that
+    precede every document of ``df`` (module docstring); the returned
+    registry holds only the keys this run adds to them.
     """
     keys = _doc_keys(df, check_id, members, source_col, ord_col)
 
     multi_key = has_array_fanout(members)
     cached: tuple = ()
     if not multi_key:
-        colliding, pk_keys = _resolve_single_pass(keys)
+        colliding, pk_keys = _resolve_single_pass(keys, prior)
     else:
-        colliding, pk_keys, cached = _resolve_cascade(keys, cascade_rounds)
+        colliding, pk_keys, cached = _resolve_cascade(keys, cascade_rounds, prior)
 
     violations = colliding.select(
         "source",
@@ -122,7 +136,62 @@ def uniqueness_check(
     return UniquenessResult(violations=violations, pk=pk, persisted=cached)
 
 
-def _resolve_single_pass(keys: DataFrame) -> tuple[DataFrame, DataFrame]:
+def first_writer(
+    rows: DataFrame, key: str, prior: DataFrame | None = None
+) -> tuple[DataFrame, Column, Column]:
+    """Bind ``_mn``, the first holder ``struct(o=ord, s=source)`` of each
+    row's ``key``, over ONE key-only window.
+
+    Returns ``(ranked, later, held)``: ``later`` is true for a row that is
+    not its key's first holder, and ``held`` for a row whose key a prior
+    holder records under this very identity (constant false without
+    ``prior``, which the optimizer folds away).
+
+    Rank comes from ``min(struct(ord, source))`` over a KEY-ONLY window
+    rather than ``row_number`` ordered by (ord, source): the reduce-stage
+    sort key is just the key string (half the comparator work — measured on
+    the 40M-row scaling bench), and the first-holder choice does not lean on
+    intra-key sort stability (identical (ord, source) identities tie as
+    first instead of one being arbitrarily blamed).
+
+    ``prior`` rows ride the same shuffle as pseudo-rows ranked ahead of
+    every real row (``p`` = 0), so the window's ``min`` reduces them to one
+    holder per key with no extra exchange; they are dropped after it.
+    """
+    w = Window.partitionBy(key)
+    if prior is None:
+        row_os = F.struct(F.col("ord").alias("o"), F.col("source").alias("s"))
+        # bind the window aggregate ONCE (withColumn) — two inline
+        # F.min(...).over(w) expressions each get their own aggregate
+        # processor in WindowExec, doubling the reduce-stage work
+        ranked = rows.withColumn("_mn", F.min(row_os).over(w))
+        return ranked, row_os > F.col("_mn"), F.lit(False)
+    holders = prior.select(
+        F.col("key_str").alias(key),
+        F.col("first_source").alias("source"),
+        F.col("first_ord").cast("long").alias("ord"),
+        F.lit(0).alias("_p"),
+    )
+    row_os = F.struct(
+        F.col("_p").alias("p"), F.col("ord").alias("o"), F.col("source").alias("s")
+    )
+    ranked = (
+        rows.withColumn("_p", F.lit(1))
+        .unionByName(holders, allowMissingColumns=True)
+        .withColumn("_mn", F.min(row_os).over(w))
+        .where(F.col("_p") == 1)
+    )
+    held = (
+        (F.col("_mn.p") == 0)
+        & F.col("ord").eqNullSafe(F.col("_mn.o"))
+        & F.col("source").eqNullSafe(F.col("_mn.s"))
+    )
+    return ranked, (row_os > F.col("_mn")) & ~held, held
+
+
+def _resolve_single_pass(
+    keys: DataFrame, prior: DataFrame | None = None
+) -> tuple[DataFrame, DataFrame]:
     """Exact when each doc contributes ≤1 key. One shuffle on key_str.
 
     Deliberately NOT persisted: the ranked keys are corpus-sized, and
@@ -132,34 +201,17 @@ def _resolve_single_pass(keys: DataFrame) -> tuple[DataFrame, DataFrame]:
     Consumers that re-read the registry repeatedly (FK probes) persist the
     small ``pk`` projection instead, and at cluster scale the registry is
     checkpointed to parquet (checkpoint.py).
-
-    Rank comes from ``min(struct(ord, source))`` over a KEY-ONLY window
-    rather than ``row_number`` ordered by (ord, source): the reduce-stage
-    sort key is just the key string (half the comparator work — measured on
-    the 40M-row scaling bench of the fused twin in runner.py), and the
-    first-holder choice no longer leans on intra-key sort stability
-    (identical (ord, source) identities tie as first instead of one being
-    arbitrarily blamed).
     """
-    w = Window.partitionBy("key_str")
-    row_os = F.struct(F.col("ord").alias("o"), F.col("source").alias("s"))
-    # bind the window aggregate ONCE (withColumn) — two inline
-    # F.min(...).over(w) expressions each get their own aggregate
-    # processor in WindowExec, doubling the reduce-stage work
-    ranked = keys.withColumn("_mn", F.min(row_os).over(w)).select(
-        "source",
-        "ord",
-        "key_str",
-        (row_os > F.col("_mn")).alias("_dup"),
-        F.col("_mn").getField("s").alias("first_source"),
+    ranked, later, held = first_writer(keys, "key_str", prior)
+    colliding = ranked.where(later).select(
+        "source", "ord", "key_str", F.col("_mn.s").alias("first_source")
     )
-    colliding = ranked.where(F.col("_dup")).drop("_dup")
-    pk_keys = ranked.where(~F.col("_dup")).select("source", "ord", "key_str")
+    pk_keys = ranked.where(~later & ~held).select("source", "ord", "key_str")
     return colliding, pk_keys
 
 
 def _resolve_cascade(
-    keys: DataFrame, max_rounds: int
+    keys: DataFrame, max_rounds: int, prior: DataFrame | None = None
 ) -> tuple[DataFrame, DataFrame, tuple]:
     """Alternating fixpoint for multi-key docs (array fan-out).
 
@@ -167,27 +219,45 @@ def _resolve_cascade(
     Start optimistic (everyone recorded), alternate until the colliding-doc
     set is stable. Chain depths beyond ``max_rounds`` are vanishingly rare;
     we stop at the cap (conservative over-report, documented deviation).
+
+    With ``prior``, docs holding a key that a prior holder records under
+    another identity collide up front and leave the fixpoint — they record
+    nothing, which frees their other keys exactly like the reference — and
+    every key a prior holder records is blamed on that holder.
     """
     # keys and the FINAL round's colliding set stay cached (the returned
     # lazy plans reference both) and are handed back to the caller for
     # release() (code-review r4); each superseded round's cache is released
     # immediately — pure leak otherwise (code-review r3).
-    keys = keys.cache()
-    # doc id = (source, ord); ord is the total order
-    active = keys  # keys of docs currently assumed recorded
+    # doc id = struct(ord, source): ord is the total order, and struct
+    # equality is null-safe, so a null-source doc still matches itself
+    doc = F.col("_doc")
+    keys = keys.withColumn("_doc", F.struct("ord", "source")).cache()
+    cached: tuple = (keys,)
+    eligible = keys  # keys of docs that may record
+    if prior is not None:
+        held = prior.groupBy("key_str").agg(
+            F.min(F.struct(
+                F.col("first_ord").cast("long").alias("ord"),
+                F.col("first_source").alias("source"),
+            )).alias("_first")
+        )
+        blocked = (
+            keys.join(held, "key_str").where(doc != F.col("_first"))
+            .select("_doc").distinct().cache()
+        )
+        cached += (blocked,)
+        eligible = keys.join(blocked, "_doc", "left_anti")
+    active = eligible  # keys of docs currently assumed recorded
     colliding_docs = None
     prev_count = -1
     for _ in range(max_rounds):
         # a doc collides if any of its keys has an earlier recorded holder
         # (blame attribution needs no window here — the final pass below
         # recomputes firsts for it; code-review r4 dropped a dead window)
-        firsts = active.groupBy("key_str").agg(
-            F.min(F.struct("ord", "source")).alias("_first")
-        )
-        probe = keys.join(firsts, "key_str", "inner").where(
-            F.struct("ord", "source") > F.col("_first")
-        )
-        new_cd = probe.select("source", "ord").distinct().cache()
+        firsts = active.groupBy("key_str").agg(F.min(doc).alias("_first"))
+        probe = eligible.join(firsts, "key_str", "inner").where(doc > F.col("_first"))
+        new_cd = probe.select("_doc").distinct().cache()
         n = new_cd.count()
         if colliding_docs is not None:
             colliding_docs.unpersist()
@@ -195,17 +265,27 @@ def _resolve_cascade(
         if n == prev_count:
             break
         prev_count = n
-        active = keys.join(colliding_docs, ["source", "ord"], "left_anti")
+        active = eligible.join(colliding_docs, "_doc", "left_anti")
 
     # final pass with the converged registry for blame attribution
-    registry = keys.join(colliding_docs, ["source", "ord"], "left_anti")
-    firsts = registry.groupBy("key_str").agg(
-        F.min(F.struct("ord", "source")).alias("_first")
-    )
+    registry = eligible.join(colliding_docs, "_doc", "left_anti")
+    firsts = registry.groupBy("key_str").agg(F.min(doc).alias("_first"))
+    later = doc > F.col("_first")
+    blamed = colliding_docs
+    if prior is not None:
+        # a prior holder owns its key ahead of any doc of this run; a key it
+        # holds is recorded here only by that very doc, re-delivered
+        firsts = held.withColumn("_prior", F.lit(True)).unionByName(
+            firsts.join(held, "key_str", "left_anti")
+            .withColumn("_prior", F.lit(False))
+        )
+        later = F.when(F.col("_prior"), doc != F.col("_first")).otherwise(later)
+        blamed = colliding_docs.unionByName(blocked)
+        registry = registry.join(held, "key_str", "left_anti")
     colliding = (
-        keys.join(colliding_docs, ["source", "ord"], "left_semi")
+        keys.join(blamed, "_doc", "left_semi")
         .join(firsts, "key_str", "inner")
-        .where(F.struct("ord", "source") > F.col("_first"))
+        .where(later)
         .select("source", "ord", "key_str", F.col("_first.source").alias("first_source"))
     )
-    return colliding, registry, (keys, colliding_docs)
+    return colliding, registry, cached + (colliding_docs,)

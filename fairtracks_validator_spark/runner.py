@@ -32,6 +32,15 @@ Two physical shapes implement it, chosen from the compiled plans alone:
 
 Both scan each document once per action (the reference reads every file
 twice, ``FairGTrackValidatorCli.java:265,328``).
+
+Both take one more data input, ``prior_registries``: registry rows frozen
+before this run, which hold their keys ahead of every document of it (the
+reference's registry grows within a run; a later run only sees an earlier
+run's keys, ``ValidatedJSONSchema.java:373-392``). A stream micro-batch
+(``streaming.validate_stream``) and a checkpoint resume (``checkpoint``) are
+batch runs over their slice with the earlier keys as prior holders, so the
+batch, stream and resume share one first-writer-wins implementation
+(``operators.uniqueness.first_writer`` and the fan-out cascade).
 """
 
 from __future__ import annotations
@@ -44,7 +53,7 @@ from pyspark.sql import functions as F
 
 from .operators.checks import apply_checks, checks_pass_predicate
 from .operators.fk import fk_check, fk_violation
-from .operators.uniqueness import uniqueness_check
+from .operators.uniqueness import first_writer, uniqueness_check
 from .functions.keys import flat_key_string, is_flat_members
 from .plans.schema_compile import ValidationPlan
 
@@ -390,6 +399,7 @@ def validate_corpus(
     ord_col: str = "ord",
     seed_registries: dict[tuple[str, str], DataFrame] | None = None,
     dup_strategy: str = "window",
+    prior_registries: dict[tuple[str, str], DataFrame] | None = None,
 ) -> ValidationResult:
     """Validate a multi-schema corpus: ``{schema_id: (plan, df)}``.
 
@@ -399,6 +409,14 @@ def validate_corpus(
     ``seed_registries``: pre-populated PK sets keyed by (schema_id, check_id)
     (A4, root README.md:25-35 — ``sources.catalog.seed_pk_registry``), unioned
     into the corpus-derived registries before FK probing.
+
+    ``prior_registries``: frozen ``(key_str, first_source, first_ord)``
+    holders keyed by (schema_id, check_id), ahead of every document here
+    (module docstring). A document whose key a prior holder records under
+    another identity is a ``dup_pk`` blamed on that holder, and
+    ``pk_registries`` then holds only the keys this run adds. Prior holders
+    take part in uniqueness only; a run whose FKs must also see them passes
+    them as seeds too.
 
     The plans alone pick the physical shape (module docstring): the
     single-plan kernel when every plan has no join checks, at most one
@@ -435,8 +453,11 @@ def validate_corpus(
         return _validate_kernel(
             corpus, source_col, ord_col, seed_registries or {},
             dup_strategy if len(corpus) == 1 else "window",
+            prior_registries or {},
         )
-    return _validate_two_pass(corpus, source_col, ord_col, seed_registries)
+    return _validate_two_pass(
+        corpus, source_col, ord_col, seed_registries, prior_registries
+    )
 
 
 def _kernel_fits(plan: ValidationPlan) -> bool:
@@ -455,6 +476,7 @@ def _validate_two_pass(
     source_col: str = "source",
     ord_col: str = "ord",
     seed_registries: dict[tuple[str, str], DataFrame] | None = None,
+    prior_registries: dict[tuple[str, str], DataFrame] | None = None,
 ) -> ValidationResult:
     """The general lifecycle: pass 1 per schema over persisted violation
     rows, then FK probes against counted, persisted registries. Serves join
@@ -486,7 +508,8 @@ def _validate_two_pass(
         dup_violations: list[DataFrame] = [schema_viol]
         for uq in plan.uniques:
             res = uniqueness_check(
-                survivors, uq.check_id, uq.members, schema_id, source_col, ord_col
+                survivors, uq.check_id, uq.members, schema_id, source_col, ord_col,
+                prior=(prior_registries or {}).get((schema_id, uq.check_id)),
             )
             # cascade-path caches (fan-out keys) register on the run's
             # persisted list so release() drops them; the single-pass path
@@ -674,10 +697,14 @@ def _schema_stage(
     source_col: str,
     ord_col: str,
     dup_strategy: str = "window",
+    prior: DataFrame | None = None,
 ) -> tuple[DataFrame, list]:
     """One schema's share of the kernel: a single narrow projection and, with
     a uniqueness constraint, a single key-only window. Returns the stage and
     any relations it persisted (``dup_strategy`` broadcast probes only).
+    ``prior`` holders of the constraint ride that window
+    (``operators.uniqueness.first_writer``); the broadcast probe does not
+    read them, so with a prior the window resolves.
 
     Stage columns, one row per document:
 
@@ -687,13 +714,12 @@ def _schema_stage(
       for passing rows;
     - ``_key``: the uniqueness key string, gated by ``_ok`` — schema-failed
       docs never record keys (``ValidatedJSONSchema.java:360-392``) — null
-      without a constraint;
+      without a constraint, and null when a prior holder already records it
+      for this very document;
     - ``_rn``: 1 for the first holder of its key (or a keyless row), 2 for
       every later one; ``_first_source``: the first holder's source;
     - ``_fk0`` … : each FK's key string, gated by ``_ok`` like ``_key``.
     """
-    from pyspark.sql import Window
-
     from .operators.checks import check_entries
 
     all_ok = checks_pass_predicate(plan.checks)
@@ -757,7 +783,7 @@ def _schema_stage(
     # verdict stream at all. Falls back to the window shuffle when the
     # duplicate population exceeds the broadcast gate or on streaming input.
     firsts = None
-    if dup_strategy in ("auto", "broadcast") and not df.isStreaming:
+    if dup_strategy in ("auto", "broadcast") and not df.isStreaming and prior is None:
         firsts = _dup_candidate_firsts(
             df, flat_key_string(uq.members), all_ok, source_col, ord_col
         )
@@ -799,32 +825,38 @@ def _schema_stage(
     #   construction), so it is re-derived after the window from the
     #   first byte (surrogates start with NUL, JSON key strings with
     #   '[') — ~1/3 less shuffle volume.
-    # - rank via min(struct(ord, source)) over a KEY-ONLY window instead
-    #   of row_number over (key, ord, source): the sort key halves, and
-    #   rank no longer depends on intra-key sort stability (identical
-    #   (ord, source) identities tie as rank 1 instead of one of them
-    #   being arbitrarily blamed — same convention as the broadcast
-    #   path's comparison against the first holder).
-    w = Window.partitionBy("_k2")
-    row_os = F.struct(F.col("ord").alias("o"), F.col("source").alias("s"))
-    mn = F.min(row_os).over(w)
-    stage = (
-        narrow.withColumn("_k2", F.coalesce(F.col("_key"), surrogate))
-        .drop("_key")
-        .withColumn("_mn", mn)
-        .select(
-            "source", "ord", "_ok", "_fails",
-            F.when(
-                F.substring("_k2", 1, 1) != "\x00", F.col("_k2")
-            ).alias("_key"),
-            F.when(row_os > F.col("_mn"), F.lit(2))
-            .otherwise(F.lit(1))
-            .alias("_rn"),
-            F.col("_mn.s").alias("_first_source"),
-            *fk_names,
-        )
+    # - rank via min(struct(ord, source)) over a KEY-ONLY window
+    #   (``first_writer``): identical (ord, source) identities tie as rank
+    #   1 — same convention as the broadcast path's comparison against
+    #   the first holder.
+    ranked, later, held = first_writer(
+        narrow.withColumn("_k2", F.coalesce(F.col("_key"), surrogate)).drop("_key"),
+        "_k2", prior,
+    )
+    stage = ranked.select(
+        "source", "ord", "_ok", "_fails",
+        F.when(
+            (F.substring("_k2", 1, 1) != "\x00") & ~held, F.col("_k2")
+        ).alias("_key"),
+        F.when(later, F.lit(2)).otherwise(F.lit(1)).alias("_rn"),
+        F.col("_mn.s").alias("_first_source"),
+        *fk_names,
     )
     return stage, []
+
+
+def _recorded(stage: DataFrame, schema_id: str, check_id: str) -> DataFrame:
+    """The registry rows a stage records: keyed first holders that pass
+    every check — shared by the kernel and the stream's micro-batches."""
+    return stage.where(
+        F.col("_ok") & (F.col("_rn") == 1) & F.col("_key").isNotNull()
+    ).select(
+        F.lit(schema_id).alias("schema_id"),
+        F.lit(check_id).alias("check_id"),
+        F.col("_key").alias("key_str"),
+        F.col("source").alias("first_source"),
+        F.col("ord").alias("first_ord"),
+    )
 
 
 def _validate_kernel(
@@ -833,6 +865,7 @@ def _validate_kernel(
     ord_col: str,
     seed_registries: dict[tuple[str, str], DataFrame],
     dup_strategy: str,
+    prior_registries: dict[tuple[str, str], DataFrame],
 ) -> ValidationResult:
     """Every schema's stage, registry and FK probes in ONE lazy plan.
 
@@ -853,20 +886,15 @@ def _validate_kernel(
     stages: dict[str, DataFrame] = {}
     registries: dict[tuple[str, str], DataFrame] = {}
     for sid, (plan, df) in corpus.items():
-        stage, cached = _schema_stage(plan, df, source_col, ord_col, dup_strategy)
+        rkey = (sid, plan.uniques[0].check_id) if plan.uniques else None
+        stage, cached = _schema_stage(
+            plan, df, source_col, ord_col, dup_strategy,
+            prior_registries.get(rkey),
+        )
         persisted += cached
         stages[sid] = stage
-        if plan.uniques:
-            rkey = (sid, plan.uniques[0].check_id)
-            reg = stage.where(
-                F.col("_ok") & (F.col("_rn") == 1) & F.col("_key").isNotNull()
-            ).select(
-                F.lit(sid).alias("schema_id"),
-                F.lit(rkey[1]).alias("check_id"),
-                F.col("_key").alias("key_str"),
-                F.col("source").alias("first_source"),
-                F.col("ord").alias("first_ord"),
-            )
+        if rkey is not None:
+            reg = _recorded(stage, *rkey)
             seed = seed_registries.get(rkey)
             registries[rkey] = reg if seed is None else reg.unionByName(seed)
     for rkey, seed in seed_registries.items():

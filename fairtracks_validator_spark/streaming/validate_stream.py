@@ -4,9 +4,12 @@ The reference is strictly batch (two passes over a closed corpus,
 ``FairGTrackValidatorCli.java:236-359``); its PK registry is incremental
 *within* a run (``ValidatedJSONSchema.java:373-392``) and seedable across
 runs (A4, ``README.md:25-35``). This module generalizes that to an unbounded
-stream: per micro-batch, row checks run vectorized, and uniqueness probes an
-accumulated registry (parquet dir ≙ the reference's in-memory hash map,
-seeded exactly like A4), then appends the batch's first-writer keys.
+stream: each micro-batch is a batch run of ``runner`` whose uniqueness
+constraints take the accumulated registry (parquet dir ≙ the reference's
+in-memory hash map, seeded exactly like A4) as prior holders; the batch's
+first-writer keys are then appended to it. Stream and batch therefore share
+one first-writer-wins implementation: splitting a corpus by ``ord`` into
+contiguous micro-batches yields the batch run's violations and registry.
 
 ``foreachBatch`` is the right primitive: uniqueness is a cross-batch global
 constraint, not a windowed aggregate, so the state lives in a (at deployment:
@@ -21,16 +24,17 @@ append is guarded the same way.
 
 from __future__ import annotations
 
+import dataclasses
 import os
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.checks import apply_checks, checks_pass_predicate
-from ..operators.uniqueness import _doc_keys
 from ..plans.schema_compile import ValidationPlan
 
 REGISTRY_SCHEMA = "check_id string, key_str string, first_source string, first_ord long"
+REGISTRY_COLUMNS = [c.split()[0] for c in REGISTRY_SCHEMA.split(", ")]
 
 
 def _registry_path(out_dir: str) -> str:
@@ -65,9 +69,7 @@ def _load_registry(spark, out_dir: str, before_batch_id: int) -> DataFrame:
         return spark.createDataFrame([], REGISTRY_SCHEMA)
     if "batch_id" not in df.columns:
         return spark.createDataFrame([], REGISTRY_SCHEMA)
-    return df.where(F.col("batch_id") < before_batch_id).select(
-        "check_id", "key_str", "first_source", "first_ord"
-    )
+    return df.where(F.col("batch_id") < before_batch_id).select(*REGISTRY_COLUMNS)
 
 
 def process_batch(
@@ -79,217 +81,54 @@ def process_batch(
     ord_col: str = "ord",
 ) -> None:
     """One micro-batch of incremental validation (also callable directly for
-    tests / backfills)."""
-    from ..runner import align_to_plan
-
-    spark = batch_df.sparkSession
-    # schema-drift alignment, same as the batch runner (absent column ⇒
-    # typed null ⇒ "property absent" semantics instead of UNRESOLVED_COLUMN)
-    batch_df = align_to_plan(batch_df, plan)
-
-    # Fast path (r6) for the flat-key, no-join-check shape (the web-scale
-    # pages regime): the violations write and the key-registry write are
-    # separate ACTIONS, and written independently each re-scans the batch
-    # and re-evaluates every check. Compute ONE narrow relation per batch —
-    # (source, ord, all-ok verdict, gated fail entries, per-unique key) —
-    # lazily checkpointed so whichever action runs first materializes it
-    # and the other reads its blocks. Join checks / fan-out keys keep the
-    # general path below.
-    from ..functions.keys import flat_key_string, has_array_fanout
-
-    _fast = (
-        not plan.join_checks
-        and plan.uniques
-        and all(not has_array_fanout(uq.members) for uq in plan.uniques)
+    tests / backfills): a batch run over the micro-batch whose uniqueness
+    constraints see every earlier batch's registry as prior holders. FK
+    probes stay out of the stream."""
+    from ..runner import (
+        _kernel_fits, _recorded, _schema_stage, _stage_outputs, align_to_plan,
+        validate_corpus,
     )
-    if _fast:
-        from ..operators.checks import check_entries
 
-        all_ok = checks_pass_predicate(plan.checks)
-        entries = check_entries(plan.checks)
-        _entry_ddl = "array<struct<check_id:string,ok:boolean,message:string>>"
-        fails = (
-            F.when(~all_ok, F.array(*entries))
-            if entries
-            else F.lit(None).cast(_entry_ddl)
-        )
-        narrow = batch_df.select(
-            F.col(source_col).alias("source"),
-            F.col(ord_col).cast("long").alias("ord"),
-            all_ok.alias("_ok"),
-            fails.alias("_fails"),
-            *[
-                flat_key_string(uq.members).alias(f"_key_{i}")
-                for i, uq in enumerate(plan.uniques)
-            ],
-        ).localCheckpoint(eager=False)
-        from ..functions.expr import let_
-
-        schema_viol = (
-            # let_ identity: a bare-attribute explode would let
-            # InferFiltersFromGenerate re-derive a pushable size(_fails)>0
-            # filter that alias-inlines every check below the scan
-            narrow.select(
-                "source", "ord",
-                F.explode(let_(F.col("_fails"), lambda x: x)).alias("_f"),
-            )
-            .where(~F.col("_f.ok"))
-            .select(
-                "source",
-                "ord",
-                F.lit(plan.schema_id).alias("schema_id"),
-                F.col("_f.check_id").alias("check_id"),
-                F.lit(None).cast("string").alias("key_str"),
-                F.lit("schema").alias("reason"),
-                F.col("_f.message").alias("description"),
-            )
-        )
-    else:
-        schema_viol = apply_checks(
-            batch_df, plan.checks, plan.join_checks, plan.schema_id,
-            source_col, ord_col,
-        )
-    violations = [schema_viol]
-    new_keys_parts = []
-    registry = None  # unpersisted after the batch's writes commit
-
+    plan = dataclasses.replace(plan, fks=[])
+    sid = plan.schema_id
+    prior = {}
     if plan.uniques:
-        survivors = None
-        if not _fast:
-            survivors = (
-                batch_df.where(checks_pass_predicate(plan.checks))
-                if not plan.join_checks
-                else batch_df.join(
-                    schema_viol.select(
-                        F.col("source").alias(source_col),
-                        F.col("ord").alias(ord_col),
-                    ).distinct(),
-                    [source_col, ord_col],
-                    "left_anti",
-                )
-            )
-        registry = _load_registry(spark, out_dir, batch_id).cache()
-        batch_caches: list = []
-        for _uq_i, uq in enumerate(plan.uniques):
-            if _fast:
-                keys = (
-                    narrow.where(F.col("_ok"))
-                    .select(
-                        "source", "ord",
-                        F.col(f"_key_{_uq_i}").alias("key_str"),
-                    )
-                    .where(F.col("key_str").isNotNull())
-                )
-            else:
-                keys = _doc_keys(
-                    survivors, uq.check_id, uq.members, source_col, ord_col
-                )
-            reg = registry.where(F.col("check_id") == uq.check_id)
-            reg_sel = reg.select("key_str", F.col("first_source").alias("_reg_fs"))
-
-            from ..functions.keys import has_array_fanout
-
-            if has_array_fanout(uq.members):
-                # multi-valued keys take the SAME promotion cascade as the
-                # batch path (code-review r4 — the old no-cascade shortcut
-                # over-blamed docs the reference promotes): docs colliding
-                # against the frozen registry are removed first (their
-                # unclaimed keys free up, exactly like the reference's
-                # record-nothing rule), then the in-batch fixpoint resolves
-                # the remainder.
-                from ..operators.uniqueness import _resolve_cascade
-
-                reg_hits = keys.join(reg_sel, "key_str", "inner")
-                cross_dup = reg_hits.select(
-                    "source", "ord", "key_str",
-                    F.col("_reg_fs").alias("first_source"),
-                )
-                remaining = keys.join(
-                    reg_hits.select("source", "ord").distinct(),
-                    ["source", "ord"], "left_anti",
-                )
-                intra_dup, recorded, cached = _resolve_cascade(remaining, 6)
-                batch_caches.extend(cached)
-                fresh = recorded.select(
-                    F.lit(uq.check_id).alias("check_id"),
-                    "key_str",
-                    F.col("source").alias("first_source"),
-                    F.col("ord").cast("long").alias("first_ord"),
-                )
-            else:
-                # single-key path: one window + ONE registry join shared by
-                # blame and freshness. Rank-2+ docs whose key already has a
-                # registry holder are blamed on THAT holder, not on the
-                # in-batch rank-1 row (which held nothing — code-review r4).
-                from pyspark.sql import Window
-
-                w = Window.partitionBy("key_str").orderBy("ord", "source")
-                ranked = (
-                    keys.withColumn("_rn", F.row_number().over(w))
-                    .withColumn("_fs", F.first("source").over(w))
-                    .join(reg_sel, "key_str", "left")
-                    # the violations write AND the fresh-keys write both
-                    # consume this relation; lazy-checkpoint so the second
-                    # action reads the first's blocks instead of re-running
-                    # the batch's window+registry join (r6)
-                    .localCheckpoint(eager=False)
-                )
-                intra_dup = ranked.where(F.col("_rn") > 1).select(
-                    "source", "ord", "key_str",
-                    F.coalesce(F.col("_reg_fs"), F.col("_fs")).alias("first_source"),
-                )
-                cross_dup = ranked.where(
-                    (F.col("_rn") == 1) & F.col("_reg_fs").isNotNull()
-                ).select(
-                    "source", "ord", "key_str",
-                    F.col("_reg_fs").alias("first_source"),
-                )
-                fresh = ranked.where(
-                    (F.col("_rn") == 1) & F.col("_reg_fs").isNull()
-                ).select(
-                    F.lit(uq.check_id).alias("check_id"),
-                    "key_str",
-                    F.col("source").alias("first_source"),
-                    F.col("ord").alias("first_ord"),
-                )
-            dup = intra_dup.unionByName(cross_dup).select(
-                "source",
-                "ord",
-                F.lit(plan.schema_id).alias("schema_id"),
-                F.lit(uq.check_id).alias("check_id"),
-                "key_str",
-                F.lit("dup_pk").alias("reason"),
-                F.format_string(
-                    "Duplicate PK in %s and %s", F.col("first_source"), F.col("source")
-                ).alias("description"),
-            )
-            violations.append(dup)
-            new_keys_parts.append(fresh)
-
+        registry = _load_registry(batch_df.sparkSession, out_dir, batch_id)
+        prior = {
+            (sid, uq.check_id): registry.where(F.col("check_id") == uq.check_id)
+            for uq in plan.uniques
+        }
+    res = None
+    if _kernel_fits(plan):
+        # the violations write and the registry write are separate actions:
+        # lazily checkpoint the one stage both read, so the first write
+        # materializes it and the second reads its blocks — each micro-batch
+        # is scanned and its checks evaluated once
+        stage, _ = _schema_stage(
+            plan, align_to_plan(batch_df, plan), source_col, ord_col,
+            prior=next(iter(prior.values()), None),
+        )
+        stage = stage.localCheckpoint(eager=False)
+        violations = _stage_outputs(stage, sid, plan, [])[1]
+        recorded = [_recorded(stage, *rkey) for rkey in prior]
+    else:
+        res = validate_corpus(
+            {sid: (plan, batch_df)}, source_col, ord_col, prior_registries=prior
+        )
+        violations, recorded = res.violations, list(res.pk_registries.values())
     try:
-        out = violations[0]
-        for v in violations[1:]:
-            out = out.unionByName(v)
-        out.write.mode("overwrite").parquet(
+        violations.write.mode("overwrite").parquet(
             os.path.join(out_dir, "violations", f"batch_id={batch_id}")
         )
-        if new_keys_parts:
-            nk = new_keys_parts[0]
-            for p in new_keys_parts[1:]:
-                nk = nk.unionByName(p)
-            nk.write.mode("overwrite").parquet(
+        if recorded:
+            reduce(DataFrame.unionByName, recorded).select(
+                *REGISTRY_COLUMNS
+            ).write.mode("overwrite").parquet(
                 os.path.join(_registry_path(out_dir), f"batch_id={batch_id}")
             )
     finally:
-        # one cached (ever-growing) registry per micro-batch otherwise
-        # accumulates in executor storage for the stream's lifetime
-        if registry is not None:
-            registry.unpersist()
-        for c in locals().get("batch_caches", []) or []:
-            try:
-                c.unpersist()
-            except Exception:
-                pass
+        if res is not None:
+            res.release()
 
 
 def validate_stream(

@@ -410,3 +410,28 @@ def test_checkpoint_restores_overwrite_mode(spark, tmp_path):
     CheckpointedValidation(out_dir=str(tmp_path / "cpm"), n_partitions=2).run(
         df, plan, key_col="url")
     assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == "static"
+
+
+@pytest.mark.parametrize("scheme", ["", "file://"])
+def test_checkpoint_resume_on_uri_out_dir(spark, tmp_path, scheme):
+    """A resume finds the completed partitions and the frozen registry
+    through the out_dir's Hadoop FileSystem, so a file:// (or hdfs://,
+    s3a://) out_dir resumes like a plain path instead of redoing every
+    partition and losing every dup_pk."""
+    from fairtracks_validator_spark.checkpoint import CheckpointedValidation
+
+    plan = compile_schema({"$id": "pg/uri", "primary_key": ["url"],
+                           "properties": {"url": {"minLength": 1}}})
+    # 50 distinct urls, then 10 rows re-using earlier ones
+    urls = [f"u{i}" for i in range(50)] + [f"u{i}" for i in range(0, 50, 5)]
+    df = spark.createDataFrame(
+        [(u, i, f"s{i}") for i, u in enumerate(urls)],
+        "url string, ord long, source string",
+    )
+    cp = CheckpointedValidation(out_dir=scheme + str(tmp_path / "cp"), n_partitions=4)
+    assert cp.run(df, plan, key_col="url", max_partitions=2)["processed"] == [0, 1]
+    out = cp.run(df, plan, key_col="url")
+    assert (out["processed"], out["skipped"]) == ([2, 3], [0, 1])
+    assert cp.completed_partitions(spark) == [0, 1, 2, 3]
+    viol = spark.read.parquet(cp.violations_dir)
+    assert viol.where(F.col("reason") == "dup_pk").count() == 10

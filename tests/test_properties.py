@@ -14,6 +14,7 @@ from __future__ import annotations
 import hashlib
 import json
 
+import pytest
 from hypothesis import example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -210,3 +211,83 @@ def test_routed_kernel_matches_two_pass(spark, rows, drop_users, user_seed, ext_
     assert rows_of(kernel.verdicts) == rows_of(ref_verdicts)
     assert rows_of(kernel.violations) == rows_of(ref_violations)
     ref.release()
+
+
+# ---- stream of k micro-batches ⇔ one batch run ---------------------------
+#
+# A corpus split by ord into contiguous micro-batches, each run through
+# process_batch against the registry of the batches before it, yields the
+# batch run's violations (descriptions included) and registry rows, FKs
+# dropped. The second plan (a fan-out primary key plus a flat unique)
+# takes the two-pass path, i.e. the cascade and the single-pass window, on
+# both sides.
+_STREAM_SCHEMAS = {
+    "kernel": {"$id": "sb/1", "primary_key": ["k"],
+               "properties": {"v": {"minimum": 0}},
+               "foreign_keys": [{"schema_id": "sb/1", "members": ["j"]}]},
+    "two_pass": {"$id": "sb/1", "primary_key": ["ks[]"],
+                 "properties": {"v": {"minimum": 0},
+                                "ks": {"items": {"type": "string"}},
+                                "k": {"type": "string", "unique": True}},
+                 "foreign_keys": [{"schema_id": "sb/1", "members": ["j"]}]},
+}
+_STREAM_DDL = "source string, ord long, k string, j string, ks array<string>, v long"
+_SKEY = st.sampled_from(["k1", "k2", "k3", None])
+_SROW = st.tuples(
+    st.sampled_from(["a", "b", None]), st.integers(0, 5), _SKEY, _SKEY,
+    st.sampled_from([None, [], ["k1"], ["k1", "k2"], ["k2", "k3"], ["k3", None]]),
+    st.sampled_from([-1, 1]),
+)
+# pinned (cuts [1, 3]): a tied identity, a null-source holder, a
+# schema-failed first row of a key, null keys, and fan-out docs that
+# collide with a prior holder on one key and an in-batch holder on another
+_STREAM_EXAMPLE = [
+    ("a", 0, "k1", "k1", ["k1"], 1), ("a", 0, "k1", "k1", ["k1"], 1),
+    (None, 1, "k2", "k1", ["k2"], 1), ("b", 1, "k2", None, None, 1),
+    ("a", 2, "k3", "k2", ["k3"], -1), ("b", 3, "k3", "k2", ["k3"], 1),
+    ("a", 4, "k1", None, ["k1", "k3"], 1), (None, 4, None, "k3", ["k2", "k3"], 1),
+    ("b", 5, "k2", "k1", ["k3", None], 1),
+]
+
+
+@pytest.mark.parametrize("shape", sorted(_STREAM_SCHEMAS))
+@settings(max_examples=2, deadline=None)
+@given(rows=st.lists(_SROW, min_size=1, max_size=12),
+       cuts=st.lists(st.integers(1, 5), min_size=1, max_size=2, unique=True))
+@example(rows=_STREAM_EXAMPLE, cuts=[1, 3])
+def test_stream_batches_match_batch_run(spark, tmp_path_factory, shape, rows, cuts):
+    import dataclasses
+
+    from fairtracks_validator_spark.plans.schema_compile import compile_schema
+    from fairtracks_validator_spark.runner import VIOLATION_SCHEMA, validate_corpus
+    from fairtracks_validator_spark.streaming.validate_stream import (
+        REGISTRY_COLUMNS, process_batch,
+    )
+
+    plan = compile_schema(_STREAM_SCHEMAS[shape])
+    df = spark.createDataFrame(rows, _STREAM_DDL)
+    out = str(tmp_path_factory.mktemp("stream_vs_batch"))
+    bounds = [0, *sorted(cuts), 6]
+    for batch_id, (lo, hi) in enumerate(zip(bounds, bounds[1:])):
+        process_batch(
+            df.where((F.col("ord") >= lo) & (F.col("ord") < hi)), batch_id, plan, out
+        )
+    batch = validate_corpus(
+        {plan.schema_id: (dataclasses.replace(plan, fks=[]), df)}
+    )
+
+    def rows_of(d, cols):
+        return sorted(map(tuple, d.select(*cols).collect()), key=repr)
+
+    viol_cols = [c.split()[0] for c in VIOLATION_SCHEMA.split(", ")]
+    assert rows_of(spark.read.parquet(f"{out}/violations"), viol_cols) == rows_of(
+        batch.violations, viol_cols
+    )
+    registry = [
+        r.select(*REGISTRY_COLUMNS) for r in batch.pk_registries.values()
+    ]
+    want = sorted(
+        (t for r in registry for t in map(tuple, r.collect())), key=repr
+    )
+    assert rows_of(spark.read.parquet(f"{out}/registry"), REGISTRY_COLUMNS) == want
+    batch.release()

@@ -340,3 +340,85 @@ def test_expectations_stream_per_batch_reports(spark, tmp_path):
     q2.awaitTermination(120)
     rep2 = spark.read.parquet(f"{out}/reports")
     assert rep2.count() > n_first
+
+
+def test_stream_scans_each_micro_batch_once(spark, tmp_path):
+    """The violations write and the registry write share one checkpointed
+    stage: each micro-batch's input rows are read once, so the stream's
+    input-row count equals the source's."""
+    from fairtracks_validator_spark.sources.pages import pages, pages_schema_dict
+
+    src = str(tmp_path / "pages_src")
+    pages(spark, 4000).withColumn("source", F.col("url")).withColumn(
+        "ord", F.col("page_id")
+    ).repartition(2).write.parquet(src)
+    stream = (spark.readStream.schema(spark.read.parquet(src).schema)
+              .option("maxFilesPerTrigger", 1).parquet(src))
+    q = validate_stream(stream, compile_schema(pages_schema_dict()),
+                        str(tmp_path / "out"))
+    assert q.awaitTermination(300)
+    rows = [p["numInputRows"] for p in q.recentProgress if p["numInputRows"]]
+    assert len(rows) == 2 and sum(rows) == 4000, rows
+
+
+def test_stream_tied_identities_blame_neither(spark, tmp_path, PLAN):
+    """Two rows with one (source, ord) identity and one key, in one
+    micro-batch, tie as first holders: neither is blamed, exactly as
+    validate_corpus does (a row_number window used to blame one of them
+    arbitrarily)."""
+    from fairtracks_validator_spark.runner import validate_corpus
+
+    out = str(tmp_path / "tie_out")
+    batch = spark.createDataFrame(
+        [("a", 1, "k1", 5), ("a", 1, "k1", 5), ("b", 2, "k1", 5)], DDL)
+    process_batch(batch, 0, PLAN, out)
+    got = {(r["source"], r["description"])
+           for r in spark.read.parquet(f"{out}/violations").collect()}
+    want = {(r["source"], r["description"])
+            for r in validate_corpus({PLAN.schema_id: (PLAN, batch)})
+            .violations.collect()}
+    assert got == want == {("b", "Duplicate PK in a and b")}
+
+
+_FANOUT = {"$id": "streamf/1.0", "primary_key": ["k[]"],
+           "properties": {"k": {"items": {"type": "string"}},
+                          "v": {"minimum": 0}}}
+
+
+@pytest.mark.parametrize("fanout", [False, True])
+def test_stream_redelivered_document_not_self_blamed(spark, tmp_path, PLAN, fanout):
+    """A document re-delivered in a later batch with the identity of its
+    key's prior holder is neither blamed nor recorded again; another
+    document with that key is blamed on the holder."""
+    plan = compile_schema(_FANOUT) if fanout else PLAN
+    ddl = DDL.replace("k STRING", "k ARRAY<STRING>") if fanout else DDL
+    k = ["k1"] if fanout else "k1"
+    out = str(tmp_path / "redeliver_out")
+    process_batch(spark.createDataFrame([("a", 1, k, 5)], ddl), 0, plan, out)
+    process_batch(
+        spark.createDataFrame([("a", 1, k, 5), ("b", 2, k, 5)], ddl), 1, plan, out)
+    viol = spark.read.parquet(f"{out}/violations")
+    assert {(r["source"], r["description"]) for r in viol.collect()} == {
+        ("b", "Duplicate PK in a and b")}
+    reg = spark.read.parquet(f"{out}/registry")
+    assert [(r["first_source"], r["batch_id"]) for r in reg.collect()] == [("a", 0)]
+
+
+def test_stream_registry_layout_resumes_old_registry(spark, tmp_path, PLAN):
+    """The written registry keeps exactly the REGISTRY_SCHEMA columns, so a
+    registry written earlier in that layout is a prior on resume."""
+    from fairtracks_validator_spark.streaming.validate_stream import REGISTRY_SCHEMA
+
+    out = str(tmp_path / "layout_out")
+    uq = PLAN.uniques[0].check_id
+    spark.createDataFrame([(uq, '["k1"]', "a", 1)], REGISTRY_SCHEMA).write.parquet(
+        f"{out}/registry/batch_id=0")
+    process_batch(
+        spark.createDataFrame([("b", 2, "k1", 5), ("c", 3, "k2", 5)], DDL),
+        1, PLAN, out)
+    viol = spark.read.parquet(f"{out}/violations")
+    assert [(r["source"], r["description"]) for r in viol.collect()] == [
+        ("b", "Duplicate PK in a and b")]
+    written = spark.read.parquet(f"{out}/registry/batch_id=1")
+    assert written.dtypes == spark.createDataFrame([], REGISTRY_SCHEMA).dtypes
+    assert [tuple(r) for r in written.collect()] == [(uq, '["k2"]', "c", 3)]

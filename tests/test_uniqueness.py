@@ -134,3 +134,18 @@ def test_fanout_cascade_unblocks_chain(spark):
     assert rows_set(res.pk, ["key_str", "first_source"]) == {
         ('["K"]', "A"), ('["L"]', "C"),
     }
+
+
+def test_fanout_cascade_null_source_duplicate_blamed(spark):
+    # documents are (source, ord) identities matched null-safely: a
+    # null-source later holder of a fan-out key is blamed, and its other
+    # key is not recorded
+    df = spark.createDataFrame(
+        [(None, 1, ["K"]), (None, 2, ["K", "L"]), ("C", 3, ["L"])],
+        "source STRING, ord INT, ks ARRAY<STRING>",
+    )
+    res = uniqueness_check(df, "pk", ["ks[]"], "x/1.0")
+    assert rows_set(res.violations, ["ord", "key_str"]) == {(2, '["K"]')}
+    assert rows_set(res.pk, ["key_str", "first_source"]) == {
+        ('["K"]', None), ('["L"]', "C"),
+    }
