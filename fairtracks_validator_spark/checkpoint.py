@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 
 from .plans.schema_compile import ValidationPlan
 from .runner import _anti_on_identity, validate_corpus
+from .session import path_exists
 
 LINEAGE_SCHEMA = (
     "part_id int, rows_scanned long, violations long, wall_time_s double, "
@@ -48,13 +49,10 @@ LINEAGE_SCHEMA = (
 
 def _exists(spark: SparkSession, path: str) -> bool:
     """Whether ``path`` holds a committed write (its ``_SUCCESS`` marker),
-    asked of the path's Hadoop FileSystem: ``os.path`` sees only the
-    driver's local disk, so on a file://, hdfs:// or s3a:// out_dir every
-    checkpoint would read as missing and a resume would redo everything."""
-    jvm = spark.sparkContext._jvm
-    marker = jvm.org.apache.hadoop.fs.Path(path, "_SUCCESS")
-    fs = marker.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    return fs.exists(marker)
+    asked of the path's Hadoop FileSystem: on a file://, hdfs:// or s3a://
+    out_dir a local check would read every checkpoint as missing and a
+    resume would redo everything."""
+    return path_exists(spark, path, "_SUCCESS")
 
 
 @dataclasses.dataclass
@@ -151,7 +149,7 @@ class CheckpointedValidation:
                 for uq in plan.uniques
             }
         res = validate_corpus(
-            {plan.schema_id: (dataclasses.replace(plan, fks=[]), subset)},
+            {plan.schema_id: (plan.without_fks(), subset)},
             source_col, ord_col, prior_registries=prior,
         )
         violations = res.violations

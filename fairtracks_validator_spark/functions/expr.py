@@ -60,3 +60,16 @@ def null_safe_group_key(col: Column) -> Column:
     passes through untouched for output.
     """
     return F.coalesce(col.cast("string"), F.lit("\x00null"))
+
+
+def context_memo(store: dict, key, sc, build):
+    """``build()`` once per ``key`` and live SparkContext ``sc``, kept in
+    ``store``. For Columns built once and reused across runs: they are JVM
+    objects, and each function call that builds one is a round trip to the
+    JVM, so a run that rebuilds its expressions pays thousands of them. A
+    restarted session rebuilds instead of reusing Columns of a dead one."""
+    hit = store.get(key)
+    if hit is None or hit[0] is not sc:
+        hit = store[key] = (sc, build())
+    return hit[1]
+

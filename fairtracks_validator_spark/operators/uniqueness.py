@@ -146,6 +146,15 @@ def first_writer(
     not its key's first holder, and ``held`` for a row whose key a prior
     holder records under this very identity (constant false without
     ``prior``, which the optimizer folds away).
+    """
+    fw = FirstWriter(key, prior is not None)
+    return fw.rank(rows, prior), fw.later, fw.held
+
+
+class FirstWriter:
+    """The Columns of :func:`first_writer` for one key column, with or
+    without prior holders, built once and reusable across runs (the
+    kernel keeps one per compiled plan, ``runner._KernelTemplate``).
 
     Rank comes from ``min(struct(ord, source))`` over a KEY-ONLY window
     rather than ``row_number`` ordered by (ord, source): the reduce-stage
@@ -158,35 +167,49 @@ def first_writer(
     every real row (``p`` = 0), so the window's ``min`` reduces them to one
     holder per key with no extra exchange; they are dropped after it.
     """
-    w = Window.partitionBy(key)
-    if prior is None:
-        row_os = F.struct(F.col("ord").alias("o"), F.col("source").alias("s"))
-        # bind the window aggregate ONCE (withColumn) — two inline
-        # F.min(...).over(w) expressions each get their own aggregate
-        # processor in WindowExec, doubling the reduce-stage work
-        ranked = rows.withColumn("_mn", F.min(row_os).over(w))
-        return ranked, row_os > F.col("_mn"), F.lit(False)
-    holders = prior.select(
-        F.col("key_str").alias(key),
-        F.col("first_source").alias("source"),
-        F.col("first_ord").cast("long").alias("ord"),
-        F.lit(0).alias("_p"),
-    )
-    row_os = F.struct(
-        F.col("_p").alias("p"), F.col("ord").alias("o"), F.col("source").alias("s")
-    )
-    ranked = (
-        rows.withColumn("_p", F.lit(1))
-        .unionByName(holders, allowMissingColumns=True)
-        .withColumn("_mn", F.min(row_os).over(w))
-        .where(F.col("_p") == 1)
-    )
-    held = (
-        (F.col("_mn.p") == 0)
-        & F.col("ord").eqNullSafe(F.col("_mn.o"))
-        & F.col("source").eqNullSafe(F.col("_mn.s"))
-    )
-    return ranked, (row_os > F.col("_mn")) & ~held, held
+
+    def __init__(self, key: str, with_prior: bool):
+        self.with_prior = with_prior
+        w = Window.partitionBy(key)
+        if not with_prior:
+            row_os = F.struct(F.col("ord").alias("o"), F.col("source").alias("s"))
+            # bind the window aggregate ONCE (withColumn) — two inline
+            # F.min(...).over(w) expressions each get their own aggregate
+            # processor in WindowExec, doubling the reduce-stage work
+            self.mn = F.min(row_os).over(w)
+            self.later = row_os > F.col("_mn")
+            self.held = F.lit(False)
+            return
+        self.holders = [
+            F.col("key_str").alias(key),
+            F.col("first_source").alias("source"),
+            F.col("first_ord").cast("long").alias("ord"),
+            F.lit(0).alias("_p"),
+        ]
+        self.doc = F.lit(1)
+        self.is_doc = F.col("_p") == 1
+        row_os = F.struct(
+            F.col("_p").alias("p"), F.col("ord").alias("o"), F.col("source").alias("s")
+        )
+        self.mn = F.min(row_os).over(w)
+        self.held = (
+            (F.col("_mn.p") == 0)
+            & F.col("ord").eqNullSafe(F.col("_mn.o"))
+            & F.col("source").eqNullSafe(F.col("_mn.s"))
+        )
+        self.later = (row_os > F.col("_mn")) & ~self.held
+
+    def rank(self, rows: DataFrame, prior: DataFrame | None = None) -> DataFrame:
+        """``rows`` with ``_mn`` bound; ``prior`` is required exactly when
+        this writer was built ``with_prior``."""
+        if not self.with_prior:
+            return rows.withColumn("_mn", self.mn)
+        return (
+            rows.withColumn("_p", self.doc)
+            .unionByName(prior.select(*self.holders), allowMissingColumns=True)
+            .withColumn("_mn", self.mn)
+            .where(self.is_doc)
+        )
 
 
 def _resolve_single_pass(

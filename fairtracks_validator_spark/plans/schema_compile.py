@@ -21,6 +21,7 @@ Extension keywords (root ``README.md:9-81``): ``unique`` (true | [members]),
 
 from __future__ import annotations
 
+import dataclasses
 import re
 import warnings
 from dataclasses import dataclass, field
@@ -91,6 +92,23 @@ class ValidationPlan:
     # loaded schema — the Spark twin of everit's loaded-schema registry
     # (J/ValidatedJSONSchema.java:318-329). Empty ⇒ external refs warn.
     registry: dict = field(default_factory=dict, repr=False)
+    # what the runner derives from this plan, built on first use: the
+    # FK-less twin (``without_fks``) and the kernel's Column templates
+    # (``runner._template``). Never compared or copied — a replaced plan
+    # starts empty.
+    _cache: dict = field(
+        default_factory=dict, init=False, repr=False, compare=False
+    )
+
+    def without_fks(self) -> "ValidationPlan":
+        """This plan with its FK probes left out — the shape of stream
+        micro-batches and checkpoint resumes, which probe FKs elsewhere or
+        not at all. Built once, so every batch shares its kernel templates."""
+        if not self.fks:
+            return self
+        if "without_fks" not in self._cache:
+            self._cache["without_fks"] = dataclasses.replace(self, fks=[])
+        return self._cache["without_fks"]
 
 
 def _note_path(plan: ValidationPlan, path: str, ddl: str | None = None) -> None:

@@ -25,6 +25,14 @@ Two physical shapes implement it, chosen from the compiled plans alone:
   are lazy projections of one plan: nothing is persisted and nothing runs
   before the caller's sink. The registry is complete before any probe by
   construction — the probe side joins the fully aggregated key set.
+
+  The plan shape and its Columns are built once per compiled plan
+  (``_KernelTemplate``, kept on the plan per run shape and live
+  SparkContext, built on the first run rather than at compile time), so a
+  repeated run only builds its DataFrames: about 35 commands to the JVM
+  for the pages plan instead of about 2,700. Only ``wide`` is built by the
+  run; ``verdicts``, ``violations`` and the registries are built when first
+  read, so the observed sink (``sink_observed``) never analyses them.
 - **Two-pass** (``_validate_two_pass``): join checks, more than one
   uniqueness constraint per schema, or nested / array fan-out keys. Each
   phase is its own DataFrame program over persisted intermediates, and
@@ -45,7 +53,6 @@ batch, stream and resume share one first-writer-wins implementation
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
 from functools import reduce
 
 from pyspark.sql import DataFrame
@@ -53,7 +60,8 @@ from pyspark.sql import functions as F
 
 from .operators.checks import apply_checks, checks_pass_predicate
 from .operators.fk import fk_check, fk_violation
-from .operators.uniqueness import first_writer, uniqueness_check
+from .operators.uniqueness import FirstWriter, uniqueness_check
+from .functions.expr import context_memo
 from .functions.keys import flat_key_string, is_flat_members
 from .plans.schema_compile import ValidationPlan
 
@@ -69,6 +77,9 @@ _WIDE_VIOLATION_DDL = (
     "description:string>>"
 )
 
+# Columns that belong to no plan, built once per live SparkContext
+_SHARED: dict = {}
+
 # registries at or below this many distinct keys get an explicit broadcast
 # hint in FK probes (≈ a few hundred MB of key strings); larger ones rely on
 # AQE's runtime broadcast/sort-merge selection.
@@ -83,15 +94,54 @@ BROADCAST_MAX_PK_KEYS = 5_000_000
 DUP_BROADCAST_MAX_KEYS = 2_000_000
 
 
-@dataclass
 class ValidationResult:
-    verdicts: DataFrame  # source, ord, schema_id, validated boolean
-    violations: DataFrame  # VIOLATION_SCHEMA
-    pk_registries: dict[tuple[str, str], DataFrame] = field(default_factory=dict)
-    _persisted: list = field(default_factory=list, repr=False)
-    # one-row-per-doc verdict+nested-violations relation, built in-plan on
-    # the kernel path; None on the two-pass path (wide_verdicts() joins)
-    wide: DataFrame | None = field(default=None, repr=False)
+    """One run's outputs: ``verdicts`` (source, ord, schema_id, validated,
+    status), ``violations`` (``VIOLATION_SCHEMA``), ``pk_registries`` keyed
+    by (schema_id, check_id) and, on the kernel path, ``wide`` — the
+    one-row-per-document verdict+nested-violations relation built in-plan
+    (None on the two-pass path, where ``wide_verdicts()`` joins).
+
+    ``verdicts``, ``violations`` and ``pk_registries`` may be handed in as
+    zero-argument builders, which run on first read: a run whose sink reads
+    only ``wide`` (``sink_observed``) never analyses the others."""
+
+    def __init__(
+        self,
+        verdicts,
+        violations,
+        pk_registries=None,
+        _persisted: list | None = None,
+        wide: DataFrame | None = None,
+    ):
+        self._outputs = {
+            "verdicts": verdicts,
+            "violations": violations,
+            "pk_registries": {} if pk_registries is None else pk_registries,
+        }
+        self._persisted = [] if _persisted is None else _persisted
+        self.wide = wide
+
+    def _output(self, name: str):
+        out = self._outputs[name]
+        if callable(out):
+            out = self._outputs[name] = out()
+        return out
+
+    @property
+    def verdicts(self) -> DataFrame:
+        return self._output("verdicts")
+
+    @property
+    def violations(self) -> DataFrame:
+        return self._output("violations")
+
+    @property
+    def pk_registries(self) -> dict[tuple[str, str], DataFrame]:
+        return self._output("pk_registries")
+
+    def unbuilt(self) -> set[str]:
+        """Names of the lazy outputs not read yet."""
+        return {k for k, v in self._outputs.items() if callable(v)}
 
     def release(self) -> None:
         """Unpersist every relation this run cached. Call after the last
@@ -220,20 +270,22 @@ def sink_observed(
 
     wide = result.wide_verdicts()
     obs = Observation()
-    observed = wide.observe(
-        obs,
-        F.count(F.lit(1)).alias("docs"),
-        # status=='failed', NOT ~validated: orphan docs (status='ignored')
-        # also carry validated=False and must not double-count as failures
-        # (same convention as ValidationResult.summary())
-        F.sum((F.col("status") == F.lit("failed")).cast("long")).alias(
-            "failed_docs"
-        ),
-        F.sum((F.col("status") == F.lit("ignored")).cast("long")).alias(
-            "ignored_docs"
-        ),
-        F.sum(F.size("violations").cast("long")).alias("violations"),
-    )
+    observed = wide.observe(obs, *context_memo(
+        _SHARED, "sink_counts", wide.sparkSession.sparkContext,
+        lambda: [
+            F.count(F.lit(1)).alias("docs"),
+            # status=='failed', NOT ~validated: orphan docs
+            # (status='ignored') also carry validated=False and must not
+            # double-count as failures (same convention as summary())
+            F.sum((F.col("status") == F.lit("failed")).cast("long")).alias(
+                "failed_docs"
+            ),
+            F.sum((F.col("status") == F.lit("ignored")).cast("long")).alias(
+                "ignored_docs"
+            ),
+            F.sum(F.size("violations").cast("long")).alias("violations"),
+        ],
+    ))
     writer = observed.write.mode("overwrite")
     if path is None:
         writer.format("noop").save()
@@ -666,24 +718,27 @@ def validate_routed(
 
     corpus, orphans = route_corpus(df, plans, schema_id_col)
     res = validate_corpus(corpus, source_col, ord_col, seed_registries)
-    orphan_v = orphan_verdicts(orphans)
     wide = res.wide
     if wide is not None:
-        wide = wide.unionByName(orphans.select(
-            "source", "ord", "schema_id",
-            F.lit(False).alias("validated"), F.lit("ignored").alias("status"),
-            F.array(
-                F.struct("check_id", "key_str", "reason", "description")
-            ).alias("violations"),
-        ))
+        wide = wide.unionByName(orphans.select(*context_memo(
+            _SHARED, "orphan_wide", df.sparkSession.sparkContext,
+            lambda: [
+                F.col("source"), F.col("ord"), F.col("schema_id"),
+                F.lit(False).alias("validated"), F.lit("ignored").alias("status"),
+                F.array(
+                    F.struct("check_id", "key_str", "reason", "description")
+                ).alias("violations"),
+            ],
+        )))
     # carry the inner run's caches so release() on the routed result works
     # (code-review r4 — dropping them leaked every persisted relation)
     return ValidationResult(
-        verdicts=res.verdicts.unionByName(orphan_v),
-        violations=res.violations.unionByName(
+        verdicts=lambda: res.verdicts.unionByName(orphan_verdicts(orphans)),
+        violations=lambda: res.violations.unionByName(
             orphans.select(*[c.split()[0] for c in VIOLATION_SCHEMA.split(", ")])
         ),
-        pk_registries=res.pk_registries, _persisted=res._persisted, wide=wide,
+        pk_registries=lambda: res.pk_registries,
+        _persisted=res._persisted, wide=wide,
     )
 
 
@@ -691,22 +746,53 @@ def _union_all(dfs: list[DataFrame]) -> DataFrame:
     return reduce(DataFrame.unionByName, dfs)
 
 
-def _schema_stage(
+# the kernel stage's unfiltered (check_id, ok, message) entry array
+_ENTRY_DDL = "array<struct<check_id:string,ok:boolean,message:string>>"
+
+
+def _template(
     plan: ValidationPlan,
-    df: DataFrame,
+    schema_id: str,
     source_col: str,
     ord_col: str,
-    dup_strategy: str = "window",
-    prior: DataFrame | None = None,
-) -> tuple[DataFrame, list]:
-    """One schema's share of the kernel: a single narrow projection and, with
-    a uniqueness constraint, a single key-only window. Returns the stage and
-    any relations it persisted (``dup_strategy`` broadcast probes only).
-    ``prior`` holders of the constraint ride that window
-    (``operators.uniqueness.first_writer``); the broadcast probe does not
-    read them, so with a prior the window resolves.
+    with_prior: bool,
+    fk_shape: tuple[str, ...],
+    sc,
+) -> "_KernelTemplate":
+    """The plan's kernel template for one run shape, built on first use and
+    kept on the plan (``_KernelTemplate``)."""
+    return context_memo(
+        plan._cache,
+        ("kernel", schema_id, source_col, ord_col, with_prior, fk_shape),
+        sc,
+        lambda: _KernelTemplate(
+            plan, schema_id, source_col, ord_col, with_prior, fk_shape
+        ),
+    )
 
-    Stage columns, one row per document:
+
+def _fk_shape(
+    plan: ValidationPlan, registry_keys: set, registered: set
+) -> tuple[str, ...]:
+    """Per FK of ``plan``: ``"no_schema"`` (J2, target schema not
+    registered), ``"no_docs"`` (a registered target without that constraint
+    records no keys, J3) or ``"probe"`` (join its target registry)."""
+    return tuple(
+        "no_schema" if fk.target_schema_id not in registered
+        else "probe" if (fk.target_schema_id, fk.target_check_id) in registry_keys
+        else "no_docs"
+        for fk in plan.fks
+    )
+
+
+class _KernelTemplate:
+    """Every Column one schema's kernel run reads, built once per compiled
+    plan and run shape — schema id, identity columns, prior holders or not,
+    and each FK's target shape (``_template``). A run only builds its
+    DataFrames from them, so a repeated validation sends a few dozen
+    commands to the JVM instead of rebuilding thousands of expressions.
+
+    Stage columns (``stage``), one row per document:
 
     - ``source``, ``ord``: the identity;
     - ``_ok``: every row check passed;
@@ -720,143 +806,314 @@ def _schema_stage(
       every later one; ``_first_source``: the first holder's source;
     - ``_fk0`` … : each FK's key string, gated by ``_ok`` like ``_key``.
     """
-    from .operators.checks import check_entries
 
-    all_ok = checks_pass_predicate(plan.checks)
-    entries = check_entries(plan.checks)
-    _entry_ddl = "array<struct<check_id:string,ok:boolean,message:string>>"
-    if entries:
-        # UNFILTERED entry array (r6): F.filter is a CodegenFallback HOF, so
-        # filtering here forced every check expression + message to
-        # re-evaluate interpreted per failing row (draft7 violations: 3.2 s
-        # noop vs 0.3 s for the verdicts that share the same checks).
-        # Consumers drop passing entries after explode / on the
-        # materialized array instead; passing entries carry null messages
-        # (check_entries gates them), so the array stays shuffle-light.
-        fails = F.when(~all_ok, F.array(*entries))
-    else:
-        # PK-only plan: F.array() is array<void> and getField on it fails
-        # at analysis (code-review r3) — no row checks means no fails
-        fails = F.lit(None).cast(_entry_ddl)
-    uq = plan.uniques[0] if plan.uniques else None
-    fk_names = [f"_fk{i}" for i in range(len(plan.fks))]
+    def __init__(
+        self,
+        plan: ValidationPlan,
+        schema_id: str,
+        source_col: str,
+        ord_col: str,
+        with_prior: bool,
+        fk_shape: tuple[str, ...],
+    ):
+        from .functions.expr import let_
+        from .operators.checks import check_entries
 
-    cols = [
-        F.col(source_col).alias("source"),
-        F.col(ord_col).cast("long").alias("ord"),
-        all_ok.alias("_ok"),
-        fails.alias("_fails"),
-    ]
-    if uq is not None:
-        cols.append(F.when(all_ok, flat_key_string(uq.members)).alias("_key"))
-    cols += [
-        F.when(all_ok, flat_key_string(fk.members)).alias(name)
-        for fk, name in zip(plan.fks, fk_names)
-    ]
-    narrow = df.select(*cols)
-
-    if uq is None:
-        return narrow.select(
-            "source", "ord", "_ok", "_fails",
-            F.lit(None).cast("string").alias("_key"),
-            F.lit(1).alias("_rn"),
-            F.lit(None).cast("string").alias("_first_source"),
+        self.source_col, self.ord_col = source_col, ord_col
+        self.all_ok = all_ok = checks_pass_predicate(plan.checks)
+        entries = check_entries(plan.checks)
+        if entries:
+            # UNFILTERED entry array (r6): F.filter is a CodegenFallback HOF,
+            # so filtering here forced every check expression + message to
+            # re-evaluate interpreted per failing row (draft7 violations:
+            # 3.2 s noop vs 0.3 s for the verdicts that share the same
+            # checks). Consumers drop passing entries after explode / on the
+            # materialized array instead; passing entries carry null
+            # messages (check_entries gates them), so the array stays
+            # shuffle-light.
+            fails = F.when(~all_ok, F.array(*entries))
+        else:
+            # PK-only plan: F.array() is array<void> and getField on it fails
+            # at analysis (code-review r3) — no row checks means no fails
+            fails = F.lit(None).cast(_ENTRY_DDL)
+        self.uq = uq = plan.uniques[0] if plan.uniques else None
+        self.fk_names = fk_names = [f"_fk{i}" for i in range(len(plan.fks))]
+        src, ord_ = F.col(source_col), F.col(ord_col).cast("long")
+        c = {n: F.col(n) for n in (
+            "source", "ord", "_ok", "_fails", "_key", "_rn", "_first_source",
             *fk_names,
-        ), []
+        )}
+        head = [
+            src.alias("source"), ord_.alias("ord"),
+            all_ok.alias("_ok"), fails.alias("_fails"),
+        ]
+        fk_keys = [
+            F.when(all_ok, flat_key_string(fk.members)).alias(name)
+            for fk, name in zip(plan.fks, fk_names)
+        ]
+        if uq is None:
+            self.narrow = [
+                *head,
+                F.lit(None).cast("string").alias("_key"),
+                F.lit(1).alias("_rn"),
+                F.lit(None).cast("string").alias("_first_source"),
+                *fk_keys,
+            ]
+        else:
+            self.key_raw = flat_key_string(uq.members)
+            # null-proof surrogate (code-review r4): F.concat null-propagates,
+            # so a null source collapsed every no-key null-source row into
+            # ONE null bucket — false dup_pk violations. The isNull flags
+            # make the sentinel collision-free against real values.
+            surrogate = F.concat_ws(
+                "\x00",
+                F.lit(""),
+                src.isNull().cast("string"),
+                F.coalesce(src, F.lit("")),
+                ord_.isNull().cast("string"),
+                F.coalesce(ord_.cast("string"), F.lit("")),
+            )
+            # Shape choices, both for the reduce stage's sort (the single
+            # most expensive step of the pages plan at 40M rows):
+            # - `_key` does not ride the shuffle: it equals `_k2` for keyed
+            #   rows and is only ever read for them (surrogate rows are rank
+            #   1 by construction), so it is re-derived after the window from
+            #   the first byte (surrogates start with NUL, JSON key strings
+            #   with '[') — ~1/3 less shuffle volume.
+            # - rank via min(struct(ord, source)) over a KEY-ONLY window
+            #   (``FirstWriter``): identical (ord, source) identities tie as
+            #   rank 1 — same convention as the broadcast path's comparison
+            #   against the first holder.
+            self.narrow = [
+                *head, *fk_keys,
+                F.coalesce(F.when(all_ok, self.key_raw), surrogate).alias("_k2"),
+            ]
+            self.writer = writer = FirstWriter("_k2", with_prior)
+            k2 = F.col("_k2")
+            self.ranked = [
+                c["source"], c["ord"], c["_ok"], c["_fails"],
+                F.when(
+                    (F.substring(k2, 1, 1) != "\x00") & ~writer.held, k2
+                ).alias("_key"),
+                F.when(writer.later, F.lit(2)).otherwise(F.lit(1)).alias("_rn"),
+                F.col("_mn.s").alias("_first_source"),
+                *[c[n] for n in fk_names],
+            ]
+            self.recorded_where = (
+                c["_ok"] & (c["_rn"] == 1) & c["_key"].isNotNull()
+            )
+            self.recorded_cols = [
+                F.lit(schema_id).alias("schema_id"),
+                F.lit(uq.check_id).alias("check_id"),
+                c["_key"].alias("key_str"),
+                c["source"].alias("first_source"),
+                c["ord"].alias("first_ord"),
+            ]
 
-    # null-proof surrogate (code-review r4): F.concat null-propagates, so a
-    # null source collapsed every no-key null-source row into ONE null
-    # bucket — false dup_pk violations. The isNull flags make the sentinel
-    # collision-free against real values.
-    surrogate = F.concat_ws(
-        "\x00",
-        F.lit(""),
-        F.col("source").isNull().cast("string"),
-        F.coalesce(F.col("source"), F.lit("")),
-        F.col("ord").isNull().cast("string"),
-        F.coalesce(F.col("ord").cast("string"), F.lit("")),
-    )
-    # candidate-broadcast resolution (near-unique corpora — the url-keyed
-    # web regime): two narrow probe jobs find the rare duplicated keys and
-    # their first ok-holders, which then broadcast back into a MAP-ONLY
-    # main pass — no shuffle (and crucially no sort) of the corpus-sized
-    # verdict stream at all. Falls back to the window shuffle when the
-    # duplicate population exceeds the broadcast gate or on streaming input.
-    firsts = None
-    if dup_strategy in ("auto", "broadcast") and not df.isStreaming and prior is None:
-        firsts = _dup_candidate_firsts(
-            df, flat_key_string(uq.members), all_ok, source_col, ord_col
+        # FK probes: only pass-2 documents (_ok and rank 1) probe, masked
+        # like the reference; each entry is null when the document passes
+        pass2 = c["_ok"] & (c["_rn"] == 1)
+        self.probes = []  # (target registry key, hit column, join on, has)
+        fk_entries = []
+        for i, (fk, shape) in enumerate(zip(plan.fks, fk_shape)):
+            key = F.col(f"_fk{i}")
+            probe = pass2 & key.isNotNull()
+
+            def entry(reason: str, fk=fk, key=key):
+                return F.struct(*fk_violation(
+                    reason, fk.check_id, fk.target_schema_id, key, c["source"]
+                ))
+
+            if shape != "probe":
+                fk_entries.append(F.when(probe, entry(f"fk_{shape}")))
+                continue
+            hit, has = F.col(f"_hit{i}"), F.col(f"_has{i}")
+            self.probes.append((
+                (fk.target_schema_id, fk.target_check_id),
+                F.col("key_str").alias(f"_hit{i}"),
+                key == hit,
+                (F.count(F.lit(1)) > 0).alias(f"_has{i}"),
+            ))
+            fk_entries.append(
+                F.when(probe & ~has, entry("fk_no_docs"))
+                .when(probe & hit.isNull(), entry("fk_missing"))
+            )
+
+        # outputs: projections of the probed stage
+        fe = [F.col(f"_fe{i}") for i in range(len(fk_entries))]
+        self.probed = [
+            c["source"], c["ord"], c["_ok"], c["_fails"], c["_key"], c["_rn"],
+            c["_first_source"],
+            *[e.alias(f"_fe{i}") for i, e in enumerate(fk_entries)],
+        ] if fk_entries else None
+        validated = c["_ok"] & (c["_rn"] == 1)
+        for e in fe:
+            validated = validated & e.isNull()
+        status = F.when(validated, "ok").otherwise("failed")
+        sid = F.lit(schema_id).alias("schema_id")
+        self.verdict_cols = [
+            c["source"], c["ord"], sid, validated.alias("validated"),
+            status.alias("status"),
+        ]
+        dup_desc = F.format_string(
+            "Duplicate PK in %s and %s", c["_first_source"], c["source"]
         )
-    if firsts is not None:
+        # check explode: no ¬_ok row filter (r6) — _fails is NULL for passing
+        # rows and explode of a null array emits zero rows; written out, the
+        # filter alias-inlined the full check predicate and pushed it below
+        # the caller's rebalance exchange (every check ran in the scan stage
+        # — one task on single-row-group input — and AGAIN above it). The
+        # let_ identity wrap matters: InferFiltersFromGenerate re-derives
+        # exactly that pushable size(_fails) > 0 filter when the explode
+        # input is a bare ATTRIBUTE, and only then — a non-attribute
+        # generator input is excluded by the rule ("we may evaluate
+        # expensive input expressions multiple times").
+        self.explode_cols = [
+            c["source"], c["ord"],
+            F.explode(let_(c["_fails"], lambda x: x)).alias("_f"),
+        ]
+        self.explode_where = ~F.col("_f.ok")
+        self.fail_cols = [
+            c["source"], c["ord"], sid,
+            F.col("_f.check_id").alias("check_id"),
+            F.lit(None).cast("string").alias("key_str"),
+            F.lit("schema").alias("reason"),
+            F.col("_f.message").alias("description"),
+        ]
+        self.violation_parts = []  # (where, select) after the check explode
+        if uq is not None:
+            self.violation_parts.append((
+                c["_ok"] & (c["_rn"] > 1),
+                [
+                    c["source"], c["ord"], sid,
+                    F.lit(uq.check_id).alias("check_id"),
+                    c["_key"].alias("key_str"),
+                    F.lit("dup_pk").alias("reason"),
+                    dup_desc.alias("description"),
+                ],
+            ))
+        self.violation_parts += [
+            (e.isNotNull(), [c["source"], c["ord"], sid, F.col(f"_fe{i}.*")])
+            for i, e in enumerate(fe)
+        ]
+
+        # nested violation entries for the wide (single-sink) relation —
+        # same rows the flat `violations` view explodes to, kept on the
+        # document row
+        empty = F.array().cast(_WIDE_VIOLATION_DDL)
+        schema_fail_entries = F.coalesce(
+            F.transform(
+                F.filter(c["_fails"], lambda e: ~e.getField("ok")),
+                lambda e: F.struct(
+                    e.getField("check_id").alias("check_id"),
+                    F.lit(None).cast("string").alias("key_str"),
+                    F.lit("schema").alias("reason"),
+                    e.getField("message").alias("description"),
+                ),
+            ),
+            empty,
+        )
+        nested = F.when(~c["_ok"], schema_fail_entries)
+        if uq is not None:
+            nested = nested.when(c["_rn"] > 1, F.array(F.struct(
+                F.lit(uq.check_id).alias("check_id"),
+                c["_key"].alias("key_str"),
+                F.lit("dup_pk").alias("reason"),
+                dup_desc.alias("description"),
+            )))
+        fk_arrays = [F.when(e.isNotNull(), F.array(e)).otherwise(empty) for e in fe]
+        nested = nested.otherwise(F.concat(*fk_arrays) if fk_arrays else empty)
+        self.wide_cols = [
+            c["source"], c["ord"], sid, validated.alias("validated"),
+            status.alias("status"), nested.alias("violations"),
+        ]
+
+    def stage(
+        self,
+        df: DataFrame,
+        prior: DataFrame | None = None,
+        dup_strategy: str = "window",
+    ) -> tuple[DataFrame, list]:
+        """One schema's share of the kernel: a single narrow projection and,
+        with a uniqueness constraint, a single key-only window. Returns the
+        stage and any relations it persisted (``dup_strategy`` broadcast
+        probes only). ``prior`` holders of the constraint ride that window
+        (``operators.uniqueness.FirstWriter``); the broadcast probe does not
+        read them, so with a prior the window resolves.
+
+        NOT persisted: caching a nested-array relation through the columnar
+        cache builder is slower than recomputing, and Spark reuses the
+        shuffle map outputs across actions on this lineage (skipped stages).
+        """
+        if self.uq is None:
+            return df.select(*self.narrow), []
+        if dup_strategy in ("auto", "broadcast") and prior is None and not df.isStreaming:
+            firsts = _dup_candidate_firsts(
+                df, self.key_raw, self.all_ok, self.source_col, self.ord_col
+            )
+            if firsts is not None:
+                return self._broadcast_stage(df, firsts), [firsts]
+        ranked = self.writer.rank(df.select(*self.narrow), prior)
+        return ranked.select(*self.ranked), []
+
+    def _broadcast_stage(self, df: DataFrame, firsts: DataFrame) -> DataFrame:
+        """Candidate-broadcast resolution (near-unique corpora — the
+        url-keyed web regime): two narrow probe jobs found the rare
+        duplicated keys and their first ok-holders (``firsts``), which
+        broadcast back into a MAP-ONLY main pass — no shuffle (and crucially
+        no sort) of the corpus-sized verdict stream at all."""
+        narrow = df.select(
+            *self.narrow[:4],
+            F.when(self.all_ok, self.key_raw).alias("_key"),
+            *self.narrow[4:-1],
+        )
         row_os = F.struct(
             F.col("ord").cast("long").alias("o"), F.col("source").alias("s")
         )
-        stage = (
-            narrow.join(
-                F.broadcast(firsts), narrow["_key"] == firsts["_k"], "left"
-            )
-            .select(
-                "source", "ord", "_ok", "_fails", "_key",
-                # not a duplicated key (no broadcast hit) or the first ok
-                # holder itself ⇒ rank 1; every later ok holder ⇒ rank 2
-                # (downstream only distinguishes ==1 vs >1)
-                F.when(
-                    F.col("_first").isNotNull() & (row_os > F.col("_first")),
-                    F.lit(2),
-                )
-                .otherwise(F.lit(1))
-                .alias("_rn"),
-                F.coalesce(F.col("_first.s"), F.col("source")).alias(
-                    "_first_source"
-                ),
-                *fk_names,
-            )
+        return narrow.join(
+            F.broadcast(firsts), narrow["_key"] == firsts["_k"], "left"
+        ).select(
+            "source", "ord", "_ok", "_fails", "_key",
+            # not a duplicated key (no broadcast hit) or the first ok holder
+            # itself ⇒ rank 1; every later ok holder ⇒ rank 2 (downstream
+            # only distinguishes ==1 vs >1)
+            F.when(
+                F.col("_first").isNotNull() & (row_os > F.col("_first")), F.lit(2)
+            ).otherwise(F.lit(1)).alias("_rn"),
+            F.coalesce(F.col("_first.s"), F.col("source")).alias("_first_source"),
+            *self.fk_names,
         )
-        return stage, [firsts]
 
-    # NOT persisted: caching a nested-array relation through the columnar
-    # cache builder is slower than recomputing, and Spark reuses the
-    # shuffle map outputs across actions on this lineage (skipped stages).
-    #
-    # Shape choices, both for the reduce stage's sort (the single most
-    # expensive step of the pages plan at 40M rows):
-    # - `_key` does not ride the shuffle: it equals `_k2` for keyed rows
-    #   and is only ever read for them (surrogate rows are rank 1 by
-    #   construction), so it is re-derived after the window from the
-    #   first byte (surrogates start with NUL, JSON key strings with
-    #   '[') — ~1/3 less shuffle volume.
-    # - rank via min(struct(ord, source)) over a KEY-ONLY window
-    #   (``first_writer``): identical (ord, source) identities tie as rank
-    #   1 — same convention as the broadcast path's comparison against
-    #   the first holder.
-    ranked, later, held = first_writer(
-        narrow.withColumn("_k2", F.coalesce(F.col("_key"), surrogate)).drop("_key"),
-        "_k2", prior,
-    )
-    stage = ranked.select(
-        "source", "ord", "_ok", "_fails",
-        F.when(
-            (F.substring("_k2", 1, 1) != "\x00") & ~held, F.col("_k2")
-        ).alias("_key"),
-        F.when(later, F.lit(2)).otherwise(F.lit(1)).alias("_rn"),
-        F.col("_mn.s").alias("_first_source"),
-        *fk_names,
-    )
-    return stage, []
+    def recorded(self, stage: DataFrame) -> DataFrame:
+        """The registry rows a stage records: keyed first holders that pass
+        every check — shared by the kernel and the stream's micro-batches."""
+        return stage.where(self.recorded_where).select(*self.recorded_cols)
 
+    def probe(self, stage: DataFrame, registry) -> DataFrame:
+        """Join each probed FK's target registry (``registry(key)``) onto
+        ``stage`` and bind one violation entry per FK (``_fe0`` …)."""
+        for rkey, hit, on, has in self.probes:
+            reg = registry(rkey)
+            stage = stage.join(reg.select(hit).distinct(), on, "left").crossJoin(
+                reg.agg(has)
+            )
+        return stage if self.probed is None else stage.select(*self.probed)
 
-def _recorded(stage: DataFrame, schema_id: str, check_id: str) -> DataFrame:
-    """The registry rows a stage records: keyed first holders that pass
-    every check — shared by the kernel and the stream's micro-batches."""
-    return stage.where(
-        F.col("_ok") & (F.col("_rn") == 1) & F.col("_key").isNotNull()
-    ).select(
-        F.lit(schema_id).alias("schema_id"),
-        F.lit(check_id).alias("check_id"),
-        F.col("_key").alias("key_str"),
-        F.col("source").alias("first_source"),
-        F.col("ord").alias("first_ord"),
-    )
+    def verdicts(self, probed: DataFrame) -> DataFrame:
+        return probed.select(*self.verdict_cols)
+
+    def violations(self, probed: DataFrame) -> DataFrame:
+        """The flat view: the codegen explode of the check entries, plus one
+        branch per duplicate and per FK entry kind."""
+        parts = [
+            probed.select(*self.explode_cols).where(self.explode_where)
+            .select(*self.fail_cols)
+        ]
+        parts += [probed.where(w).select(*cols) for w, cols in self.violation_parts]
+        return _union_all(parts)
+
+    def wide(self, probed: DataFrame) -> DataFrame:
+        return probed.select(*self.wide_cols)
 
 
 def _validate_kernel(
@@ -881,149 +1138,57 @@ def _validate_kernel(
     seed: exactly one scan and one shuffle — the web-scale pages plan. A
     probed registry re-derives its schema's stage: column pruning narrows
     it to the key, so its exchange is not shared with that schema's output.
+
+    Only ``wide`` is built here; verdicts, violations and the registries no
+    FK probes are built when first read.
     """
-    persisted: list = []
-    stages: dict[str, DataFrame] = {}
-    registries: dict[tuple[str, str], DataFrame] = {}
-    for sid, (plan, df) in corpus.items():
-        rkey = (sid, plan.uniques[0].check_id) if plan.uniques else None
-        stage, cached = _schema_stage(
-            plan, df, source_col, ord_col, dup_strategy,
-            prior_registries.get(rkey),
-        )
-        persisted += cached
-        stages[sid] = stage
-        if rkey is not None:
-            reg = _recorded(stage, *rkey)
-            seed = seed_registries.get(rkey)
-            registries[rkey] = reg if seed is None else reg.unionByName(seed)
-    for rkey, seed in seed_registries.items():
-        registries.setdefault(rkey, seed)
     registered = set(corpus) | {sid for sid, _ in seed_registries}
+    rkeys = {
+        sid: (sid, plan.uniques[0].check_id)
+        for sid, (plan, _) in corpus.items() if plan.uniques
+    }
+    owner = {rkey: sid for sid, rkey in rkeys.items()}
+    registry_keys = set(owner) | set(seed_registries)
+    persisted: list = []
+    templates: dict[str, _KernelTemplate] = {}
+    stages: dict[str, DataFrame] = {}
+    for sid, (plan, df) in corpus.items():
+        prior = prior_registries.get(rkeys.get(sid))
+        tpl = templates[sid] = _template(
+            plan, sid, source_col, ord_col, prior is not None,
+            _fk_shape(plan, registry_keys, registered),
+            df.sparkSession.sparkContext,
+        )
+        stages[sid], cached = tpl.stage(df, prior, dup_strategy)
+        persisted += cached
 
-    verdicts, violations, wide = [], [], []
-    for sid, (plan, _) in corpus.items():
-        probed, fk_entries = _probe_fks(stages[sid], plan, registries, registered)
-        v, x, w = _stage_outputs(probed, sid, plan, fk_entries)
-        verdicts.append(v)
-        violations.append(x)
-        wide.append(w)
+    registries: dict[tuple[str, str], DataFrame] = {}
+
+    def registry(rkey: tuple[str, str]) -> DataFrame:
+        if rkey not in registries:
+            seed, sid = seed_registries.get(rkey), owner.get(rkey)
+            if sid is None:
+                registries[rkey] = seed
+            else:
+                reg = templates[sid].recorded(stages[sid])
+                registries[rkey] = reg if seed is None else reg.unionByName(seed)
+        return registries[rkey]
+
+    probed = {sid: templates[sid].probe(stages[sid], registry) for sid in corpus}
     return ValidationResult(
-        verdicts=_union_all(verdicts), violations=_union_all(violations),
-        pk_registries=registries, _persisted=persisted, wide=_union_all(wide),
-    )
-
-
-def _probe_fks(
-    stage: DataFrame,
-    plan: ValidationPlan,
-    registries: dict[tuple[str, str], DataFrame],
-    registered: set[str],
-) -> tuple[DataFrame, list]:
-    """Join each FK's target registry onto ``stage``; returns the joined
-    relation and one violation-entry Column per FK (null when the document
-    passes it)."""
-    pass2 = F.col("_ok") & (F.col("_rn") == 1)  # masked like the reference
-    entries = []
-    for i, fk in enumerate(plan.fks):
-        key = F.col(f"_fk{i}")
-        probe = pass2 & key.isNotNull()
-
-        def entry(reason: str, fk=fk, key=key):
-            return F.struct(*fk_violation(
-                reason, fk.check_id, fk.target_schema_id, key, F.col("source")
-            ))
-
-        rkey = (fk.target_schema_id, fk.target_check_id)
-        if fk.target_schema_id not in registered:
-            entries.append(F.when(probe, entry("fk_no_schema")))  # J2
-        elif rkey not in registries:
-            # registered target without that constraint records no keys (J3)
-            entries.append(F.when(probe, entry("fk_no_docs")))
-        else:
-            reg = registries[rkey]
-            hit, has = f"_hit{i}", f"_has{i}"
-            stage = stage.join(
-                reg.select(F.col("key_str").alias(hit)).distinct(),
-                key == F.col(hit), "left",
-            ).crossJoin(reg.agg((F.count(F.lit(1)) > 0).alias(has)))
-            entries.append(
-                F.when(probe & ~F.col(has), entry("fk_no_docs"))
-                .when(probe & F.col(hit).isNull(), entry("fk_missing"))
-            )
-    return stage, entries
-
-
-def _stage_outputs(
-    probed: DataFrame, schema_id: str, plan: ValidationPlan, fk_entries: list
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(verdicts, violations, wide) of one schema — projections of the
-    probed stage, plus the codegen explode of its check entries."""
-    uq = plan.uniques[0] if plan.uniques else None
-    fe = [f"_fe{i}" for i in range(len(fk_entries))]
-    probed = probed.select(
-        "source", "ord", "_ok", "_fails", "_key", "_rn", "_first_source",
-        *[e.alias(n) for e, n in zip(fk_entries, fe)],
-    )
-    validated = F.col("_ok") & (F.col("_rn") == 1)
-    for n in fe:
-        validated = validated & F.col(n).isNull()
-    status = F.when(validated, "ok").otherwise("failed")
-    sid = F.lit(schema_id).alias("schema_id")
-
-    verdicts = probed.select(
-        "source", "ord", sid, validated.alias("validated")
-    ).withColumn("status", F.when(F.col("validated"), "ok").otherwise("failed"))
-    dup_desc = F.format_string(
-        "Duplicate PK in %s and %s", F.col("_first_source"), F.col("source")
-    )
-    parts = [_explode_fails(probed, schema_id)]
-    if uq is not None:
-        parts.append(probed.where(F.col("_ok") & (F.col("_rn") > 1)).select(
-            "source", "ord", sid,
-            F.lit(uq.check_id).alias("check_id"),
-            F.col("_key").alias("key_str"),
-            F.lit("dup_pk").alias("reason"),
-            dup_desc.alias("description"),
-        ))
-    parts += [
-        probed.where(F.col(n).isNotNull()).select("source", "ord", sid, f"{n}.*")
-        for n in fe
-    ]
-    violations = _union_all(parts)
-
-    # nested violation entries for the wide (single-sink) relation — same
-    # rows the flat `violations` view explodes to, kept on the document row
-    _empty_viol = F.array().cast(_WIDE_VIOLATION_DDL)
-    schema_fail_entries = F.coalesce(
-        F.transform(
-            F.filter(F.col("_fails"), lambda e: ~e.getField("ok")),
-            lambda e: F.struct(
-                e.getField("check_id").alias("check_id"),
-                F.lit(None).cast("string").alias("key_str"),
-                F.lit("schema").alias("reason"),
-                e.getField("message").alias("description"),
-            ),
+        verdicts=lambda: _union_all(
+            [templates[sid].verdicts(p) for sid, p in probed.items()]
         ),
-        _empty_viol,
+        violations=lambda: _union_all(
+            [templates[sid].violations(p) for sid, p in probed.items()]
+        ),
+        pk_registries=lambda: {
+            rkey: registry(rkey)
+            for rkey in [*owner, *(k for k in seed_registries if k not in owner)]
+        },
+        _persisted=persisted,
+        wide=_union_all([templates[sid].wide(p) for sid, p in probed.items()]),
     )
-    nested = F.when(~F.col("_ok"), schema_fail_entries)
-    if uq is not None:
-        nested = nested.when(F.col("_rn") > 1, F.array(F.struct(
-            F.lit(uq.check_id).alias("check_id"),
-            F.col("_key").alias("key_str"),
-            F.lit("dup_pk").alias("reason"),
-            dup_desc.alias("description"),
-        )))
-    fk_arrays = [
-        F.when(F.col(n).isNotNull(), F.array(n)).otherwise(_empty_viol) for n in fe
-    ]
-    nested = nested.otherwise(F.concat(*fk_arrays) if fk_arrays else _empty_viol)
-    wide = probed.select(
-        "source", "ord", sid, validated.alias("validated"), status.alias("status"),
-        nested.alias("violations"),
-    )
-    return verdicts, violations, wide
 
 
 def _dup_candidate_firsts(
@@ -1107,29 +1272,3 @@ def _dup_candidate_firsts(
         firsts.unpersist()
         return None
     return firsts
-
-
-def _explode_fails(narrow: DataFrame, schema_id: str) -> DataFrame:
-    # No ~_ok row filter (r6): _fails is NULL for passing rows (it is gated
-    # on ¬all_ok at construction) and explode of a null array emits zero
-    # rows — the filter was redundant, and written out it alias-inlined the
-    # full check predicate and pushed it below the caller's rebalance
-    # exchange (every check ran in the scan stage — one task on
-    # single-row-group input — and AGAIN above it). The let_ identity wrap
-    # matters: InferFiltersFromGenerate re-derives exactly that pushable
-    # size(_fails) > 0 filter when the explode input is a bare ATTRIBUTE,
-    # and only then — a non-attribute generator input is excluded by the
-    # rule ("we may evaluate expensive input expressions multiple times").
-    from .functions.expr import let_
-
-    return narrow.select(
-        "source", "ord",
-        F.explode(let_(F.col("_fails"), lambda x: x)).alias("_f"),
-    ).where(~F.col("_f.ok")).select(
-        "source", "ord",
-        F.lit(schema_id).alias("schema_id"),
-        F.col("_f.check_id").alias("check_id"),
-        F.lit(None).cast("string").alias("key_str"),
-        F.lit("schema").alias("reason"),
-        F.col("_f.message").alias("description"),
-    )

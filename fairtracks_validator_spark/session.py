@@ -58,3 +58,13 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def path_exists(spark: SparkSession, path: str, child: str | None = None) -> bool:
+    """Whether ``path`` (or its ``child``) exists, asked of the path's
+    Hadoop FileSystem: ``os.path`` sees only the driver's local disk, so on
+    a file://, hdfs:// or s3a:// directory it would read as missing."""
+    sc = spark.sparkContext
+    fs_path = sc._jvm.org.apache.hadoop.fs.Path
+    p = fs_path(path) if child is None else fs_path(path, child)
+    return p.getFileSystem(sc._jsc.hadoopConfiguration()).exists(p)

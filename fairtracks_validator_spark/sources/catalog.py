@@ -27,6 +27,8 @@ import warnings
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.expr import context_memo
+
 ALT_SCHEMA_KEYS = ["@schema", "_schema", "$schema"]  # ValidableDoc.java:25-31
 PARENT_SCHEMA_KEY = "fair_tracks"
 
@@ -203,26 +205,36 @@ def route_corpus(
     documents whose schema id is not registered —
     ``OrphanValidableDocException.java:15``).
     """
-    corpus = {
-        sid: (plan, df.where(F.col(schema_id_col) == sid))
-        for sid, plan in plans.items()
-    }
-    orphans = df.where(
-        ~F.col(schema_id_col).isin(list(plans.keys()))
-        | F.col(schema_id_col).isNull()
-    ).select(
-        F.col("source"),
-        F.col("ord").cast("long").alias("ord"),
-        F.col(schema_id_col).alias("schema_id"),
-        F.lit("orphan").alias("check_id"),
-        F.lit(None).cast("string").alias("key_str"),
-        F.lit("orphan").alias("reason"),
-        F.format_string(
-            "Skipping schema validation (schema with URI %s not found)",
-            F.coalesce(F.col(schema_id_col), F.lit("null")),
-        ).alias("description"),
+    routes, orphan_where, orphan_cols = context_memo(
+        _ROUTES, (schema_id_col, tuple(plans)), df.sparkSession.sparkContext,
+        lambda: _route_columns(list(plans), schema_id_col),
     )
-    return corpus, orphans
+    corpus = {sid: (plan, df.where(routes[sid])) for sid, plan in plans.items()}
+    return corpus, df.where(orphan_where).select(*orphan_cols)
+
+
+# route_corpus's Columns per (discriminator, schema ids), built once
+_ROUTES: dict = {}
+
+
+def _route_columns(schema_ids: list[str], schema_id_col: str):
+    sid_col = F.col(schema_id_col)
+    return (
+        {sid: sid_col == sid for sid in schema_ids},
+        ~sid_col.isin(schema_ids) | sid_col.isNull(),
+        [
+            F.col("source"),
+            F.col("ord").cast("long").alias("ord"),
+            sid_col.alias("schema_id"),
+            F.lit("orphan").alias("check_id"),
+            F.lit(None).cast("string").alias("key_str"),
+            F.lit("orphan").alias("reason"),
+            F.format_string(
+                "Skipping schema validation (schema with URI %s not found)",
+                F.coalesce(sid_col, F.lit("null")),
+            ).alias("description"),
+        ],
+    )
 
 
 def orphan_verdicts(orphans: DataFrame) -> DataFrame:

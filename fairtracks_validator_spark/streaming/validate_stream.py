@@ -24,7 +24,6 @@ append is guarded the same way.
 
 from __future__ import annotations
 
-import dataclasses
 import os
 from functools import reduce
 
@@ -53,7 +52,14 @@ def _load_registry(spark, out_dir: str, before_batch_id: int) -> DataFrame:
     """
     from pyspark.errors import AnalysisException
 
+    from ..session import path_exists
+
     path = _registry_path(out_dir)
+    if not path_exists(spark, path):
+        # no registry yet (first batch): nothing to probe against. Asked of
+        # the path's FileSystem first — a failed read is logged as an error
+        # with a stack trace by Spark's execution listener bus
+        return spark.createDataFrame([], REGISTRY_SCHEMA)
     try:
         df = spark.read.option("basePath", path).parquet(path)
     except AnalysisException as e:
@@ -65,7 +71,7 @@ def _load_registry(spark, out_dir: str, before_batch_id: int) -> DataFrame:
             # PROPAGATE so the micro-batch retries — swallowing them would
             # silently validate against an empty registry (advice r4)
             raise
-        # no registry yet (first batch): nothing to probe against
+        # removed between the check and the read
         return spark.createDataFrame([], REGISTRY_SCHEMA)
     if "batch_id" not in df.columns:
         return spark.createDataFrame([], REGISTRY_SCHEMA)
@@ -84,12 +90,9 @@ def process_batch(
     tests / backfills): a batch run over the micro-batch whose uniqueness
     constraints see every earlier batch's registry as prior holders. FK
     probes stay out of the stream."""
-    from ..runner import (
-        _kernel_fits, _recorded, _schema_stage, _stage_outputs, align_to_plan,
-        validate_corpus,
-    )
+    from ..runner import _kernel_fits, _template, align_to_plan, validate_corpus
 
-    plan = dataclasses.replace(plan, fks=[])
+    plan = plan.without_fks()
     sid = plan.schema_id
     prior = {}
     if plan.uniques:
@@ -104,13 +107,15 @@ def process_batch(
         # lazily checkpoint the one stage both read, so the first write
         # materializes it and the second reads its blocks — each micro-batch
         # is scanned and its checks evaluated once
-        stage, _ = _schema_stage(
-            plan, align_to_plan(batch_df, plan), source_col, ord_col,
-            prior=next(iter(prior.values()), None),
+        held = next(iter(prior.values()), None)
+        tpl = _template(
+            plan, sid, source_col, ord_col, held is not None, (),
+            batch_df.sparkSession.sparkContext,
         )
+        stage, _ = tpl.stage(align_to_plan(batch_df, plan), held)
         stage = stage.localCheckpoint(eager=False)
-        violations = _stage_outputs(stage, sid, plan, [])[1]
-        recorded = [_recorded(stage, *rkey) for rkey in prior]
+        violations = tpl.violations(stage)
+        recorded = [tpl.recorded(stage)] if plan.uniques else []
     else:
         res = validate_corpus(
             {sid: (plan, batch_df)}, source_col, ord_col, prior_registries=prior

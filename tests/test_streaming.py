@@ -422,3 +422,18 @@ def test_stream_registry_layout_resumes_old_registry(spark, tmp_path, PLAN):
     written = spark.read.parquet(f"{out}/registry/batch_id=1")
     assert written.dtypes == spark.createDataFrame([], REGISTRY_SCHEMA).dtypes
     assert [tuple(r) for r in written.collect()] == [(uq, '["k2"]', "c", 3)]
+
+
+def test_missing_registry_is_not_read(spark, tmp_path, monkeypatch):
+    # the first micro-batch has no registry yet: the path's FileSystem says
+    # so, and no failed read (an error trace in Spark's log) is attempted
+    from fairtracks_validator_spark.streaming import validate_stream as vs
+
+    def no_read(_session):
+        raise AssertionError("spark.read was called")
+
+    monkeypatch.setattr(type(spark), "read", property(no_read))
+    reg = vs._load_registry(spark, str(tmp_path / "stream_out"), 0)
+    monkeypatch.undo()
+    assert reg.schema == spark.createDataFrame([], vs.REGISTRY_SCHEMA).schema
+    assert reg.count() == 0
