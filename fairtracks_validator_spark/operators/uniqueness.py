@@ -139,8 +139,9 @@ def uniqueness_check(
 def first_writer(
     rows: DataFrame, key: str, prior: DataFrame | None = None
 ) -> tuple[DataFrame, Column, Column]:
-    """Bind ``_mn``, the first holder ``struct(o=ord, s=source)`` of each
-    row's ``key``, over ONE key-only window.
+    """Bind ``_id``, the row's ``struct(o=ord, s=source)`` identity, and
+    ``_mn``, the first holder's identity for its ``key``, over ONE key-only
+    window.
 
     Returns ``(ranked, later, held)``: ``later`` is true for a row that is
     not its key's first holder, and ``held`` for a row whose key a prior
@@ -148,7 +149,7 @@ def first_writer(
     ``prior``, which the optimizer folds away).
     """
     fw = FirstWriter(key, prior is not None)
-    return fw.rank(rows, prior), fw.later, fw.held
+    return fw.rank(rows.withColumn("_id", fw.identity), prior), fw.later, fw.held
 
 
 class FirstWriter:
@@ -156,57 +157,69 @@ class FirstWriter:
     without prior holders, built once and reusable across runs (the
     kernel keeps one per compiled plan, ``runner._KernelTemplate``).
 
-    Rank comes from ``min(struct(ord, source))`` over a KEY-ONLY window
-    rather than ``row_number`` ordered by (ord, source): the reduce-stage
-    sort key is just the key string (half the comparator work — measured on
-    the 40M-row scaling bench), and the first-holder choice does not lean on
-    intra-key sort stability (identical (ord, source) identities tie as
-    first instead of one being arbitrarily blamed).
+    Rows carry their identity as ONE column, ``_id`` = ``identity``
+    (``struct(o=ord, s=source)``), and rank by ``min(_id)`` over a
+    KEY-ONLY window: the identity crosses the window's exchange once, and
+    the reduce-stage sort key is just the key string (half the comparator
+    work of ``row_number`` ordered by (ord, source) — measured on the
+    40M-row scaling bench). The first-holder choice does not lean on
+    intra-key sort stability: identical (ord, source) identities tie as
+    first instead of one being arbitrarily blamed.
 
     ``prior`` rows ride the same shuffle as pseudo-rows ranked ahead of
-    every real row (``p`` = 0), so the window's ``min`` reduces them to one
-    holder per key with no extra exchange; they are dropped after it.
+    every real row (``_id.p`` = 0 against 1), so the window's ``min``
+    reduces them to one holder per key with no extra exchange; they are
+    dropped after it.
     """
 
-    def __init__(self, key: str, with_prior: bool):
+    def __init__(
+        self,
+        key: str,
+        with_prior: bool,
+        order: Column | None = None,
+        source: Column | None = None,
+    ):
+        """``order`` and ``source`` build the identity (default: the
+        ``ord`` and ``source`` columns)."""
         self.with_prior = with_prior
-        w = Window.partitionBy(key)
+        ident = [
+            (F.col("ord") if order is None else order).alias("o"),
+            (F.col("source") if source is None else source).alias("s"),
+        ]
+        row, first = F.col("_id"), F.col("_mn")
+        # bind the window aggregate ONCE (withColumn) — two inline
+        # F.min(...).over(w) expressions each get their own aggregate
+        # processor in WindowExec, doubling the reduce-stage work
+        self.mn = F.min(row).over(Window.partitionBy(key))
         if not with_prior:
-            row_os = F.struct(F.col("ord").alias("o"), F.col("source").alias("s"))
-            # bind the window aggregate ONCE (withColumn) — two inline
-            # F.min(...).over(w) expressions each get their own aggregate
-            # processor in WindowExec, doubling the reduce-stage work
-            self.mn = F.min(row_os).over(w)
-            self.later = row_os > F.col("_mn")
+            self.identity = F.struct(*ident)
+            self.later = row > first
             self.held = F.lit(False)
             return
+        self.identity = F.struct(F.lit(1).alias("p"), *ident)
         self.holders = [
             F.col("key_str").alias(key),
-            F.col("first_source").alias("source"),
-            F.col("first_ord").cast("long").alias("ord"),
-            F.lit(0).alias("_p"),
+            F.struct(
+                F.lit(0).alias("p"),
+                F.col("first_ord").cast("long").alias("o"),
+                F.col("first_source").alias("s"),
+            ).alias("_id"),
         ]
-        self.doc = F.lit(1)
-        self.is_doc = F.col("_p") == 1
-        row_os = F.struct(
-            F.col("_p").alias("p"), F.col("ord").alias("o"), F.col("source").alias("s")
-        )
-        self.mn = F.min(row_os).over(w)
+        self.is_doc = F.col("_id.p") == 1
         self.held = (
             (F.col("_mn.p") == 0)
-            & F.col("ord").eqNullSafe(F.col("_mn.o"))
-            & F.col("source").eqNullSafe(F.col("_mn.s"))
+            & F.col("_id.o").eqNullSafe(F.col("_mn.o"))
+            & F.col("_id.s").eqNullSafe(F.col("_mn.s"))
         )
-        self.later = (row_os > F.col("_mn")) & ~self.held
+        self.later = (row > first) & ~self.held
 
     def rank(self, rows: DataFrame, prior: DataFrame | None = None) -> DataFrame:
-        """``rows`` with ``_mn`` bound; ``prior`` is required exactly when
-        this writer was built ``with_prior``."""
+        """``rows`` (with ``_id``) with ``_mn`` bound; ``prior`` is required
+        exactly when this writer was built ``with_prior``."""
         if not self.with_prior:
             return rows.withColumn("_mn", self.mn)
         return (
-            rows.withColumn("_p", self.doc)
-            .unionByName(prior.select(*self.holders), allowMissingColumns=True)
+            rows.unionByName(prior.select(*self.holders), allowMissingColumns=True)
             .withColumn("_mn", self.mn)
             .where(self.is_doc)
         )

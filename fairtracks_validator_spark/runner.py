@@ -139,10 +139,6 @@ class ValidationResult:
     def pk_registries(self) -> dict[tuple[str, str], DataFrame]:
         return self._output("pk_registries")
 
-    def unbuilt(self) -> set[str]:
-        """Names of the lazy outputs not read yet."""
-        return {k for k, v in self._outputs.items() if callable(v)}
-
     def release(self) -> None:
         """Unpersist every relation this run cached. Call after the last
         action on verdicts/violations/registries — a long-lived session
@@ -843,17 +839,15 @@ class _KernelTemplate:
             "source", "ord", "_ok", "_fails", "_key", "_rn", "_first_source",
             *fk_names,
         )}
-        head = [
-            src.alias("source"), ord_.alias("ord"),
-            all_ok.alias("_ok"), fails.alias("_fails"),
-        ]
-        fk_keys = [
+        self.ident = [src.alias("source"), ord_.alias("ord")]
+        self.checked = [all_ok.alias("_ok"), fails.alias("_fails")]
+        self.fk_keys = fk_keys = [
             F.when(all_ok, flat_key_string(fk.members)).alias(name)
             for fk, name in zip(plan.fks, fk_names)
         ]
         if uq is None:
             self.narrow = [
-                *head,
+                *self.ident, *self.checked,
                 F.lit(None).cast("string").alias("_key"),
                 F.lit(1).alias("_rn"),
                 F.lit(None).cast("string").alias("_first_source"),
@@ -880,18 +874,20 @@ class _KernelTemplate:
             #   1 by construction), so it is re-derived after the window from
             #   the first byte (surrogates start with NUL, JSON key strings
             #   with '[') — ~1/3 less shuffle volume.
-            # - rank via min(struct(ord, source)) over a KEY-ONLY window
-            #   (``FirstWriter``): identical (ord, source) identities tie as
-            #   rank 1 — same convention as the broadcast path's comparison
-            #   against the first holder.
+            # - the identity rides it once, as the ``_id`` struct the window
+            #   ranks on (``FirstWriter``); source and ord are re-exposed
+            #   from it above the window. Identical (ord, source) identities
+            #   tie as rank 1 — same convention as the broadcast path's
+            #   comparison against the first holder.
+            self.writer = writer = FirstWriter("_k2", with_prior, ord_, src)
             self.narrow = [
-                *head, *fk_keys,
+                writer.identity.alias("_id"), *self.checked, *fk_keys,
                 F.coalesce(F.when(all_ok, self.key_raw), surrogate).alias("_k2"),
             ]
-            self.writer = writer = FirstWriter("_k2", with_prior)
             k2 = F.col("_k2")
             self.ranked = [
-                c["source"], c["ord"], c["_ok"], c["_fails"],
+                F.col("_id.s").alias("source"), F.col("_id.o").alias("ord"),
+                c["_ok"], c["_fails"],
                 F.when(
                     (F.substring(k2, 1, 1) != "\x00") & ~writer.held, k2
                 ).alias("_key"),
@@ -1063,9 +1059,9 @@ class _KernelTemplate:
         broadcast back into a MAP-ONLY main pass — no shuffle (and crucially
         no sort) of the corpus-sized verdict stream at all."""
         narrow = df.select(
-            *self.narrow[:4],
+            *self.ident, *self.checked,
             F.when(self.all_ok, self.key_raw).alias("_key"),
-            *self.narrow[4:-1],
+            *self.fk_keys,
         )
         row_os = F.struct(
             F.col("ord").cast("long").alias("o"), F.col("source").alias("s")
