@@ -136,26 +136,15 @@ def uniqueness_check(
     return UniquenessResult(violations=violations, pk=pk, persisted=cached)
 
 
-def first_writer(
-    rows: DataFrame, key: str, prior: DataFrame | None = None
-) -> tuple[DataFrame, Column, Column]:
-    """Bind ``_id``, the row's ``struct(o=ord, s=source)`` identity, and
-    ``_mn``, the first holder's identity for its ``key``, over ONE key-only
-    window.
-
-    Returns ``(ranked, later, held)``: ``later`` is true for a row that is
-    not its key's first holder, and ``held`` for a row whose key a prior
-    holder records under this very identity (constant false without
-    ``prior``, which the optimizer folds away).
-    """
-    fw = FirstWriter(key, prior is not None)
-    return fw.rank(rows.withColumn("_id", fw.identity), prior), fw.later, fw.held
-
-
 class FirstWriter:
-    """The Columns of :func:`first_writer` for one key column, with or
-    without prior holders, built once and reusable across runs (the
-    kernel keeps one per compiled plan, ``runner._KernelTemplate``).
+    """First-writer-wins over one key column, with or without prior
+    holders: ``rank`` binds ``_mn``, the first holder's identity of each
+    row's key, over ONE key-only window. ``later`` is true for a row that
+    is not its key's first holder, and ``held`` for a row whose key a prior
+    holder records under this very identity (constant false without prior
+    holders, which the optimizer folds away). Its Columns are built once
+    and reusable across runs (the kernel keeps one per compiled plan,
+    ``runner._KernelTemplate``; the two-pass path builds one per run).
 
     Rows carry their identity as ONE column, ``_id`` = ``identity``
     (``struct(o=ord, s=source)``), and rank by ``min(_id)`` over a
@@ -238,11 +227,13 @@ def _resolve_single_pass(
     small ``pk`` projection instead, and at cluster scale the registry is
     checkpointed to parquet (checkpoint.py).
     """
-    ranked, later, held = first_writer(keys, "key_str", prior)
-    colliding = ranked.where(later).select(
-        "source", "ord", "key_str", F.col("_mn.s").alias("first_source")
+    fw = FirstWriter("key_str", prior is not None)
+    ranked = fw.rank(keys.select("key_str", fw.identity.alias("_id")), prior)
+    source, ord_ = F.col("_id.s").alias("source"), F.col("_id.o").alias("ord")
+    colliding = ranked.where(fw.later).select(
+        source, ord_, "key_str", F.col("_mn.s").alias("first_source")
     )
-    pk_keys = ranked.where(~later & ~held).select("source", "ord", "key_str")
+    pk_keys = ranked.where(~fw.later & ~fw.held).select(source, ord_, "key_str")
     return colliding, pk_keys
 
 

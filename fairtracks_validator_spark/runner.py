@@ -48,7 +48,7 @@ run's keys, ``ValidatedJSONSchema.java:373-392``). A stream micro-batch
 (``streaming.validate_stream``) and a checkpoint resume (``checkpoint``) are
 batch runs over their slice with the earlier keys as prior holders, so the
 batch, stream and resume share one first-writer-wins implementation
-(``operators.uniqueness.first_writer`` and the fan-out cascade).
+(``operators.uniqueness.FirstWriter`` and the fan-out cascade).
 """
 
 from __future__ import annotations

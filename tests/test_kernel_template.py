@@ -4,6 +4,7 @@ and a kernel run builds only the outputs it reads (runner._KernelTemplate)."""
 from __future__ import annotations
 
 import gc
+import threading
 
 import py4j.clientserver as clientserver
 import pytest
@@ -81,14 +82,17 @@ def _unbuilt(res) -> set[str]:
 
 
 class _Commands:
-    """Counts the commands the Python driver sends to the JVM."""
+    """Counts the commands this thread sends to the JVM. py4j's finalizer
+    thread sends the deletes of earlier garbage on its own schedule, so its
+    commands are not the counted call's."""
 
     def __enter__(self):
         self.n = 0
         self._orig = orig = clientserver.ClientServerConnection.send_command
+        caller = threading.get_ident()
 
         def counted(conn, command):
-            self.n += 1
+            self.n += threading.get_ident() == caller
             return orig(conn, command)
 
         clientserver.ClientServerConnection.send_command = counted
