@@ -102,7 +102,7 @@ class ValidationResult:
     (None on the two-pass path, where ``wide_verdicts()`` joins).
 
     ``verdicts``, ``violations`` and ``pk_registries`` may be handed in as
-    zero-argument builders, which run on first read: a run whose sink reads
+    zero-argument functions, which run on first read: a run whose sink reads
     only ``wide`` (``sink_observed``) never analyses the others."""
 
     def __init__(
@@ -830,7 +830,7 @@ class _KernelTemplate:
             fails = F.when(~all_ok, F.array(*entries))
         else:
             # PK-only plan: F.array() is array<void> and getField on it fails
-            # at analysis (code-review r3) — no row checks means no fails
+            # at analysis — no row checks means no fails
             fails = F.lit(None).cast(_ENTRY_DDL)
         self.uq = uq = plan.uniques[0] if plan.uniques else None
         self.fk_names = fk_names = [f"_fk{i}" for i in range(len(plan.fks))]
@@ -855,7 +855,7 @@ class _KernelTemplate:
             ]
         else:
             self.key_raw = flat_key_string(uq.members)
-            # null-proof surrogate (code-review r4): F.concat null-propagates,
+            # null-proof surrogate: F.concat null-propagates,
             # so a null source collapsed every no-key null-source row into
             # ONE null bucket — false dup_pk violations. The isNull flags
             # make the sentinel collision-free against real values.
@@ -1038,7 +1038,7 @@ class _KernelTemplate:
         read them, so with a prior the window resolves.
 
         NOT persisted: caching a nested-array relation through the columnar
-        cache builder is slower than recomputing, and Spark reuses the
+        cache is slower than recomputing, and Spark reuses the
         shuffle map outputs across actions on this lineage (skipped stages).
         """
         if self.uq is None:
