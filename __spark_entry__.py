@@ -2925,9 +2925,9 @@ base AS (SELECT doc_id, coalesce(text, '') AS t FROM corpus),
 el AS (
   SELECT doc_id, greatest(len(t), 1)::DOUBLE AS total,
          list_sort(list_filter(string_split(t, chr(10)),
-                               x -> NOT regexp_matches(x, '^\s*$'))) AS sl,
+                               x -> NOT regexp_matches(x, '^\\s*$'))) AS sl,
          list_sort(list_filter(string_split(t, chr(10) || chr(10)),
-                               x -> NOT regexp_matches(x, '^\s*$'))) AS sp
+                               x -> NOT regexp_matches(x, '^\\s*$'))) AS sp
   FROM base
 ),
 d AS (

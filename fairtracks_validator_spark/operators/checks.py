@@ -217,8 +217,28 @@ def maximum_check(jpath: str, hi, exclusive: bool = False) -> Check:
     )
 
 
+# String lengths are bounded by the byte length first. Spark's ``length``
+# walks every byte of the value to count characters, while ``octet_length``
+# reads the stored size. A character takes 1 to 4 bytes (an invalid first
+# byte counts as one character of one byte), so b bytes hold between
+# ceil(b/4) and b characters: outside the band [n, 4n) bytes the byte
+# length alone decides the bound, and codegen's short-circuit OR/AND runs
+# ``length`` only inside it. The result, nulls included, equals the plain
+# ``length(v) >= n`` / ``<= n``.
+def char_length_at_least(v: Column, n: int) -> Column:
+    """``length(v) >= n``, with ``length`` run only for n <= bytes < 4n."""
+    b = F.octet_length(v)
+    return (b >= 4 * n) | ((b >= n) & (F.length(v) >= n))
+
+
+def char_length_at_most(v: Column, n: int) -> Column:
+    """``length(v) <= n``, with ``length`` run only for n < bytes <= 4n."""
+    b = F.octet_length(v)
+    return (b <= n) | ((b <= 4 * n) & (F.length(v) <= n))
+
+
 def min_length_check(jpath: str, n: int) -> Check:
-    pred = lambda v: F.length(v) >= n  # noqa: E731
+    pred = lambda v: char_length_at_least(v, n)  # noqa: E731
     return Check(
         f"minLength:{jpath}", _forall(jpath, pred),
         F.format_string(f"%s is shorter than minLength {n}", _first_bad(jpath, pred)),
@@ -226,7 +246,7 @@ def min_length_check(jpath: str, n: int) -> Check:
 
 
 def max_length_check(jpath: str, n: int) -> Check:
-    pred = lambda v: F.length(v) <= n  # noqa: E731
+    pred = lambda v: char_length_at_most(v, n)  # noqa: E731
     return Check(
         f"maxLength:{jpath}", _forall(jpath, pred),
         F.format_string(f"%s is longer than maxLength {n}", _first_bad(jpath, pred)),
@@ -495,7 +515,7 @@ def format_pattern_check(jpath: str, fmt: str) -> Check:
     """One of the regex-expressible draft-07 formats (FORMAT_PATTERNS)."""
     pattern = FORMAT_PATTERNS[fmt]
     if fmt == "hostname":
-        pred = lambda v: (F.length(v) <= 253) & v.rlike(pattern)  # noqa: E731
+        pred = lambda v: char_length_at_most(v, 253) & v.rlike(pattern)  # noqa: E731
     else:
         pred = lambda v: v.rlike(pattern)  # noqa: E731
     return Check(

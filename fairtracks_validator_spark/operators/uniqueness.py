@@ -10,7 +10,8 @@ colliding document's keys are NOT recorded (first-writer-wins, lines 386-391)
 Spark shape: stamp a deterministic total-order column ``ord`` (never rely on
 partition order — SURVEY §2.6), explode key strings, and resolve
 first-writer-wins with one ``min(struct(ord, source))`` window per key
-(key-only sort). This is a single hash shuffle on the key string;
+(a key-only window, sorted on a 64-bit key hash and then the key; see
+``FirstWriter``). This is a single hash shuffle on the key string;
 near-unique keys (e.g. ``url`` at web scale) are naturally balanced, and
 AQE handles residual skew.
 
@@ -155,6 +156,16 @@ class FirstWriter:
     intra-key sort stability: identical (ord, source) identities tie as
     first instead of one being arbitrarily blamed.
 
+    The window leads with ``xxhash64(key)``: the reduce-stage sort compares
+    an 8-byte prefix of its first key before it touches the value, and key
+    strings share their first bytes (every pages key starts
+    ``["https://``), so a string-first sort fell back to a full byte
+    compare on almost every comparison. A long hash decides nearly all of
+    them from the prefix. The grouping stays exact because the key itself
+    is still in the partition spec: a hash collision only puts two keys in
+    one sort run, never in one group. The hash rides the exchange (8 bytes
+    a row).
+
     ``prior`` rows ride the same shuffle as pseudo-rows ranked ahead of
     every real row (``_id.p`` = 0 against 1), so the window's ``min``
     reduces them to one holder per key with no extra exchange; they are
@@ -179,7 +190,7 @@ class FirstWriter:
         # bind the window aggregate ONCE (withColumn) — two inline
         # F.min(...).over(w) expressions each get their own aggregate
         # processor in WindowExec, doubling the reduce-stage work
-        self.mn = F.min(row).over(Window.partitionBy(key))
+        self.mn = F.min(row).over(Window.partitionBy(F.xxhash64(key), key))
         if not with_prior:
             self.identity = F.struct(*ident)
             self.later = row > first

@@ -642,9 +642,9 @@ def _element_pred(sub: dict):
         if "maximum" in sub:
             ok = ok & (v.try_cast("double") <= float(sub["maximum"]))
         if "minLength" in sub:
-            ok = ok & (F.length(v) >= int(sub["minLength"]))
+            ok = ok & C.char_length_at_least(v, int(sub["minLength"]))
         if "maxLength" in sub:
-            ok = ok & (F.length(v) <= int(sub["maxLength"]))
+            ok = ok & C.char_length_at_most(v, int(sub["maxLength"]))
         if "multipleOf" in sub:
             k = sub["multipleOf"]
             ok = ok & (

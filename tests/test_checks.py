@@ -593,3 +593,90 @@ def test_percent_in_schema_values_does_not_crash_messages(spark):
     res = validate_corpus({"pct/1": (p, df)})
     descs = [r["description"] for r in res.violations.collect()]
     assert descs and all("%" in d for d in descs)
+
+
+# values for the byte-bounded length helpers: lengths 0..13 of 1-, 2-, 3- and
+# 4-byte characters, mixes, and invalid UTF-8 (a binary cast to string),
+# where Spark counts an invalid first byte as one character
+_UTF8_CHARS = ["61", "C3A9", "E4B8AD", "F09F9880"]  # a, é, 中, 😀
+_INVALID = ["C3", "80", "C0", "ED", "F0", "F4", *[f"{b:02X}" for b in range(0xF5, 0x100)]]
+_LENGTH_HEX = (
+    [None, ""]
+    + [c * k for c in _UTF8_CHARS + _INVALID for k in range(0, 14)]
+    + ["".join(_UTF8_CHARS) * k for k in range(1, 5)]
+    + ["F0" + "61" * k for k in range(0, 5)]
+    + ["C3" + "F09F9880" * k + "80" for k in range(0, 5)]
+)
+
+
+@pytest.fixture(scope="module")
+def length_values(spark):
+    """(i, v, a, b): v = one value; a = v in a three-element array with a
+    null and an ASCII neighbour (helpers inside a HOF lambda); b = v with a
+    null (checks at a nested-array path, where v alone decides)."""
+    v = F.unhex("h").cast("string")
+    return spark.createDataFrame(
+        list(enumerate(_LENGTH_HEX)), "i int, h string"
+    ).select(
+        "i", v.alias("v"),
+        F.array(v, F.lit(None).cast("string"), F.lit("ab")).alias("a"),
+        F.array(v, F.lit(None).cast("string")).alias("b"),
+    )
+
+
+def test_char_length_helpers_match_length(spark, length_values):
+    """char_length_at_least/at_most equal length(v) >= n / <= n, nulls
+    included, for n in 0..12 on a flat column and inside a HOF lambda."""
+    # every lambda is called while its Column is built, inside the loop, so
+    # it reads this iteration's n (a default argument would change the
+    # lambda's arity for F.transform)
+    for n in range(13):
+        cols = ["i"]
+        for name, helper, ref in (
+            ("ge", C.char_length_at_least, lambda x: F.length(x) >= n),
+            ("le", C.char_length_at_most, lambda x: F.length(x) <= n),
+        ):
+            cols += [
+                helper(F.col("v"), n).alias(f"{name}_flat"),
+                ref(F.col("v")).alias(f"{name}_flat_ref"),
+                F.transform("a", lambda x: helper(x, n)).alias(f"{name}_hof"),
+                F.transform("a", ref).alias(f"{name}_hof_ref"),
+            ]
+        for r in length_values.select(*cols).collect():
+            for name in ("ge", "le"):
+                for path in ("flat", "hof"):
+                    got, want = r[f"{name}_{path}"], r[f"{name}_{path}_ref"]
+                    assert got == want, (n, name, path, _LENGTH_HEX[r["i"]], got, want)
+
+
+def test_length_checks_match_length(spark, length_values):
+    """The compiled checks that route through the helpers (minLength and
+    maxLength on a flat column and at b[], and inside ``contains``) agree
+    with the same checks written with length()."""
+    arr = F.filter("b", lambda x: x.isNotNull())
+    v = F.col("v")
+    for n in range(13):
+        def ge(x):
+            return F.length(x) >= n
+
+        def le(x):
+            return F.length(x) <= n
+
+        contains = compile_schema({"$id": f"len/{n}", "properties": {"b": {
+            "contains": {"minLength": n, "maxLength": n + 1}}}})
+        pairs = [
+            (C.min_length_check("v", n).ok, v.isNull() | F.coalesce(ge(v), F.lit(False))),
+            (C.max_length_check("v", n).ok, v.isNull() | F.coalesce(le(v), F.lit(False))),
+            (C.min_length_check("b[]", n).ok, F.forall(arr, ge)),
+            (C.max_length_check("b[]", n).ok, F.forall(arr, le)),
+            (
+                C.checks_pass_predicate(contains.checks),
+                F.exists(arr, lambda x: ge(x) & (F.length(x) <= n + 1)),
+            ),
+        ]
+        cols = [F.col("i")]
+        for j, (got, want) in enumerate(pairs):
+            cols += [got.alias(f"g{j}"), want.alias(f"w{j}")]
+        for r in length_values.select(*cols).collect():
+            for j in range(len(pairs)):
+                assert r[f"g{j}"] == r[f"w{j}"], (n, j, _LENGTH_HEX[r["i"]])

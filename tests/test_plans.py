@@ -6,6 +6,10 @@ These assert on .explain output so a regression that silently de-optimizes
 
 from __future__ import annotations
 
+import os
+import re
+import warnings
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -119,6 +123,37 @@ def test_fused_path_single_shuffle(spark, pages_parquet):
     txt = _plan_str(res.verdicts)
     n_exchanges = txt.count("Exchange hashpartitioning")
     assert n_exchanges == 1, f"expected 1 shuffle, found {n_exchanges}:\n{txt[:2000]}"
+
+
+def test_pages_wide_plan_sorts_on_key_hash(spark, pages_parquet):
+    """The pages ``wide`` plan keeps one shuffle; its window sort leads with
+    the bigint xxhash64 of the key (a fixed-width sort prefix), and the map
+    side decides ``minLength`` on ``text`` from its byte length."""
+    tbl = (spark.read.parquet(pages_parquet)
+           .withColumn("source", F.col("url")).withColumn("ord", F.col("page_id")))
+    plan = compile_schema(pages_schema_dict())
+    txt = _plan_str(validate_corpus({"pages/1.0": (plan, tbl)}).wide)
+    assert txt.count("Exchange hashpartitioning") == 1, txt
+    sort = next(ln for ln in txt.splitlines() if ln.lstrip("+- :").startswith("Sort ["))
+    first = sort.split("Sort [", 1)[1].split(" ASC", 1)[0]
+    assert first.endswith("L"), sort  # a bigint attribute
+    assert re.search(r"xxhash64\(_k2#\d+, 42\) AS " + re.escape(first), txt), txt
+    map_side = txt.split("Exchange hashpartitioning", 1)[1]
+    assert "octet_length(text" in map_side, map_side
+
+
+def test_entry_module_compiles_without_warnings():
+    """``__spark_entry__.py`` compiles with warnings turned into errors: an
+    invalid escape such as ``'\\s'`` in a plain string literal warns
+    (DeprecationWarning, SyntaxWarning from Python 3.12) and is slated to
+    become an error."""
+    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                        "__spark_entry__.py")
+    with open(path, encoding="utf-8") as f:
+        src = f.read()
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        compile(src, path, "exec")
 
 
 def test_whole_stage_codegen_covers_checks(spark, pages_parquet):
