@@ -24,6 +24,10 @@ Semantics notes (validated against the reference source):
   ``extensions/Curie.java:25-33``) — we wrap them ``^(?:...)$``.
 - Keywords other than ``required`` do not apply to absent values: an empty
   jPath value list passes (``F.forall`` over an empty array is true).
+- String-length bounds (``minLength``/``maxLength``, the hostname cap) are
+  decided from the byte length where it suffices
+  (:func:`char_length_at_least`/:func:`char_length_at_most`): Spark's
+  ``length`` walks every byte of the value, ``octet_length`` does not.
 """
 
 from __future__ import annotations
@@ -221,9 +225,9 @@ def maximum_check(jpath: str, hi, exclusive: bool = False) -> Check:
 # walks every byte of the value to count characters, while ``octet_length``
 # reads the stored size. A character takes 1 to 4 bytes (an invalid first
 # byte counts as one character of one byte), so b bytes hold between
-# ceil(b/4) and b characters: outside the band [n, 4n) bytes the byte
-# length alone decides the bound, and codegen's short-circuit OR/AND runs
-# ``length`` only inside it. The result, nulls included, equals the plain
+# ceil(b/4) and b characters: outside the band from n to 4n bytes the
+# byte length alone decides the bound, and codegen's short-circuit OR/AND
+# runs ``length`` only inside it. The result, nulls included, equals the plain
 # ``length(v) >= n`` / ``<= n``.
 def char_length_at_least(v: Column, n: int) -> Column:
     """``length(v) >= n``, with ``length`` run only for n <= bytes < 4n."""

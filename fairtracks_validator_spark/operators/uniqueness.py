@@ -150,8 +150,8 @@ class FirstWriter:
     Rows carry their identity as ONE column, ``_id`` = ``identity``
     (``struct(o=ord, s=source)``), and rank by ``min(_id)`` over a
     KEY-ONLY window: the identity crosses the window's exchange once, and
-    the reduce-stage sort key is just the key string (half the comparator
-    work of ``row_number`` ordered by (ord, source) — measured on the
+    the window orders nothing within a key, where a ``row_number`` would
+    sort by (ord, source) too (half the comparator work, measured on the
     40M-row scaling bench). The first-holder choice does not lean on
     intra-key sort stability: identical (ord, source) identities tie as
     first instead of one being arbitrarily blamed.
