@@ -114,38 +114,6 @@ def q_validate_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
                        "source", "check_id")
 
 
-def q_validate_documents_bcast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same validation as ``validate_documents`` but resolving uniqueness
-    through the candidate-broadcast strategy (``runner._dup_candidate_firsts``
-    — map-only main pass, no corpus shuffle) so the driver's DuckDB gate
-    pins BOTH dup_strategy code paths, not just the window default."""
-    docs = _t(spark, sf_dir, "documents").withColumn("ord", F.col("doc_id")).withColumn(
-        "source", F.col("doc_id").cast("string")
-    )
-    plan = compile_schema(
-        {
-            "$id": "documents/1.0",
-            "required": ["text"],
-            "primary_key": ["doc_id"],
-            "properties": {
-                "lang": {"enum": DOC_LANGS},
-                "n_chars": {"type": "integer", "minimum": 1, "maximum": 100000},
-            },
-        }
-    )
-    res = validate_corpus({"documents/1.0": (plan, docs)}, dup_strategy="broadcast")
-    # materialize before release(): the broadcast path persists its firsts
-    # relation (ValidationResult contract: caller owns the unpersist) — a
-    # leaked cache pins driver memory for the rest of the oracle/bench run
-    out = (
-        res.violations.select("source", "check_id")
-        .orderBy("source", "check_id")
-        .localCheckpoint(eager=True)
-    )
-    res.release()
-    return out
-
-
 _VALIDATE_DOCUMENTS_SQL = """
 SELECT CAST(doc_id AS VARCHAR) AS source, 'enum:lang' AS check_id
 FROM documents
@@ -3234,7 +3202,6 @@ FROM c ORDER BY doc_id
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         "validate_documents": q_validate_documents,
-        "validate_documents_bcast": q_validate_documents_bcast,
         "validate_documents_draft7": q_validate_documents_draft7,
         "validate_multischema": q_validate_multischema,
         "validate_documents_formats": q_validate_documents_formats,
@@ -3307,7 +3274,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 def oracle_sql() -> dict[str, str]:
     return {
         "validate_documents": _VALIDATE_DOCUMENTS_SQL,
-        "validate_documents_bcast": _VALIDATE_DOCUMENTS_SQL,
         "validate_documents_draft7": _VALIDATE_DRAFT7_SQL,
         "validate_multischema": _VALIDATE_MULTISCHEMA_SQL,
         "validate_documents_formats": _validate_formats_sql(),

@@ -1028,9 +1028,8 @@ def semantic_dedup(
     embedding:
 
     - ``cluster``: nearest centroid by cosine (ties → smallest centroid id),
-      via :func:`..operators.similarity.assign_clusters` — folded Columns
-      for small codebooks, one numpy matmul per Arrow batch above
-      ``ASSIGN_FOLD_MAX``.
+      via :func:`..operators.similarity.assign_clusters` — one numpy
+      matmul per Arrow batch.
     - ``centroid_sim``: cosine to the assigned centroid, rounded 6dp — the
       paper's keep-priority (LOW similarity kept: SemDeDup §3 keeps cluster
       *outliers* as the most diverse representatives).

@@ -55,34 +55,23 @@ def cosine_topk(
     return scored.orderBy(F.desc("score"), F.asc("id")).limit(k)
 
 
-# centroid count above which assignment uses the Arrow-batched numpy matmul
-# instead of the constant-folded expression chain. r6: 0 — the folded chain's
-# aggregate(zip_with) dots evaluate INTERPRETED (higher-order functions never
-# enter whole-stage codegen), measured 6.6 s vs 1.8 s for the sf1.0 IVF query
-# at k=16, and the matmul path is the real-IVF shape anyway (thousand-centroid
-# codebooks). The folded path remains for explicit use_pandas=False callers
-# (zero-Python environments); both produce identical assignments
-# (test_assign_clusters_pandas_matches_folded).
-ASSIGN_FOLD_MAX = 0
-
-
 def assign_clusters(
     df: DataFrame,
     id_col: str,
     vec_col: str,
     centroids: list[tuple[int, list[float]]],
-    use_pandas: bool | None = None,
+    use_pandas: bool = True,
 ) -> DataFrame:
     """Nearest-centroid assignment by cosine (ties → smallest centroid id).
 
-    Small codebooks fold the centroids into a pure Column expression (zero
-    Python, broadcast in its cheapest form); codebooks past
-    ``ASSIGN_FOLD_MAX`` switch to one vectorized pandas UDF doing a single
-    numpy matmul per Arrow batch — O(batch × k × d) BLAS work instead of a
-    k-deep codegen expression. Both paths produce identical assignments.
+    By default one vectorized pandas UDF does a single numpy matmul per
+    Arrow batch — O(batch × k × d) BLAS work. ``use_pandas=False`` folds
+    the centroids into a pure Column expression instead (zero Python); its
+    aggregate(zip_with) dots are higher-order functions, which never enter
+    whole-stage codegen, so it measured 6.6 s against 1.8 s for the sf1.0
+    IVF query at k=16. Both paths produce identical assignments
+    (``test_assign_clusters_pandas_matches_folded``).
     """
-    if use_pandas is None:
-        use_pandas = len(centroids) > ASSIGN_FOLD_MAX
     if use_pandas:
         return _assign_clusters_pandas(df, id_col, vec_col, centroids)
     v = df.select(
@@ -175,8 +164,7 @@ def kmeans_fit(
     - **init**: evenly spaced by id rank within the sample (rows ``1 +
       i*(m//k)``) — the seeded replacement for k-means++ randomness.
     - **assign**: cosine argmax (ties → smallest centroid id), via
-      :func:`assign_clusters` (folded expressions ≤64 centroids, Arrow
-      numpy matmul beyond).
+      :func:`assign_clusters` (one Arrow numpy matmul per batch).
     - **update**: per-dimension mean (posexplode → groupBy(cluster, pos)
       avg), ROUNDED to ``round_dp`` — rounding quenches summation-order
       float drift so reruns and other engines reproduce the codebook

@@ -85,14 +85,6 @@ _SHARED: dict = {}
 # AQE's runtime broadcast/sort-merge selection.
 BROADCAST_MAX_PK_KEYS = 5_000_000
 
-# kernel uniqueness under dup_strategy "auto": when the corpus has at most
-# this many DUPLICATED keys (not total keys — near-unique url corpora have
-# very few), resolve first-writer-wins with a broadcast of the duplicate
-# keys' first holders instead of shuffling + sorting the entire verdict
-# stream (see ``_dup_candidate_firsts``). ~2M keys ≈ 200 MB broadcast, well under
-# Spark's 8 GB broadcast-relation cap; beyond it the window path takes over.
-DUP_BROADCAST_MAX_KEYS = 2_000_000
-
 
 class ValidationResult:
     """One run's outputs: ``verdicts`` (source, ord, schema_id, validated,
@@ -446,7 +438,6 @@ def validate_corpus(
     source_col: str = "source",
     ord_col: str = "ord",
     seed_registries: dict[tuple[str, str], DataFrame] | None = None,
-    dup_strategy: str = "window",
     prior_registries: dict[tuple[str, str], DataFrame] | None = None,
 ) -> ValidationResult:
     """Validate a multi-schema corpus: ``{schema_id: (plan, df)}``.
@@ -470,27 +461,7 @@ def validate_corpus(
     single-plan kernel when every plan has no join checks, at most one
     uniqueness constraint with flat members, and only flat-member FKs;
     otherwise the two-pass path.
-
-    ``dup_strategy`` (single-schema corpora on the kernel only):
-    ``"window"`` (default) resolves first-writer-wins with one hash shuffle
-    + sort of the narrow verdict stream; ``"auto"``/``"broadcast"`` probe
-    the duplicate-key population and, when it fits the broadcast gate,
-    resolve map-only via a candidate broadcast (``_dup_candidate_firsts``)
-    with no corpus shuffle at all. The window default is a MEASURED choice,
-    not a shortcut: the broadcast probe must re-scan the corpus once to
-    ok-gate candidate first-holders, and for document tables the verdict
-    stream it would keep off the wire is only ~1-2%% of the scanned bytes
-    (40M-row pages table, local[16]: probe scan 10.9 s vs the whole window
-    reduce ≈ 10 s) — a full re-read of a 100 TB table loses to shuffling
-    1-2 TB. Broadcast wins when rows are narrow relative to the key (the
-    shuffle approaches scan size) or when shuffle capacity, not scan
-    bandwidth, is the cluster's binding constraint.
     """
-    if dup_strategy not in ("window", "auto", "broadcast"):
-        raise ValueError(
-            "dup_strategy must be 'window', 'auto' or 'broadcast', "
-            f"got {dup_strategy!r}"
-        )
     # schema-drift alignment: plan-referenced paths must resolve (absent ⇒
     # typed null column ⇒ reference "property absent" semantics)
     corpus = {
@@ -500,7 +471,6 @@ def validate_corpus(
     if all(_kernel_fits(plan) for plan, _ in corpus.values()):
         return _validate_kernel(
             corpus, source_col, ord_col, seed_registries or {},
-            dup_strategy if len(corpus) == 1 else "window",
             prior_registries or {},
         )
     return _validate_two_pass(
@@ -815,8 +785,7 @@ class _KernelTemplate:
         from .functions.expr import let_
         from .operators.checks import check_entries
 
-        self.source_col, self.ord_col = source_col, ord_col
-        self.all_ok = all_ok = checks_pass_predicate(plan.checks)
+        all_ok = checks_pass_predicate(plan.checks)
         entries = check_entries(plan.checks)
         if entries:
             # UNFILTERED entry array (r6): F.filter is a CodegenFallback HOF,
@@ -833,28 +802,26 @@ class _KernelTemplate:
             # at analysis — no row checks means no fails
             fails = F.lit(None).cast(_ENTRY_DDL)
         self.uq = uq = plan.uniques[0] if plan.uniques else None
-        self.fk_names = fk_names = [f"_fk{i}" for i in range(len(plan.fks))]
+        fk_names = [f"_fk{i}" for i in range(len(plan.fks))]
         src, ord_ = F.col(source_col), F.col(ord_col).cast("long")
         c = {n: F.col(n) for n in (
             "source", "ord", "_ok", "_fails", "_key", "_rn", "_first_source",
             *fk_names,
         )}
-        self.ident = [src.alias("source"), ord_.alias("ord")]
-        self.checked = [all_ok.alias("_ok"), fails.alias("_fails")]
-        self.fk_keys = fk_keys = [
+        checked = [all_ok.alias("_ok"), fails.alias("_fails")]
+        fk_keys = [
             F.when(all_ok, flat_key_string(fk.members)).alias(name)
             for fk, name in zip(plan.fks, fk_names)
         ]
         if uq is None:
             self.narrow = [
-                *self.ident, *self.checked,
+                src.alias("source"), ord_.alias("ord"), *checked,
                 F.lit(None).cast("string").alias("_key"),
                 F.lit(1).alias("_rn"),
                 F.lit(None).cast("string").alias("_first_source"),
                 *fk_keys,
             ]
         else:
-            self.key_raw = flat_key_string(uq.members)
             # null-proof surrogate: F.concat null-propagates,
             # so a null source collapsed every no-key null-source row into
             # ONE null bucket — false dup_pk violations. The isNull flags
@@ -877,12 +844,13 @@ class _KernelTemplate:
             # - the identity rides it once, as the ``_id`` struct the window
             #   ranks on (``FirstWriter``); source and ord are re-exposed
             #   from it above the window. Identical (ord, source) identities
-            #   tie as rank 1 — same convention as the broadcast path's
-            #   comparison against the first holder.
+            #   tie as rank 1.
             self.writer = writer = FirstWriter("_k2", with_prior, ord_, src)
             self.narrow = [
-                writer.identity.alias("_id"), *self.checked, *fk_keys,
-                F.coalesce(F.when(all_ok, self.key_raw), surrogate).alias("_k2"),
+                writer.identity.alias("_id"), *checked, *fk_keys,
+                F.coalesce(
+                    F.when(all_ok, flat_key_string(uq.members)), surrogate
+                ).alias("_k2"),
             ]
             k2 = F.col("_k2")
             self.ranked = [
@@ -1024,61 +992,20 @@ class _KernelTemplate:
             status.alias("status"), nested.alias("violations"),
         ]
 
-    def stage(
-        self,
-        df: DataFrame,
-        prior: DataFrame | None = None,
-        dup_strategy: str = "window",
-    ) -> tuple[DataFrame, list]:
+    def stage(self, df: DataFrame, prior: DataFrame | None = None) -> DataFrame:
         """One schema's share of the kernel: a single narrow projection and,
-        with a uniqueness constraint, a single key-only window. Returns the
-        stage and any relations it persisted (``dup_strategy`` broadcast
-        probes only). ``prior`` holders of the constraint ride that window
-        (``operators.uniqueness.FirstWriter``); the broadcast probe does not
-        read them, so with a prior the window resolves.
+        with a uniqueness constraint, a single key-only window. ``prior``
+        holders of the constraint ride that window
+        (``operators.uniqueness.FirstWriter``).
 
         NOT persisted: caching a nested-array relation through the columnar
         cache is slower than recomputing, and Spark reuses the
         shuffle map outputs across actions on this lineage (skipped stages).
         """
         if self.uq is None:
-            return df.select(*self.narrow), []
-        if dup_strategy in ("auto", "broadcast") and prior is None and not df.isStreaming:
-            firsts = _dup_candidate_firsts(
-                df, self.key_raw, self.all_ok, self.source_col, self.ord_col
-            )
-            if firsts is not None:
-                return self._broadcast_stage(df, firsts), [firsts]
+            return df.select(*self.narrow)
         ranked = self.writer.rank(df.select(*self.narrow), prior)
-        return ranked.select(*self.ranked), []
-
-    def _broadcast_stage(self, df: DataFrame, firsts: DataFrame) -> DataFrame:
-        """Candidate-broadcast resolution (near-unique corpora — the
-        url-keyed web regime): two narrow probe jobs found the rare
-        duplicated keys and their first ok-holders (``firsts``), which
-        broadcast back into a MAP-ONLY main pass — no shuffle (and crucially
-        no sort) of the corpus-sized verdict stream at all."""
-        narrow = df.select(
-            *self.ident, *self.checked,
-            F.when(self.all_ok, self.key_raw).alias("_key"),
-            *self.fk_keys,
-        )
-        row_os = F.struct(
-            F.col("ord").cast("long").alias("o"), F.col("source").alias("s")
-        )
-        return narrow.join(
-            F.broadcast(firsts), narrow["_key"] == firsts["_k"], "left"
-        ).select(
-            "source", "ord", "_ok", "_fails", "_key",
-            # not a duplicated key (no broadcast hit) or the first ok holder
-            # itself ⇒ rank 1; every later ok holder ⇒ rank 2 (downstream
-            # only distinguishes ==1 vs >1)
-            F.when(
-                F.col("_first").isNotNull() & (row_os > F.col("_first")), F.lit(2)
-            ).otherwise(F.lit(1)).alias("_rn"),
-            F.coalesce(F.col("_first.s"), F.col("source")).alias("_first_source"),
-            *self.fk_names,
-        )
+        return ranked.select(*self.ranked)
 
     def recorded(self, stage: DataFrame) -> DataFrame:
         """The registry rows a stage records: keyed first holders that pass
@@ -1117,7 +1044,6 @@ def _validate_kernel(
     source_col: str,
     ord_col: str,
     seed_registries: dict[tuple[str, str], DataFrame],
-    dup_strategy: str,
     prior_registries: dict[tuple[str, str], DataFrame],
 ) -> ValidationResult:
     """Every schema's stage, registry and FK probes in ONE lazy plan.
@@ -1145,7 +1071,6 @@ def _validate_kernel(
     }
     owner = {rkey: sid for sid, rkey in rkeys.items()}
     registry_keys = set(owner) | set(seed_registries)
-    persisted: list = []
     templates: dict[str, _KernelTemplate] = {}
     stages: dict[str, DataFrame] = {}
     for sid, (plan, df) in corpus.items():
@@ -1155,8 +1080,7 @@ def _validate_kernel(
             _fk_shape(plan, registry_keys, registered),
             df.sparkSession.sparkContext,
         )
-        stages[sid], cached = tpl.stage(df, prior, dup_strategy)
-        persisted += cached
+        stages[sid] = tpl.stage(df, prior)
 
     registries: dict[tuple[str, str], DataFrame] = {}
 
@@ -1182,89 +1106,6 @@ def _validate_kernel(
             rkey: registry(rkey)
             for rkey in [*owner, *(k for k in seed_registries if k not in owner)]
         },
-        _persisted=persisted,
         wide=_union_all([templates[sid].wide(p) for sid, p in probed.items()]),
     )
 
-
-def _dup_candidate_firsts(
-    df: DataFrame,
-    key_raw,
-    all_ok,
-    source_col: str,
-    ord_col: str,
-    max_keys: int | None = None,
-) -> DataFrame | None:
-    """Probe the duplicate-key population for the kernel's uniqueness check.
-
-    Returns a PERSISTED ``(_k, _first)`` relation — one row per key string
-    that has ≥2 check-passing holders, with the first holder's
-    ``struct(o=ord, s=source)`` — or ``None`` when a size gate trips (caller
-    falls back to the window shuffle). Caller owns the unpersist via
-    ``ValidationResult.release()``.
-
-    Two probe jobs, both narrow:
-
-    1. ``xxhash64`` of the UNGATED key (raw member columns — so the scan
-       prunes to the key + identity columns and never evaluates the check
-       predicates), hash-aggregated to the hashes seen more than once. An
-       8-byte-hash shuffle with map-side partial aggregation instead of the
-       corpus-wide key-string sort. Hash collisions only over-approximate
-       the candidate set — exactness is restored in step 2, which groups by
-       the real key string.
-    2. Rows whose key-hash hits the (broadcast) duplicate-hash set — the
-       rare candidates — are grouped by their actual key string, keeping
-       ``min(struct(ord, source))`` over the check-PASSING holders only
-       (schema-failed docs never record keys,
-       ``ValidatedJSONSchema.java:360-392``). The ok-predicate is evaluated
-       inside the aggregate's projection, i.e. only on candidate rows —
-       there is no filter for the optimizer to push below the semi-join.
-
-    Keys with <2 ok holders drop out (a lone ok holder is rank 1 whether or
-    not failed docs shared its key — same as the window path, where failed
-    rows ride surrogate keys). At 10^12-row scale with a heavily duplicated
-    corpus the gate trips and the window path takes over; for the
-    near-unique url regime this turns the whole uniqueness resolution into
-    one broadcast hash lookup inside the scan stage.
-    """
-    if max_keys is None:
-        max_keys = DUP_BROADCAST_MAX_KEYS
-    keys = df.select(key_raw.alias("_k"))
-    dup_h = (
-        keys.where(F.col("_k").isNotNull())
-        .groupBy(F.xxhash64("_k").alias("_h"))
-        .agg(F.count(F.lit(1)).alias("_c"))
-        .where(F.col("_c") > F.lit(1))
-        .select("_h")
-        .persist()
-    )
-    if dup_h.count() > max_keys:
-        dup_h.unpersist()
-        return None
-    ok_os = F.when(
-        all_ok,
-        F.struct(
-            F.col(ord_col).cast("long").alias("o"),
-            F.col(source_col).alias("s"),
-        ),
-    )
-    firsts = (
-        df.withColumn("_h", F.xxhash64(key_raw))
-        .join(F.broadcast(dup_h), "_h", "left_semi")
-        .select(key_raw.alias("_k"), ok_os.alias("_os"))
-        .where(F.col("_k").isNotNull())
-        .groupBy("_k")
-        .agg(
-            F.min("_os").alias("_first"),
-            F.count("_os").alias("_c_ok"),
-        )
-        .where(F.col("_c_ok") > F.lit(1))
-        .select("_k", "_first")
-        .persist()
-    )
-    n = firsts.count()
-    dup_h.unpersist()
-    if n > max_keys:
-        firsts.unpersist()
-        return None
-    return firsts

@@ -112,7 +112,7 @@ def process_batch(
             plan, sid, source_col, ord_col, held is not None, (),
             batch_df.sparkSession.sparkContext,
         )
-        stage, _ = tpl.stage(align_to_plan(batch_df, plan), held)
+        stage = tpl.stage(align_to_plan(batch_df, plan), held)
         stage = stage.localCheckpoint(eager=False)
         violations = tpl.violations(stage)
         recorded = [tpl.recorded(stage)] if plan.uniques else []

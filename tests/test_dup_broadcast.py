@@ -1,22 +1,22 @@
-"""Candidate-broadcast uniqueness resolution (runner._dup_candidate_firsts)
-must be observationally identical to the window-shuffle path.
+"""First-writer duplicate resolution on adversarial corners: the kernel's
+key-only window must equal the two-pass reference on verdicts, violations
+and the primary-key registry.
 
-The broadcast path is the near-unique web-corpus fast path: two narrow probe
-jobs + a map-only main pass instead of sorting the corpus-wide verdict
-stream. These tests pin equivalence on the adversarial corners: a
-schema-FAILED row holding the earliest ord of a duplicated key (must NOT be
-recorded as first — ``ValidatedJSONSchema.java:360-392``), keys whose every
-holder fails, lone-ok-holder keys, null source/ord identities, and the
-size-gate fallback.
+The corners: a schema-FAILED row holding the earliest ord of a duplicated
+key (must NOT be recorded as first — ``ValidatedJSONSchema.java:360-392``),
+keys whose every holder fails, lone-ok-holder keys, and null source / ord
+identities.
 """
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
 from fairtracks_validator_spark.plans.schema_compile import compile_schema
-from fairtracks_validator_spark.runner import validate_corpus
+from fairtracks_validator_spark.runner import (
+    _kernel_fits, _validate_two_pass, validate_corpus,
+)
+
+from conftest import rows_set
+
 
 SCHEMA = {
     "$schema": "http://json-schema.org/draft-07/schema#",
@@ -50,108 +50,46 @@ ROWS = [
 ]
 
 
-def _df(spark):
-    return spark.createDataFrame(
-        ROWS, "source string, ord long, url string, n long"
-    )
-
-
-def _run(spark, strategy):
-    plan = compile_schema(SCHEMA)
-    res = validate_corpus({"bc/1.0": (plan, _df(spark))}, dup_strategy=strategy)
-    verdicts = {
-        (r.source, r.ord): (r.validated, r.status)
-        for r in res.verdicts.collect()
-    }
-    violations = {
-        (r.source, r.ord, r.check_id, r.key_str, r.reason, r.description)
-        for r in res.violations.collect()
-    }
-    pk = {
-        (r.key_str, r.first_source, r.first_ord)
-        for r in next(iter(res.pk_registries.values())).collect()
-    }
-    wide = {
-        (r.source, r.ord, r.validated, r.status, len(r.violations))
-        for r in res.wide.collect()
-    }
-    res.release()
-    return verdicts, violations, pk, wide
-
-
-def test_broadcast_equals_window(spark):
-    assert _run(spark, "broadcast") == _run(spark, "window")
-
-
 def test_failed_first_holder_not_recorded(spark):
-    verdicts, violations, pk, _ = _run(spark, "broadcast")
+    """The kernel's first-writer window against the two-pass reference on
+    the adversarial corners: a schema-failed earliest holder is never
+    recorded (``ValidatedJSONSchema.java:360-392``), a lone passing holder
+    is rank 1, an all-failing key records nothing, and null source / ord
+    identities hold their keys."""
+    plan = compile_schema(SCHEMA)
+    assert _kernel_fits(plan)
+    corpus = {"bc/1.0": (plan, spark.createDataFrame(
+        ROWS, "source string, ord long, url string, n long"
+    ))}
+
+    def outputs(res):
+        out = (
+            rows_set(res.verdicts, ["source", "ord", "validated", "status"]),
+            rows_set(res.violations, [
+                "source", "ord", "check_id", "key_str", "reason", "description",
+            ]),
+            rows_set(next(iter(res.pk_registries.values())),
+                     ["key_str", "first_source", "first_ord"]),
+        )
+        res.release()
+        return out
+
+    kernel = outputs(validate_corpus(corpus))
+    assert kernel == outputs(_validate_two_pass(corpus))
+
+    verdicts, violations, pk = kernel
+    assert pk == {
+        ('["http://dup/a"]', "b", 2), ('["http://dup/b"]', "f", 6),
+        ('["http://lone"]', "i", 9), ('["http://nullord"]', "m", None),
+        ('["http://nullsrc"]', None, 12), ('["http://x/1"]', "a", 1),
+    }
     # e fails checks; f is the recorded first of dup/b, g the duplicate
-    assert verdicts[("f", 6)] == (True, "ok")
+    assert ("f", 6, True, "ok") in verdicts
     assert any(
         v[0] == "g" and v[4] == "dup_pk" and "f and g" in v[5]
         for v in violations
     )
-    assert any(k[1] == "f" for k in pk)
-    assert not any(k[1] == "e" for k in pk)
     # lone passing holder of a shared key is rank 1
-    assert verdicts[("i", 9)] == (True, "ok")
+    assert ("i", 9, True, "ok") in verdicts
     # all-failing key records nothing, raises no dup_pk
     assert not any(v[4] == "dup_pk" and v[0] in ("n", "o") for v in violations)
-
-
-def test_gate_fallback_matches(spark, monkeypatch):
-    import fairtracks_validator_spark.runner as runner
-
-    monkeypatch.setattr(runner, "DUP_BROADCAST_MAX_KEYS", 0)
-    gated = _run(spark, "auto")
-    monkeypatch.undo()
-    assert gated == _run(spark, "window")
-
-
-def test_no_shuffle_in_broadcast_main_pass(spark):
-    """The map-only claim, checked against the physical plan: no Exchange
-    feeds the verdict output when the candidate broadcast resolves."""
-    plan = compile_schema(SCHEMA)
-    res = validate_corpus(
-        {"bc/1.0": (plan, _df(spark))}, dup_strategy="broadcast"
-    )
-    physical = res.verdicts._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastExchange" in physical
-    # map-only means: no shuffle on the MAIN corpus stream. The bounded
-    # probe jobs (duplicate-key + firsts aggregates) DO shuffle, but only
-    # inside BroadcastExchange build subtrees.
-    assert _shuffles_outside_broadcast(physical) == [], physical
-    res.release()
-    # positive control: the window strategy on the same input DOES shuffle
-    # the main stream, proving the walker detects what it claims to exclude
-    res_w = validate_corpus({"bc/1.0": (plan, _df(spark))}, dup_strategy="window")
-    physical_w = res_w.verdicts._jdf.queryExecution().executedPlan().toString()
-    assert _shuffles_outside_broadcast(physical_w), physical_w
-    res_w.release()
-
-
-def _shuffles_outside_broadcast(physical: str) -> list[str]:
-    """Shuffle-exchange lines of a rendered physical plan whose ancestor
-    chain contains no BroadcastExchange. ShuffleExchangeExec prints as
-    'Exchange hashpartitioning/rangepartitioning/SinglePartition' — NOT
-    'ShuffleExchange' (code-review r5: the old substring could never fire).
-    Tree depth = the node connector position ('+- ' / ':- ')."""
-    import re
-
-    stack: list[tuple[int, bool]] = []  # (node-name position, is_broadcast)
-    bad = []
-    for ln in physical.splitlines():
-        if not ln.strip():
-            continue
-        # depth = position of the node name: skip tree glyphs (' ', ':',
-        # '|', '+', '-') — robust to AQE stage lines with NO connector
-        # ('ResultQueryStage 3') and '== Final Plan ==' section markers
-        ind = re.match(r"^[ :|+\-]*", ln).end()
-        node = re.sub(r"^\*?\(\d+\) ", "", ln[ind:])  # codegen '*(k) '
-        while stack and stack[-1][0] >= ind:
-            stack.pop()
-        is_shuffle = node.startswith("Exchange ") or node.startswith("AQEShuffleRead")
-        if is_shuffle and not any(b for _, b in stack):
-            bad.append(ln)
-        stack.append((ind, node.startswith("BroadcastExchange")))
-    return bad

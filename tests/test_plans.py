@@ -156,6 +156,17 @@ def test_entry_module_compiles_without_warnings():
         compile(src, path, "exec")
 
 
+def test_every_query_has_an_oracle():
+    """Each declared query has a DuckDB oracle and each oracle a query:
+    a retired query takes its oracle with it. ``pack_bfd_documents`` is
+    row-only by contract: best-fit-decreasing packing has no SQL twin."""
+    import __spark_entry__ as entrymod
+
+    queries, oracles = set(entrymod.queries()), set(entrymod.oracle_sql())
+    assert oracles <= queries, oracles - queries
+    assert queries - oracles == {"pack_bfd_documents"}
+
+
 def test_whole_stage_codegen_covers_checks(spark, pages_parquet):
     """Flat-column checks must stay inside WholeStageCodegen spans."""
     tbl = (spark.read.parquet(pages_parquet)

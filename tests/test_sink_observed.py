@@ -197,10 +197,3 @@ def test_observed_counts_exclude_ignored_from_failed(spark):
     assert m["ignored_docs"] == s["ignored_docs"] == 2
     res.release()
 
-
-def test_invalid_dup_strategy_rejected(spark):
-    plan = compile_schema(_DOCS_SCHEMA)
-    import pytest
-
-    with pytest.raises(ValueError, match="dup_strategy"):
-        validate_corpus({"t/1.0": (plan, _corpus(spark))}, dup_strategy="bcast")

@@ -266,7 +266,6 @@ def test_cosine_topk_all_pairs(emb):
     assert len(counts) == 30
 
 
-# ---------------------------------------------------------------- multimodal
 def test_assign_clusters_pandas_matches_folded(emb):
     """The Arrow/numpy assignment path (big codebooks) must agree with the
     constant-folded expression path row for row."""
@@ -283,43 +282,6 @@ def test_assign_clusters_pandas_matches_folded(emb):
     a = {r["id"]: r["cluster"] for r in folded.collect()}
     b = {r["id"]: r["cluster"] for r in vectorized.collect()}
     assert a == b and len(a) > 0
-
-
-def test_multimodal_decode_plumbing(spark):
-    from fairtracks_validator_spark.operators.multimodal import decode_image_batch
-
-    # neither payload carries a real codec signature (PPM/PNG/JPEG all
-    # decode natively now) — this exercises the fake-kernel plumbing path
-    df = spark.createDataFrame(
-        [(1, bytearray(b"\x89PNGfakebytes")), (2, bytearray(b"RIFFaudiofake"))],
-        "id LONG, payload BINARY",
-    )
-    out = decode_image_batch(df, fake_decoder=True).collect()
-    assert {r["id"] for r in out} == {1, 2}
-    r1 = [r for r in out if r["id"] == 1][0]
-    assert r1["n_bytes"] == 13 and len(r1["features"]) == 8
-    assert 16 <= r1["width"] < 1040
-
-    with pytest.raises(Exception, match="NotImplementedError|codecs"):
-        decode_image_batch(df, fake_decoder=False).collect()
-
-
-def test_multimodal_resize_plumbing(spark):
-    from fairtracks_validator_spark.operators.multimodal import resize_image_batch
-
-    df = spark.createDataFrame(
-        [(1, bytearray(bytes(range(256)))), (2, bytearray(b"tiny")), (3, None)],
-        "id LONG, payload BINARY",
-    )
-    out = {r["id"]: r for r in resize_image_batch(df, 4, 4, fake_kernel=True).collect()}
-    assert out[1]["width"] == 4 and out[1]["height"] == 4
-    assert len(bytes(out[1]["payload"])) == 16  # target "pixel" count
-    assert out[3]["payload"] is None
-    # deterministic: same input -> same bytes
-    again = {r["id"]: r for r in resize_image_batch(df, 4, 4, fake_kernel=True).collect()}
-    assert bytes(out[1]["payload"]) == bytes(again[1]["payload"])
-    with pytest.raises(Exception, match="NotImplementedError|codecs"):
-        resize_image_batch(df, 4, 4).collect()
 
 
 def test_embedding_neardup_empty_and_ragged(spark):
@@ -433,56 +395,6 @@ def test_kmeans_codebook_deterministic_and_recall(spark):
     ]
     recall = len(set(exact_ids) & set(approx_ids)) / 10
     assert recall >= 0.9, (recall, exact_ids, approx_ids)
-
-
-def _ppm_bytes(w, h):
-    """Deterministic RGB gradient as binary PPM (P6)."""
-    import numpy as np
-
-    x = np.arange(w, dtype=np.uint16)
-    y = np.arange(h, dtype=np.uint16)
-    r = np.broadcast_to((x * 255 // max(w - 1, 1)).astype(np.uint8), (h, w))
-    g = np.broadcast_to(((y * 255 // max(h - 1, 1)).astype(np.uint8))[:, None], (h, w))
-    b = np.full((h, w), 7, dtype=np.uint8)
-    px = np.stack([r, g, b], axis=2)
-    return f"P6\n# gradient\n{w} {h}\n255\n".encode() + px.tobytes()
-
-
-def test_multimodal_ppm_real_decode(spark):
-    """PPM payloads decode with the REAL pure-numpy codec: exact dims and
-    channel statistics, not fake-checksum features."""
-    from fairtracks_validator_spark.operators.multimodal import decode_image_batch
-
-    payload = _ppm_bytes(32, 8)
-    df = spark.createDataFrame([(1, bytearray(payload))], "id long, payload binary")
-    row = decode_image_batch(df, "id", "payload").collect()[0]
-    assert (row["width"], row["height"]) == (32, 8)
-    feats = row["features"]
-    # blue channel is constant 7/255 → mean ≈ 0.027451, std 0
-    assert abs(feats[2] - 7 / 255) < 1e-5 and abs(feats[5]) < 1e-9
-    # red ramps 0..255 → mean ≈ 0.5
-    assert abs(feats[0] - 0.5) < 0.02
-
-
-def test_multimodal_ppm_real_resize(spark):
-    """Nearest-neighbour PPM resize: output is valid P6 at the target size
-    whose pixels equal the numpy index-sampled source."""
-    import numpy as np
-
-    from fairtracks_validator_spark.operators.multimodal import (
-        _parse_ppm,
-        resize_image_batch,
-    )
-
-    payload = _ppm_bytes(16, 16)
-    df = spark.createDataFrame([(1, bytearray(payload))], "id long, payload binary")
-    row = resize_image_batch(df, 4, 4, "id", "payload").collect()[0]
-    w, h, px = _parse_ppm(bytes(row["payload"]))
-    assert (w, h) == (4, 4)
-    _, _, src = _parse_ppm(payload)
-    xi = (np.arange(4) * 16) // 4
-    expected = src[xi][:, xi]
-    assert np.array_equal(px, expected)
 
 
 def test_containment_catches_subset_dups_jaccard_misses(spark):
