@@ -20,7 +20,11 @@ Two physical shapes implement it, chosen from the compiled plans alone:
   constraint) ONE key-only window; each FK is a left join of the
   referencing stage against the target registry's distinct keys inside the
   same plan (AQE picks broadcast or shuffle at runtime), and registry
-  emptiness (J3) is a one-row aggregate cross-joined in-plan. Verdicts,
+  emptiness (J3) counts that same distinct relation, cross-joined in-plan.
+  The probe's key set is read without the window: with one flat key per
+  row, the keys a registry records are exactly its schema's checked keys
+  less those prior holders hold (``_KernelTemplate.probe_keys``), so a
+  probed schema is ranked once, in its own output branch. Verdicts,
   violations, the wide one-row-per-document relation and the registries
   are lazy projections of one plan: nothing is persisted and nothing runs
   before the caller's sink. The registry is complete before any probe by
@@ -846,12 +850,13 @@ class _KernelTemplate:
             #   from it above the window. Identical (ord, source) identities
             #   tie as rank 1.
             self.writer = writer = FirstWriter("_k2", with_prior, ord_, src)
+            checked_key = F.when(all_ok, flat_key_string(uq.members))
             self.narrow = [
                 writer.identity.alias("_id"), *checked, *fk_keys,
-                F.coalesce(
-                    F.when(all_ok, flat_key_string(uq.members)), surrogate
-                ).alias("_k2"),
+                F.coalesce(checked_key, surrogate).alias("_k2"),
             ]
+            self.key_str = checked_key.alias("key_str")
+            self.keyed = F.col("key_str").isNotNull()
             k2 = F.col("_k2")
             self.ranked = [
                 F.col("_id.s").alias("source"), F.col("_id.o").alias("ord"),
@@ -1012,14 +1017,35 @@ class _KernelTemplate:
         every check — shared by the kernel and the stream's micro-batches."""
         return stage.where(self.recorded_where).select(*self.recorded_cols)
 
-    def probe(self, stage: DataFrame, registry) -> DataFrame:
-        """Join each probed FK's target registry (``registry(key)``) onto
-        ``stage`` and bind one violation entry per FK (``_fe0`` …)."""
+    def probe_keys(self, df: DataFrame, prior: DataFrame | None = None) -> DataFrame:
+        """The keys this schema's registry records, read without the window:
+        every checked key (``_ok`` rows, key not null) of ``df`` less the
+        keys ``prior`` holders hold. Not distinct.
+
+        Their distinct set equals the distinct keys of ``recorded(stage)``.
+        A row carries at most one flat key, and a key's rows compete in one
+        window partition with no schema-failed row among them (those rank on
+        their surrogate). Without a prior holder, the key's ``min(_id)`` row
+        is rank 1 by construction, so the key is recorded. With one, the
+        holder ranks first (``_id.p`` = 0): every row of the key is either
+        held (``_key`` null) or later (rank 2), so the key is not recorded.
+        Which rows tie or hold a key changes only ``first_source`` and
+        ``first_ord``, never the key set, so a probe needs neither the
+        identity nor the sort."""
+        keys = df.select(self.key_str).where(self.keyed)
+        if prior is None:
+            return keys
+        return keys.join(prior.select("key_str"), "key_str", "left_anti")
+
+    def probe(self, stage: DataFrame, keys) -> DataFrame:
+        """Join each probed FK's target key set (``keys(registry key)``, a
+        distinct ``key_str`` relation) onto ``stage`` and bind one violation
+        entry per FK (``_fe0`` …). J3 counts the same distinct relation, so
+        its aggregate reads the probe's exchange instead of a scan of its
+        own."""
         for rkey, hit, on, has in self.probes:
-            reg = registry(rkey)
-            stage = stage.join(reg.select(hit).distinct(), on, "left").crossJoin(
-                reg.agg(has)
-            )
+            dk = keys(rkey)
+            stage = stage.join(dk.select(hit), on, "left").crossJoin(dk.agg(has))
         return stage if self.probed is None else stage.select(*self.probed)
 
     def verdicts(self, probed: DataFrame) -> DataFrame:
@@ -1048,21 +1074,27 @@ def _validate_kernel(
 ) -> ValidationResult:
     """Every schema's stage, registry and FK probes in ONE lazy plan.
 
-    Registries are each stage's recorded rows (``_ok``, rank 1, keyed)
-    unioned with any seed. Each FK left-joins the referencing stage against
-    its target registry's distinct keys — the join consumes the fully
-    aggregated registry, so every probe sees the complete key set (the
-    reference's registry-before-probe order) — and AQE chooses broadcast or
-    shuffle from the registry's runtime size. J3 (empty registry) is a
-    one-row ``count > 0`` aggregate cross-joined in; J2 (target schema not
-    registered) and a target without that constraint are constants. Only
-    pass-2 documents (``_ok`` and rank 1) probe. Single schema, no FK, no
-    seed: exactly one scan and one shuffle — the web-scale pages plan. A
-    probed registry re-derives its schema's stage: column pruning narrows
-    it to the key, so its exchange is not shared with that schema's output.
+    Registries (``pk_registries``) are each stage's recorded rows (``_ok``,
+    rank 1, keyed) unioned with any seed; they keep the first holder's
+    identity, which stream and checkpoint writes need. An FK probe needs
+    only the keys: it left-joins the referencing stage against its target's
+    probe key set — the target schema's checked keys less its prior
+    holders' keys, plus any seed, made distinct — read without the
+    first-writer window, and equal to the distinct keys of the registry
+    (``_KernelTemplate.probe_keys``). The join consumes the fully
+    aggregated key set, so every probe sees the complete registry (the
+    reference's registry-before-probe order), and AQE chooses broadcast or
+    shuffle from its runtime size. J3 (empty registry) is a ``count > 0``
+    over the same distinct relation, so it reads the probe's exchange
+    again; J2 (target schema not registered) and a target without that
+    constraint are constants. The key set is built once per registry, so
+    every FK that targets it shares one subtree. Only pass-2 documents
+    (``_ok`` and rank 1) probe. Single schema, no FK, no seed: exactly one
+    scan and one shuffle — the web-scale pages plan; a probed schema adds
+    one more scan of its check and key columns and one key shuffle.
 
-    Only ``wide`` is built here; verdicts, violations and the registries no
-    FK probes are built when first read.
+    Only ``wide`` is built here; verdicts, violations and the registries
+    are built when first read.
     """
     registered = set(corpus) | {sid for sid, _ in seed_registries}
     rkeys = {
@@ -1083,6 +1115,7 @@ def _validate_kernel(
         stages[sid] = tpl.stage(df, prior)
 
     registries: dict[tuple[str, str], DataFrame] = {}
+    key_sets: dict[tuple[str, str], DataFrame] = {}
 
     def registry(rkey: tuple[str, str]) -> DataFrame:
         if rkey not in registries:
@@ -1094,7 +1127,18 @@ def _validate_kernel(
                 registries[rkey] = reg if seed is None else reg.unionByName(seed)
         return registries[rkey]
 
-    probed = {sid: templates[sid].probe(stages[sid], registry) for sid in corpus}
+    def key_set(rkey: tuple[str, str]) -> DataFrame:
+        if rkey not in key_sets:
+            seed, sid = seed_registries.get(rkey), owner.get(rkey)
+            parts = [] if sid is None else [templates[sid].probe_keys(
+                corpus[sid][1], prior_registries.get(rkey)
+            )]
+            if seed is not None:
+                parts.append(seed.select("key_str"))
+            key_sets[rkey] = _union_all(parts).distinct()
+        return key_sets[rkey]
+
+    probed = {sid: templates[sid].probe(stages[sid], key_set) for sid in corpus}
     return ValidationResult(
         verdicts=lambda: _union_all(
             [templates[sid].verdicts(p) for sid, p in probed.items()]

@@ -142,6 +142,122 @@ def test_pages_wide_plan_sorts_on_key_hash(spark, pages_parquet):
     assert "octet_length(text" in map_side, map_side
 
 
+def _node_lines(txt: str) -> list[tuple[int, str]]:
+    """(depth, node) per line of a plan tree string."""
+    out = []
+    for ln in txt.splitlines():
+        node = ln.lstrip(" :+-")
+        out.append((len(ln) - len(node), node))
+    return out
+
+
+def _subtree(nodes, i) -> list[str]:
+    """The node at ``i`` and its descendants; a ``ReusedExchange`` brings
+    the subtree of the exchange it reuses."""
+    depth, out = nodes[i][0], [nodes[i][1]]
+    for d, node in nodes[i + 1:]:
+        if d <= depth:
+            break
+        out.append(node)
+    for node in list(out):
+        if node.startswith("ReusedExchange"):
+            pid = _plan_id(node)
+            out += _subtree(nodes, next(
+                k for k, (_, n) in enumerate(nodes)
+                if n.startswith("Exchange") and _plan_id(n) == pid
+            ))
+    return out
+
+
+def _plan_id(node: str) -> str | None:
+    m = re.search(r"\[plan_id=\d+\]", node)
+    return m and m.group(0)
+
+
+def _children(nodes, i) -> list[int]:
+    depth = nodes[i][0]
+    kids, k = [], i + 1
+    while k < len(nodes) and nodes[k][0] > depth:
+        if nodes[k][0] == depth + 3:
+            kids.append(k)
+        k += 1
+    return kids
+
+
+def test_routed_wide_plan_ranks_each_schema_once(spark, tmp_path):
+    """The routed users/events ``wide`` plan ranks the users rows through
+    the first-writer window once, in the output branch. The FK probe's
+    build side is the windowless key set (no Sort, no Window, no identity
+    columns read), and the J3 has-documents count aggregates the same
+    distinct relation, so it reads the probe's exchange again instead of a
+    scan and shuffle of its own."""
+    from fairtracks_validator_spark.runner import sink_observed, validate_routed
+
+    # the benchmark's routed shape: 10% users with a primary key (some keys
+    # reused, a `minimum` check), events with a `maximum` check and an FK
+    # into the users (some dangling), a few orphans
+    path = str(tmp_path / "routed")
+    n = F.col("id")
+    user_key = F.when(n % 70 == 0, n - 10).otherwise(n)
+    (
+        spark.range(4000, numPartitions=2)
+        .select(
+            F.concat(F.lit("d"), n.cast("string")).alias("source"),
+            n.alias("ord"),
+            F.when(n % 10 == 0, "users/1.0")
+            .when(n % 997 == 1, "orders/1.0")
+            .otherwise("events/1.0").alias("schema_id"),
+            F.when(n % 10 == 0, user_key).alias("user_key"),
+            F.when(n % 10 == 0, (n % 53 - 1).cast("double")).alias("balance"),
+            F.when(n % 10 != 0, n * 7 % 4100 - n * 7 % 10).alias("user_id"),
+            F.when(n % 10 != 0, (n % 450).cast("double")).alias("value"),
+        )
+        .write.parquet(path)
+    )
+    plans = {
+        "users/1.0": compile_schema({
+            "$id": "users/1.0", "primary_key": ["user_key"],
+            "properties": {"balance": {"minimum": 0}},
+        }),
+        "events/1.0": compile_schema({
+            "$id": "events/1.0", "properties": {"value": {"maximum": 400}},
+            "foreign_keys": [{"schema_id": "users/1.0", "members": ["user_id"]}],
+        }),
+    }
+    res = validate_routed(spark.read.parquet(path), plans)
+    m = sink_observed(res)
+    assert m["docs"] == 4000 and m["ignored_docs"] == 5 and m["violations"] > 0
+    res.wide.collect()  # settles the AQE final plan of `wide` itself
+    txt = _plan_str(res.wide)
+    assert "isFinalPlan=true" in txt
+    final = txt.split("== Initial Plan ==", 1)[0]
+    nodes = _node_lines(final)
+
+    assert sum(node.startswith("Window [") for _, node in nodes) == 1, final
+
+    join = next(i for i, (_, node) in enumerate(nodes)
+                if "HashJoin" in node and "LeftOuter" in node)
+    build = _subtree(nodes, _children(nodes, join)[1])
+    assert not [x for x in build if x.startswith(("Sort [", "Window ["))], build
+    scans = [x for x in build if x.startswith("FileScan")]
+    assert scans, build
+    for scan in scans:
+        read = scan.split("ReadSchema: ", 1)[1]
+        assert "source:" not in read and "ord:" not in read, scan
+
+    j3 = _subtree(nodes, next(
+        i for i, (_, node) in enumerate(nodes)
+        if "keys=[], functions=[count(1)]" in node
+    ))
+
+    def key_exchanges(lines):
+        return {_plan_id(x) for x in lines if "hashpartitioning(key_str" in x}
+
+    assert len(key_exchanges(build)) == 1, build
+    assert key_exchanges(j3) == key_exchanges(build), final
+    assert any(x.startswith("ReusedExchange") for x in j3 + build), final
+
+
 def test_entry_module_compiles_without_warnings():
     """``__spark_entry__.py`` compiles with warnings turned into errors: an
     invalid escape such as ``'\\s'`` in a plain string literal warns

@@ -213,6 +213,124 @@ def test_routed_kernel_matches_two_pass(spark, rows, drop_users, user_seed, ext_
     ref.release()
 
 
+# ---- prior holders on the kernel path ------------------------------------
+#
+# Prior holders (registry rows frozen before a run) take part in uniqueness
+# only: a document whose key a prior holder records under another identity
+# is a dup_pk blamed on the holder, one whose key it records under this very
+# identity is held (neither a duplicate nor recorded again), and no FK
+# probe ever hits a prior key unless it is also seeded. Holders are drawn
+# from the corpus's own identity space, so both cases occur.
+_PRIOR = st.none() | st.dictionaries(
+    st.sampled_from(["k1", "k2", "k3"]),
+    st.tuples(st.sampled_from(["a", "b", None]), st.integers(0, 4)),
+    max_size=3,
+)
+# pinned: (1) users k1 is held by its own document (a, 0) and duplicated by
+# the null-source user, so the event (a, 1) that references it is
+# fk_missing; users k2 is a prior key only. (2) events k1 is held elsewhere
+# (both k1 events are dups) and events k2 by (b, 3) itself, so the events
+# registry this run adds is empty and the self-FK reads J3.
+_PRIOR_EXAMPLES = [
+    ({"k1": ("a", 0), "k2": (None, 2)}, {"k2": ("b", 3)}),
+    (None, {"k1": ("z", 0), "k2": ("b", 3)}),
+]
+
+
+def _prior(spark, sid: str, check_id: str, holders: dict):
+    return spark.createDataFrame(
+        [(sid, check_id, f'["{k}"]', s, o) for k, (s, o) in sorted(holders.items())],
+        "schema_id string, check_id string, key_str string, "
+        "first_source string, first_ord long",
+    )
+
+
+def _prior_corpus(spark, rows, user_prior, event_prior):
+    from fairtracks_validator_spark.plans.schema_compile import compile_schema
+    from fairtracks_validator_spark.sources.catalog import route_corpus
+
+    plans = {s["$id"]: compile_schema(s) for s in _PARITY_SCHEMAS}
+    df = spark.createDataFrame(_parity_rows(rows, False), _PARITY_DDL)
+    corpus, _ = route_corpus(df, plans)
+    prior = {}
+    for sid, holders in (("users/1", user_prior), ("events/1", event_prior)):
+        if holders is not None:
+            check_id = plans[sid].uniques[0].check_id
+            prior[(sid, check_id)] = _prior(spark, sid, check_id, holders)
+    return corpus, prior
+
+
+@settings(max_examples=2, deadline=None)
+@given(
+    rows=st.lists(_PROW, min_size=0, max_size=14),
+    user_prior=_PRIOR,
+    event_prior=_PRIOR,
+    user_seed=st.none() | st.lists(st.sampled_from(["k1", "k3"]), max_size=2),
+)
+@example(rows=_PARITY_EXAMPLE, user_prior=_PRIOR_EXAMPLES[0][0],
+         event_prior=_PRIOR_EXAMPLES[0][1], user_seed=["k3"])
+@example(rows=_PARITY_EXAMPLE, user_prior=_PRIOR_EXAMPLES[1][0],
+         event_prior=_PRIOR_EXAMPLES[1][1], user_seed=None)
+def test_kernel_prior_holders_match_two_pass(
+    spark, rows, user_prior, event_prior, user_seed
+):
+    from fairtracks_validator_spark.runner import _validate_two_pass, validate_corpus
+
+    corpus, prior = _prior_corpus(spark, rows, user_prior, event_prior)
+    seeds = {("ext/1", "pk"): _seed(spark, "ext/1", ["k1"])}
+    if user_seed is not None:
+        seeds[("users/1", "pk")] = _seed(spark, "users/1", user_seed)
+
+    kernel = validate_corpus(corpus, seed_registries=seeds, prior_registries=prior)
+    assert kernel.wide is not None  # the kernel path is the one under test
+    ref = _validate_two_pass(corpus, seed_registries=seeds, prior_registries=prior)
+
+    def rows_of(d):
+        return sorted(map(tuple, d.collect()), key=repr)
+
+    assert rows_of(kernel.verdicts) == rows_of(ref.verdicts)
+    assert rows_of(kernel.violations) == rows_of(ref.violations)
+    registry = ["key_str", "first_source", "first_ord"]
+    assert set(kernel.pk_registries) == set(ref.pk_registries)
+    for rkey, reg in kernel.pk_registries.items():
+        assert rows_of(reg.select(*registry)) == rows_of(
+            ref.pk_registries[rkey].select(*registry)
+        ), rkey
+    ref.release()
+
+
+@settings(max_examples=6, deadline=None)
+@given(
+    rows=st.lists(_PROW, min_size=0, max_size=14),
+    user_prior=_PRIOR,
+    event_prior=_PRIOR,
+)
+@example(rows=_PARITY_EXAMPLE, user_prior=None, event_prior=None)
+@example(rows=_PARITY_EXAMPLE, user_prior=_PRIOR_EXAMPLES[0][0],
+         event_prior=_PRIOR_EXAMPLES[0][1])
+def test_probe_key_set_is_the_recorded_key_set(spark, rows, user_prior, event_prior):
+    """The windowless key set an FK probe joins holds exactly the keys of
+    the registry rows the first-writer window records (tied identities,
+    null sources, schema-failed first holders, null keys, prior holders)."""
+    from fairtracks_validator_spark.runner import _KernelTemplate, validate_corpus
+
+    corpus, prior = _prior_corpus(spark, rows, user_prior, event_prior)
+    res = validate_corpus(corpus, prior_registries=prior)
+    assert res.wide is not None
+    for sid, (plan, df) in corpus.items():
+        if not plan.uniques:
+            continue
+        rkey = (sid, plan.uniques[0].check_id)
+        tpl = _KernelTemplate(
+            plan, sid, "source", "ord", rkey in prior, ("no_schema",) * len(plan.fks)
+        )
+        keys = [r.key_str for r in tpl.probe_keys(df, prior.get(rkey)).collect()]
+        assert None not in keys
+        assert set(keys) == {
+            r.key_str for r in res.pk_registries[rkey].collect()
+        }, rkey
+
+
 # ---- stream of k micro-batches ⇔ one batch run ---------------------------
 #
 # A corpus split by ord into contiguous micro-batches, each run through
