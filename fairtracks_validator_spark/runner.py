@@ -1091,7 +1091,8 @@ def _validate_kernel(
     every FK that targets it shares one subtree. Only pass-2 documents
     (``_ok`` and rank 1) probe. Single schema, no FK, no seed: exactly one
     scan and one shuffle — the web-scale pages plan; a probed schema adds
-    one more scan of its check and key columns and one key shuffle.
+    one more scan of its check and key columns and one key shuffle, which
+    J3 reads again.
 
     Only ``wide`` is built here; verdicts, violations and the registries
     are built when first read.
@@ -1114,18 +1115,14 @@ def _validate_kernel(
         )
         stages[sid] = tpl.stage(df, prior)
 
-    registries: dict[tuple[str, str], DataFrame] = {}
-    key_sets: dict[tuple[str, str], DataFrame] = {}
-
     def registry(rkey: tuple[str, str]) -> DataFrame:
-        if rkey not in registries:
-            seed, sid = seed_registries.get(rkey), owner.get(rkey)
-            if sid is None:
-                registries[rkey] = seed
-            else:
-                reg = templates[sid].recorded(stages[sid])
-                registries[rkey] = reg if seed is None else reg.unionByName(seed)
-        return registries[rkey]
+        seed, sid = seed_registries.get(rkey), owner.get(rkey)
+        if sid is None:
+            return seed
+        reg = templates[sid].recorded(stages[sid])
+        return reg if seed is None else reg.unionByName(seed)
+
+    key_sets: dict[tuple[str, str], DataFrame] = {}
 
     def key_set(rkey: tuple[str, str]) -> DataFrame:
         if rkey not in key_sets:
