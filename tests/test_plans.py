@@ -143,11 +143,12 @@ def test_pages_wide_plan_sorts_on_key_hash(spark, pages_parquet):
 
 
 def _node_lines(txt: str) -> list[tuple[int, str]]:
-    """(depth, node) per line of a plan tree string."""
+    """(depth, node) per line of a plan tree string, without the
+    whole-stage codegen prefix ``*(n)``."""
     out = []
     for ln in txt.splitlines():
         node = ln.lstrip(" :+-")
-        out.append((len(ln) - len(node), node))
+        out.append((len(ln) - len(node), re.sub(r"^\*\(\d+\) ", "", node)))
     return out
 
 
