@@ -14,8 +14,10 @@ violations, wall-time per partition). Design:
 - **Stage checkpoint 2 — per-partition outputs**: the todo partitions run
   through ``validate_corpus`` with the frozen global registry as prior
   holders, so a document is a duplicate exactly when the registry's first
-  holder of its key is another document — the fresh run's verdict. FK
-  probes run against frozen registries afterwards. Verdicts + violations are
+  holder of its key is another document — the fresh run's verdict. The
+  same registry, with any external ones (``extra_registries``), seeds the
+  run's FK probes, so a partition's verdicts are those of a fresh run
+  seeded with the external registries. Verdicts + violations are
   written partitioned by ``part_id`` with dynamic partition overwrite
   (idempotent per partition); a lineage row ``(part_id, rows_scanned,
   violations, wall_time_s, run_id, status)`` is appended only after the
@@ -38,7 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .plans.schema_compile import ValidationPlan
-from .runner import _anti_on_identity, validate_corpus
+from .runner import flat_violations, validate_corpus
 from .session import path_exists
 
 LINEAGE_SCHEMA = (
@@ -136,8 +138,10 @@ class CheckpointedValidation:
 
         # per-partition-safe checks: schema checks are row-local, and every
         # key's first holder is the frozen global registry's — a prior
-        # holder of THIS subset's run. Semantics equal a fresh global run
-        # because the registry is global and frozen.
+        # holder of THIS subset's run. The registry also seeds the FK
+        # probes, with any external registries, so a probe of it sees the
+        # whole run's keys. Semantics equal a fresh global run seeded with
+        # ``extra_registries`` because the registry is global and frozen.
         prior = {}
         if plan.uniques:
             reg = spark.read.parquet(self.registry_dir)
@@ -148,92 +152,35 @@ class CheckpointedValidation:
                 )
                 for uq in plan.uniques
             }
+        seeds = dict(extra_registries or {})
+        for rkey, held in prior.items():
+            seeds[rkey] = held if rkey not in seeds else held.unionByName(seeds[rkey])
         res = validate_corpus(
-            {plan.schema_id: (plan.without_fks(), subset)},
-            source_col, ord_col, prior_registries=prior,
+            {plan.schema_id: (plan, subset)}, source_col, ord_col,
+            seed_registries=seeds, prior_registries=prior,
         )
-        violations = res.violations
 
-        # FK probes against frozen external registries (dimension tables or
-        # other tables' checkpointed registries) — partition-local, resumable
-        if plan.fks:
-            from .operators.fk import fk_check
-
-            extra = extra_registries or {}
-            masked = _anti_on_identity(subset, violations, source_col, ord_col)
-            for fk in plan.fks:
-                pk = extra.get((fk.target_schema_id, fk.target_check_id))
-                if pk is None and fk.target_schema_id == plan.schema_id:
-                    # self-referential FK (parent_url -> own url PK): the
-                    # table IS registered — probe its frozen registry, or an
-                    # empty one when the plan declares no such constraint
-                    # (J3), never "no available schema" (code-review r4)
-                    if _exists(spark, self.registry_dir):
-                        pk = spark.read.parquet(self.registry_dir).where(
-                            (F.col("schema_id") == plan.schema_id)
-                            & (F.col("check_id") == fk.target_check_id)
-                        )
-                    else:
-                        pk = spark.createDataFrame(
-                            [],
-                            "schema_id string, check_id string, key_str "
-                            "string, first_source string, first_ord long",
-                        )
-                violations = violations.unionByName(
-                    fk_check(
-                        masked, fk.check_id, fk.members, plan.schema_id,
-                        fk.target_schema_id, pk, source_col, ord_col,
-                    )
-                )
-
-        # null-safe joins on source: a null key row (null url) must still
-        # pair with its own violations and carry its part_id — plain equi
-        # joins drop it, marking the row validated and parking its
-        # violations in a part_id=-1 blob that dynamic overwrite clobbers
-        # per batch (code-review r3). ord is positionally stamped non-null
-        # and unique, so eqNullSafe on source cannot fan out.
-        failed = violations.select(
-            F.col("source").alias("_fsrc"), F.col("ord").alias("_ford")
-        ).distinct().withColumn("_f", F.lit(True))
-        base = subset.select(
-            F.col(source_col).alias("source"),
-            F.col(ord_col).cast("long").alias("ord"),
-            F.lit(plan.schema_id).alias("schema_id"),
-            F.col("part_id"),
-        )
-        verdicts = (
-            base.join(
-                failed,
-                base["source"].eqNullSafe(failed["_fsrc"])
-                & (base["ord"] == failed["_ford"]),
-                "left",
-            )
-            .select(
-                "source", "ord", "schema_id",
-                F.coalesce(~F.col("_f"), F.lit(True)).alias("validated"),
-                "part_id",
-            )
-            .withColumn(
-                "status", F.when(F.col("validated"), "ok").otherwise("failed")
-            )
-        )
-        # violations are output-sized and feed BOTH writes (verdicts via the
-        # failed-join, viol_out directly) — persist once so the two writes
-        # do not each re-execute the violation pipeline (code-review r4)
-        violations = violations.persist()
+        # part_id rides along by identity, joined once onto the wide
+        # relation both writes read (persisted, so the validation runs once
+        # per batch). Null-safe on source: a null key row (null url) must
+        # still carry its part_id — a plain equi join drops it, parking its
+        # rows in a part_id=-1 blob that dynamic overwrite clobbers per
+        # batch (code-review r3). ord is positionally stamped non-null and
+        # unique, so eqNullSafe on source cannot fan out.
         part_of = subset.select(
             F.col(source_col).alias("_psrc"), F.col(ord_col).cast("long").alias("_pord"),
             "part_id",
         )
-        viol_out = (
-            violations.join(
+        wide = res.wide_verdicts()
+        wide = (
+            wide.join(
                 part_of,
-                violations["source"].eqNullSafe(part_of["_psrc"])
-                & (violations["ord"] == part_of["_pord"]),
+                wide["source"].eqNullSafe(part_of["_psrc"])
+                & (wide["ord"] == part_of["_pord"]),
                 "left",
             )
             .drop("_psrc", "_pord")
-            .na.fill({"part_id": -1})
+            .persist()
         )
 
         # dynamic overwrite scoped to OUR writes and restored after — this
@@ -244,12 +191,12 @@ class CheckpointedValidation:
         )
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         try:
-            verdicts.write.mode("overwrite").partitionBy("part_id").parquet(
-                self.verdicts_dir
-            )
-            viol_out.write.mode("overwrite").partitionBy("part_id").parquet(
-                self.violations_dir
-            )
+            wide.drop("violations").write.mode("overwrite").partitionBy(
+                "part_id"
+            ).parquet(self.verdicts_dir)
+            flat_violations(wide, "part_id").write.mode("overwrite").partitionBy(
+                "part_id"
+            ).parquet(self.violations_dir)
         finally:
             spark.conf.set(
                 "spark.sql.sources.partitionOverwriteMode", prev_mode
@@ -257,8 +204,8 @@ class CheckpointedValidation:
 
         # ---- lineage append (only after data committed)
         # stats come from READING BACK the just-committed parquet (output-
-        # sized), not from re-running the validation DAG — each write scans
-        # the subset once; the violation pipeline ran once (persisted).
+        # sized), not from re-running the validation DAG, which ran once
+        # (persisted).
         wall = time.time() - t0
         # explicit schemas: a processed batch may legitimately contain zero
         # violations (or zero rows under max_partitions), leaving a dir with
@@ -301,6 +248,6 @@ class CheckpointedValidation:
             )
         )
         stats.write.mode("append").parquet(self.lineage_dir)
-        violations.unpersist()
+        wide.unpersist()
         res.release()  # outputs committed; drop this batch's caches
         return {"processed": todo, "skipped": sorted(done), "wall_time_s": wall}

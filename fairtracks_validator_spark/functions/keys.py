@@ -147,20 +147,28 @@ def is_flat_members(member_jpaths: list[str]) -> bool:
     return all("." not in jp and "[" not in jp for jp in member_jpaths)
 
 
+def flat_key_parts(member_jpaths: list[str]) -> tuple[Column, Column]:
+    """``(present, key)`` for flat scalar members: whether every member is
+    present, and the key string of a row where they all are. Keeping them
+    apart lets a relation of keyed rows filter on the members and serialize
+    each key once (``flat_key_string`` gates ``key`` by ``present``)."""
+    cols = [F.col(jp).cast("string") for jp in member_jpaths]
+    if not cols:
+        # numPKcols==0 ⇒ no key at all (ValidatedJSONSchema.java:104-106)
+        return F.lit(False), F.lit(None).cast("string")
+    present = cols[0].isNotNull()
+    for c in cols[1:]:
+        present = present & c.isNotNull()
+    return present, F.to_json(F.array(*cols))
+
+
 def flat_key_string(member_jpaths: list[str]) -> Column:
     """Single ``key_str`` for flat scalar members — pure codegen, no
     higher-order functions. NULL when any member is null (≙ empty member
     value list ⇒ no key, ``ValidatedJSONSchema.java:108-114``); callers drop
     null keys. Byte-identical to the general path."""
-    if not member_jpaths:
-        # numPKcols==0 ⇒ no key at all (ValidatedJSONSchema.java:104-106)
-        return F.lit(None).cast("string")
-    cols = [F.col(jp).cast("string") for jp in member_jpaths]
-    all_present = None
-    for c in cols:
-        cond = c.isNotNull()
-        all_present = cond if all_present is None else (all_present & cond)
-    return F.when(all_present, F.to_json(F.array(*cols)))
+    present, key = flat_key_parts(member_jpaths)
+    return F.when(present, key)
 
 
 def has_array_fanout(member_jpaths: list[str]) -> bool:

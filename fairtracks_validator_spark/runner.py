@@ -24,9 +24,11 @@ Two physical shapes implement it, chosen from the compiled plans alone:
   The probe's key set is read without the window: with one flat key per
   row, the keys a registry records are exactly its schema's checked keys
   less those prior holders hold (``_KernelTemplate.probe_keys``), so a
-  probed schema is ranked once, in its own output branch. Verdicts,
-  violations, the wide one-row-per-document relation and the registries
-  are lazy projections of one plan: nothing is persisted and nothing runs
+  probed schema is ranked once, in its own output branch. The kernel has
+  one output relation, ``wide`` (one row per document with its nested
+  violations); ``verdicts`` is ``wide`` without them and the flat
+  ``violations`` is their explode (``flat_violations``), so both share
+  every exchange of ``wide``'s plan. Nothing is persisted and nothing runs
   before the caller's sink. The registry is complete before any probe by
   construction — the probe side joins the fully aggregated key set.
 
@@ -57,7 +59,7 @@ batch, stream and resume share one first-writer-wins implementation
 
 from __future__ import annotations
 
-from functools import reduce
+from functools import partial, reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -65,8 +67,8 @@ from pyspark.sql import functions as F
 from .operators.checks import apply_checks, checks_pass_predicate
 from .operators.fk import fk_check, fk_violation
 from .operators.uniqueness import FirstWriter, uniqueness_check
-from .functions.expr import context_memo
-from .functions.keys import flat_key_string, is_flat_members
+from .functions.expr import context_memo, let_
+from .functions.keys import flat_key_parts, flat_key_string, is_flat_members
 from .plans.schema_compile import ValidationPlan
 
 VIOLATION_SCHEMA = (
@@ -91,24 +93,31 @@ BROADCAST_MAX_PK_KEYS = 5_000_000
 
 
 class ValidationResult:
-    """One run's outputs: ``verdicts`` (source, ord, schema_id, validated,
-    status), ``violations`` (``VIOLATION_SCHEMA``), ``pk_registries`` keyed
-    by (schema_id, check_id) and, on the kernel path, ``wide`` — the
-    one-row-per-document verdict+nested-violations relation built in-plan
-    (None on the two-pass path, where ``wide_verdicts()`` joins).
+    """One run's outputs: ``wide``, one row per document (source, ord,
+    schema_id, validated, status) with its nested ``violations``;
+    ``verdicts``, which is ``wide`` without ``violations``; the flat
+    ``violations`` (``VIOLATION_SCHEMA``), the explode of those nested
+    entries (``flat_violations``); and ``pk_registries`` keyed by
+    (schema_id, check_id).
 
-    ``verdicts``, ``violations`` and ``pk_registries`` may be handed in as
-    zero-argument functions, which run on first read: a run whose sink reads
-    only ``wide`` (``sink_observed``) never analyses the others."""
+    A kernel run hands in only ``wide`` and ``verdicts``/``violations`` are
+    its projections, built on first read, so a sink that reads only
+    ``wide`` (``sink_observed``) never analyses them. The two-pass path
+    hands in flat ``verdicts`` and ``violations`` instead (``wide`` None;
+    ``wide_verdicts()`` joins them). Any output may be handed in as a
+    zero-argument function, which runs on first read."""
 
     def __init__(
         self,
-        verdicts,
-        violations,
+        verdicts=None,
+        violations=None,
         pk_registries=None,
         _persisted: list | None = None,
         wide: DataFrame | None = None,
     ):
+        if wide is not None:
+            verdicts = partial(wide.drop, "violations")
+            violations = partial(flat_violations, wide)
         self._outputs = {
             "verdicts": verdicts,
             "violations": violations,
@@ -146,48 +155,6 @@ class ValidationResult:
             except Exception:
                 pass
         self._persisted.clear()
-
-    def summary(self) -> dict[str, int]:
-        """docs / failed-docs / violation counts in ONE Spark action.
-
-        Both branches union into one plan, so ReuseExchange executes the
-        underlying scan+shuffle once — the way a real run sinks verdicts and
-        violations in a single pass rather than one job per output.
-        """
-        status = (
-            F.col("status")
-            if "status" in self.verdicts.columns
-            else F.when(F.col("validated"), "ok").otherwise("failed")
-        )
-        v = self.verdicts.select(
-            F.lit("verdicts").alias("kind"),
-            (status == "failed").cast("long").alias("bad"),
-            (status == "ignored").cast("long").alias("ign"),
-        )
-        w = self.violations.select(
-            F.lit("violations").alias("kind"),
-            F.lit(1).cast("long").alias("bad"),
-            F.lit(0).cast("long").alias("ign"),
-        )
-        rows = (
-            v.unionByName(w)
-            .groupBy("kind")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum("bad").alias("bad"),
-                F.sum("ign").alias("ign"),
-            )
-            .collect()
-        )
-        out = {"docs": 0, "failed_docs": 0, "ignored_docs": 0, "violations": 0}
-        for r in rows:
-            if r["kind"] == "verdicts":
-                out["docs"], out["failed_docs"], out["ignored_docs"] = (
-                    r["n"], r["bad"], r["ign"],
-                )
-            else:
-                out["violations"] = r["n"]
-        return out
 
     def wide_verdicts(self) -> DataFrame:
         """ONE row per document: the verdict columns plus a nested array of
@@ -236,6 +203,25 @@ class ValidationResult:
         )
 
 
+def flat_violations(wide: DataFrame, *keep: str) -> DataFrame:
+    """The flat violations view (``VIOLATION_SCHEMA``, then the ``keep``
+    columns of ``wide``) of a wide relation: one row per nested violation
+    entry, shared by the kernel's results, the stream's micro-batch writes
+    and the checkpoint's partition writes.
+
+    The ``let_`` identity wrap matters: InferFiltersFromGenerate derives a
+    pushable ``size(violations) > 0`` filter when the generator input is a
+    bare attribute, and only then; pushed below the projection it builds
+    the nested array twice per row."""
+    return wide.select(*context_memo(
+        _SHARED, "flat_violations", wide.sparkSession.sparkContext,
+        lambda: [
+            F.col("source"), F.col("ord"), F.col("schema_id"),
+            F.inline(let_(F.col("violations"), lambda x: x)),
+        ],
+    ), *keep)
+
+
 def sink_observed(
     result: ValidationResult,
     path: str | None = None,
@@ -268,7 +254,7 @@ def sink_observed(
             F.count(F.lit(1)).alias("docs"),
             # status=='failed', NOT ~validated: orphan docs
             # (status='ignored') also carry validated=False and must not
-            # double-count as failures (same convention as summary())
+            # double-count as failures
             F.sum((F.col("status") == F.lit("failed")).cast("long")).alias(
                 "failed_docs"
             ),
@@ -290,19 +276,6 @@ def sink_observed(
         k: int(m[k] or 0)
         for k in ("docs", "failed_docs", "ignored_docs", "violations")
     }
-
-
-def _null_ddl_for_steps(steps: list[tuple[str, str | None]]) -> str:
-    """DDL of a null column shaped like the ACCESS PATTERN of a jPath whose
-    root column is absent: `a.b[].c` pads `a` as
-    struct<b: array<struct<c: string>>> so getField/fan-out resolve and every
-    check sees "value absent"."""
-    t = "string"
-    for name, idx in reversed(steps[1:]):
-        inner = f"array<{t}>" if idx is not None else t
-        t = f"struct<{name}:{inner}>"
-    _name0, idx0 = steps[0]
-    return f"array<{t}>" if idx0 is not None else t
 
 
 def _merged_steps_ddl(paths_steps: list[tuple[list, str | None]]) -> str:
@@ -359,12 +332,6 @@ def _plan_steps_under(plan: ValidationPlan, root_name: str):
     return out
 
 
-def _merged_null_ddl(root_name: str, plan: ValidationPlan) -> str:
-    """DDL for an absent root column covering EVERY plan jPath under it."""
-    matched = _plan_steps_under(plan, root_name)
-    return _merged_steps_ddl(matched) if matched else ""
-
-
 def align_to_plan(df: DataFrame, plan: ValidationPlan) -> DataFrame:
     """Schema-drift tolerance: every jPath the plan references must RESOLVE
     against ``df`` — the reference treats an absent property as "no value"
@@ -389,7 +356,7 @@ def align_to_plan(df: DataFrame, plan: ValidationPlan) -> DataFrame:
             continue
         root, _ridx = steps[0]
         if root not in cols:
-            ddl = _merged_null_ddl(root, plan) or _null_ddl_for_steps(steps)
+            ddl = _merged_steps_ddl(_plan_steps_under(plan, root))
             _w.warn(
                 f"document column {root!r} (for schema path {path!r}) is "
                 f"absent from the table — treating as null ({plan.schema_id}; "
@@ -688,18 +655,21 @@ def validate_routed(
 
     corpus, orphans = route_corpus(df, plans, schema_id_col)
     res = validate_corpus(corpus, source_col, ord_col, seed_registries)
-    wide = res.wide
-    if wide is not None:
-        wide = wide.unionByName(orphans.select(*context_memo(
-            _SHARED, "orphan_wide", df.sparkSession.sparkContext,
-            lambda: [
-                F.col("source"), F.col("ord"), F.col("schema_id"),
-                F.lit(False).alias("validated"), F.lit("ignored").alias("status"),
-                F.array(
-                    F.struct("check_id", "key_str", "reason", "description")
-                ).alias("violations"),
-            ],
-        )))
+    if res.wide is not None:
+        return ValidationResult(
+            pk_registries=lambda: res.pk_registries,
+            wide=res.wide.unionByName(orphans.select(*context_memo(
+                _SHARED, "orphan_wide", df.sparkSession.sparkContext,
+                lambda: [
+                    F.col("source"), F.col("ord"), F.col("schema_id"),
+                    F.lit(False).alias("validated"),
+                    F.lit("ignored").alias("status"),
+                    F.array(
+                        F.struct("check_id", "key_str", "reason", "description")
+                    ).alias("violations"),
+                ],
+            ))),
+        )
     # carry the inner run's caches so release() on the routed result works
     # (code-review r4 — dropping them leaked every persisted relation)
     return ValidationResult(
@@ -708,7 +678,7 @@ def validate_routed(
             orphans.select(*[c.split()[0] for c in VIOLATION_SCHEMA.split(", ")])
         ),
         pk_registries=lambda: res.pk_registries,
-        _persisted=res._persisted, wide=wide,
+        _persisted=res._persisted,
     )
 
 
@@ -786,7 +756,6 @@ class _KernelTemplate:
         with_prior: bool,
         fk_shape: tuple[str, ...],
     ):
-        from .functions.expr import let_
         from .operators.checks import check_entries
 
         all_ok = checks_pass_predicate(plan.checks)
@@ -850,13 +819,17 @@ class _KernelTemplate:
             #   from it above the window. Identical (ord, source) identities
             #   tie as rank 1.
             self.writer = writer = FirstWriter("_k2", with_prior, ord_, src)
-            checked_key = F.when(all_ok, flat_key_string(uq.members))
+            present, key = flat_key_parts(uq.members)
+            checked_key = F.when(all_ok, F.when(present, key))
             self.narrow = [
                 writer.identity.alias("_id"), *checked, *fk_keys,
                 F.coalesce(checked_key, surrogate).alias("_k2"),
             ]
-            self.key_str = checked_key.alias("key_str")
-            self.keyed = F.col("key_str").isNotNull()
+            # the key set filters on the checks and the members, and its
+            # key column cannot be null, so neither its filter nor the
+            # probe join's inferred not-null filter serializes the key again
+            self.keyed = all_ok & present
+            self.key_str = F.coalesce(key, F.lit("")).alias("key_str")
             k2 = F.col("_k2")
             self.ranked = [
                 F.col("_id.s").alias("source"), F.col("_id.o").alias("ord"),
@@ -919,56 +892,8 @@ class _KernelTemplate:
         for e in fe:
             validated = validated & e.isNull()
         status = F.when(validated, "ok").otherwise("failed")
-        sid = F.lit(schema_id).alias("schema_id")
-        self.verdict_cols = [
-            c["source"], c["ord"], sid, validated.alias("validated"),
-            status.alias("status"),
-        ]
-        dup_desc = F.format_string(
-            "Duplicate PK in %s and %s", c["_first_source"], c["source"]
-        )
-        # check explode: no ¬_ok row filter (r6) — _fails is NULL for passing
-        # rows and explode of a null array emits zero rows; written out, the
-        # filter alias-inlined the full check predicate and pushed it below
-        # the caller's rebalance exchange (every check ran in the scan stage
-        # — one task on single-row-group input — and AGAIN above it). The
-        # let_ identity wrap matters: InferFiltersFromGenerate re-derives
-        # exactly that pushable size(_fails) > 0 filter when the explode
-        # input is a bare ATTRIBUTE, and only then — a non-attribute
-        # generator input is excluded by the rule ("we may evaluate
-        # expensive input expressions multiple times").
-        self.explode_cols = [
-            c["source"], c["ord"],
-            F.explode(let_(c["_fails"], lambda x: x)).alias("_f"),
-        ]
-        self.explode_where = ~F.col("_f.ok")
-        self.fail_cols = [
-            c["source"], c["ord"], sid,
-            F.col("_f.check_id").alias("check_id"),
-            F.lit(None).cast("string").alias("key_str"),
-            F.lit("schema").alias("reason"),
-            F.col("_f.message").alias("description"),
-        ]
-        self.violation_parts = []  # (where, select) after the check explode
-        if uq is not None:
-            self.violation_parts.append((
-                c["_ok"] & (c["_rn"] > 1),
-                [
-                    c["source"], c["ord"], sid,
-                    F.lit(uq.check_id).alias("check_id"),
-                    c["_key"].alias("key_str"),
-                    F.lit("dup_pk").alias("reason"),
-                    dup_desc.alias("description"),
-                ],
-            ))
-        self.violation_parts += [
-            (e.isNotNull(), [c["source"], c["ord"], sid, F.col(f"_fe{i}.*")])
-            for i, e in enumerate(fe)
-        ]
-
-        # nested violation entries for the wide (single-sink) relation —
-        # same rows the flat `violations` view explodes to, kept on the
-        # document row
+        # each document's violation entries, nested on its row: the kernel's
+        # one output (`verdicts` and `violations` are projections of it)
         empty = F.array().cast(_WIDE_VIOLATION_DDL)
         schema_fail_entries = F.coalesce(
             F.transform(
@@ -988,12 +913,15 @@ class _KernelTemplate:
                 F.lit(uq.check_id).alias("check_id"),
                 c["_key"].alias("key_str"),
                 F.lit("dup_pk").alias("reason"),
-                dup_desc.alias("description"),
+                F.format_string(
+                    "Duplicate PK in %s and %s", c["_first_source"], c["source"]
+                ).alias("description"),
             )))
         fk_arrays = [F.when(e.isNotNull(), F.array(e)).otherwise(empty) for e in fe]
         nested = nested.otherwise(F.concat(*fk_arrays) if fk_arrays else empty)
         self.wide_cols = [
-            c["source"], c["ord"], sid, validated.alias("validated"),
+            c["source"], c["ord"], F.lit(schema_id).alias("schema_id"),
+            validated.alias("validated"),
             status.alias("status"), nested.alias("violations"),
         ]
 
@@ -1032,7 +960,7 @@ class _KernelTemplate:
         Which rows tie or hold a key changes only ``first_source`` and
         ``first_ord``, never the key set, so a probe needs neither the
         identity nor the sort."""
-        keys = df.select(self.key_str).where(self.keyed)
+        keys = df.where(self.keyed).select(self.key_str)
         if prior is None:
             return keys
         return keys.join(prior.select("key_str"), "key_str", "left_anti")
@@ -1047,19 +975,6 @@ class _KernelTemplate:
             dk = keys(rkey)
             stage = stage.join(dk.select(hit), on, "left").crossJoin(dk.agg(has))
         return stage if self.probed is None else stage.select(*self.probed)
-
-    def verdicts(self, probed: DataFrame) -> DataFrame:
-        return probed.select(*self.verdict_cols)
-
-    def violations(self, probed: DataFrame) -> DataFrame:
-        """The flat view: the codegen explode of the check entries, plus one
-        branch per duplicate and per FK entry kind."""
-        parts = [
-            probed.select(*self.explode_cols).where(self.explode_where)
-            .select(*self.fail_cols)
-        ]
-        parts += [probed.where(w).select(*cols) for w, cols in self.violation_parts]
-        return _union_all(parts)
 
     def wide(self, probed: DataFrame) -> DataFrame:
         return probed.select(*self.wide_cols)
@@ -1135,18 +1050,14 @@ def _validate_kernel(
             key_sets[rkey] = _union_all(parts).distinct()
         return key_sets[rkey]
 
-    probed = {sid: templates[sid].probe(stages[sid], key_set) for sid in corpus}
     return ValidationResult(
-        verdicts=lambda: _union_all(
-            [templates[sid].verdicts(p) for sid, p in probed.items()]
-        ),
-        violations=lambda: _union_all(
-            [templates[sid].violations(p) for sid, p in probed.items()]
-        ),
         pk_registries=lambda: {
             rkey: registry(rkey)
             for rkey in [*owner, *(k for k in seed_registries if k not in owner)]
         },
-        wide=_union_all([templates[sid].wide(p) for sid, p in probed.items()]),
+        wide=_union_all([
+            tpl.wide(tpl.probe(stages[sid], key_set))
+            for sid, tpl in templates.items()
+        ]),
     )
 

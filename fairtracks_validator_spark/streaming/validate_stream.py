@@ -90,7 +90,9 @@ def process_batch(
     tests / backfills): a batch run over the micro-batch whose uniqueness
     constraints see every earlier batch's registry as prior holders. FK
     probes stay out of the stream."""
-    from ..runner import _kernel_fits, _template, align_to_plan, validate_corpus
+    from ..runner import (
+        _kernel_fits, _template, align_to_plan, flat_violations, validate_corpus,
+    )
 
     plan = plan.without_fks()
     sid = plan.schema_id
@@ -114,7 +116,7 @@ def process_batch(
         )
         stage = tpl.stage(align_to_plan(batch_df, plan), held)
         stage = stage.localCheckpoint(eager=False)
-        violations = tpl.violations(stage)
+        violations = flat_violations(tpl.wide(stage))
         recorded = [tpl.recorded(stage)] if plan.uniques else []
     else:
         res = validate_corpus(

@@ -3,6 +3,9 @@ on Spark and its oracle_sql() on DuckDB at sf0.01; compare row count, column
 names, and order-insensitive values (columns sorted by name, rows sorted).
 
 Usage: python scripts/check_oracle.py [query ...]
+
+A query name that ``queries()`` does not declare exits with status 2 before
+anything runs.
 """
 
 from __future__ import annotations
@@ -38,6 +41,12 @@ def norm_rows(cols, rows):
 
 
 def main():
+    only = set(sys.argv[1:])
+    unknown = sorted(only - set(entrymod.queries()))
+    if unknown:
+        print("unknown query:", ", ".join(unknown), file=sys.stderr)
+        sys.exit(2)
+
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
@@ -46,7 +55,6 @@ def main():
                       app_name="oracle-check")
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    only = set(sys.argv[1:])
 
     failures = []
     for name, fn in qs.items():

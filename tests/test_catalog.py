@@ -129,9 +129,9 @@ def test_route_corpus_with_orphans(spark):
 
 def test_validate_routed_orphans_in_verdicts(spark):
     """Orphan docs must appear in the verdicts relation with
-    status='ignored' so summary() counts every document
+    status='ignored' so the run counts (sink_observed) count every document
     (FairGTrackValidatorCli.java:227-233; VERDICT r1 missing #4/#5)."""
-    from fairtracks_validator_spark.runner import validate_routed
+    from fairtracks_validator_spark.runner import sink_observed, validate_routed
 
     df = spark.createDataFrame(
         [("s1", 1, "known/1", "x"), ("s2", 2, "unknown/9", "y"),
@@ -148,7 +148,7 @@ def test_validate_routed_orphans_in_verdicts(spark):
         ("s3", False, "ignored"),
         ("s4", False, "failed"),
     }
-    s = res.summary()
+    s = sink_observed(res)
     assert s == {"docs": 4, "failed_docs": 1, "ignored_docs": 2, "violations": 3}
 
 

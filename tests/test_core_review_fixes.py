@@ -397,6 +397,61 @@ def test_checkpoint_self_referential_fk(spark, tmp_path):
     assert not any(s in ("u1", "u2", "u3") for s, _ in rows)
 
 
+def test_checkpoint_matches_seeded_fresh_run(spark, tmp_path):
+    """A checkpointed run, resumed over two calls, writes the verdicts and
+    violations of one fresh ``validate_corpus`` run seeded with the same
+    external registries: a self-referential FK, a dimension FK with
+    misses, and a foreignProperty into a registered dimension that has no
+    such constraint (J3, ``fk_no_docs``, not ``fk_no_schema``)."""
+    from fairtracks_validator_spark.checkpoint import CheckpointedValidation
+    from fairtracks_validator_spark.plans.schema_compile import compile_schema
+    from fairtracks_validator_spark.runner import validate_corpus
+
+    df = spark.createDataFrame(
+        [("u1", 1, "s1", None, "A", "A"),
+         ("u2", 2, "s2", "u1", "B", None),
+         ("u3", 3, "s3", "zzz", "Z", None),   # dangling parent, missing code
+         ("u2", 4, "s4", None, "A", None),    # dup url
+         ("", 5, "s5", "u1", "A", "B"),       # minLength: no probe
+         (None, 6, None, "u2", "A", None),    # no key of its own
+         ("u7", 7, "s7", "u4", None, "B")],   # dangling parent
+        "url string, ord long, source string, parent_url string, "
+        "code string, tag string",
+    )
+    plan = compile_schema({
+        "$id": "pages/cp", "primary_key": ["url"],
+        "properties": {"url": {"minLength": 1},
+                       "tag": {"type": "string", "foreignProperty": "dim/1#code"}},
+        "foreign_keys": [{"schema_id": "pages/cp", "members": ["parent_url"]},
+                         {"schema_id": "dim/1", "members": ["code"]}],
+    })
+    extra = {("dim/1", "pk"): spark.createDataFrame(
+        [("dim/1", "pk", k, "dim", 0) for k in ('["A"]', '["B"]')],
+        "schema_id string, check_id string, key_str string, "
+        "first_source string, first_ord long",
+    )}
+    cp = CheckpointedValidation(out_dir=str(tmp_path / "cp"), n_partitions=4)
+    first = cp.run(df, plan, key_col="url", max_partitions=2, extra_registries=extra)
+    rest = cp.run(df, plan, key_col="url", extra_registries=extra)
+    assert sorted(first["processed"] + rest["processed"]) == [0, 1, 2, 3]
+
+    fresh = validate_corpus({"pages/cp": (plan, df)}, seed_registries=extra)
+
+    def rows_of(d):
+        return sorted(map(tuple, d.collect()), key=repr)
+
+    got = spark.read.parquet(cp.violations_dir).drop("part_id")
+    assert rows_of(got.select(*fresh.violations.columns)) == rows_of(
+        fresh.violations
+    )
+    got = spark.read.parquet(cp.verdicts_dir).drop("part_id")
+    assert rows_of(got.select(*fresh.verdicts.columns)) == rows_of(fresh.verdicts)
+    reasons = {(r["source"], r["reason"]) for r in fresh.violations.collect()}
+    assert {("s3", "fk_missing"), ("s7", "fk_missing"), ("s4", "dup_pk"),
+            ("s1", "fk_no_docs"), ("s5", "schema")} <= reasons
+    assert all(reason != "fk_no_schema" for _, reason in reasons)
+
+
 def test_checkpoint_restores_overwrite_mode(spark, tmp_path):
     """code-review r4: run() must not leave partitionOverwriteMode flipped."""
     from fairtracks_validator_spark.checkpoint import CheckpointedValidation

@@ -246,6 +246,11 @@ def test_routed_wide_plan_ranks_each_schema_once(spark, tmp_path):
         read = scan.split("ReadSchema: ", 1)[1]
         assert "source:" not in read and "ord:" not in read, scan
 
+    # the key set filters on the checks and the members' presence, so each
+    # key is serialized once, in the projection above the scan's filter
+    to_json = [x for x in build if "StructsToJson" in x]
+    assert len(to_json) == 1 and to_json[0].startswith("Project"), build
+
     j3 = _subtree(nodes, next(
         i for i, (_, node) in enumerate(nodes)
         if "keys=[], functions=[count(1)]" in node
